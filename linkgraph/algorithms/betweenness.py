@@ -35,13 +35,13 @@ one count (forward emptiness) and none in the backward unroll.
 
 from __future__ import annotations
 
-import time
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import RunInfo, _metric_barrier
+from linkgraph.pregel import RunInfo, fixpoint, log_append, log_union
 from linkgraph.algorithms.centrality import pick_landmarks
 
 
@@ -55,7 +55,7 @@ def betweenness(
     over the pivot set, no normalization —, RunInfo).
 
     r6 (VERDICT r5 #2): both accumulated relations are APPEND-ONLY
-    with LSM-style compaction (centrality._log_append). The forward
+    with LSM-style compaction (pregel.log_append). The forward
     pass checkpoints each hop's (s, v, d, σ) increment — the frontier,
     already materialized — and merges similar-sized parts, so a row is
     rewritten O(log depth) times (old form: re-checkpointed the whole
@@ -63,59 +63,46 @@ def betweenness(
     anti-joins and level filters scan O(log depth) parts. The backward
     pass checkpoints only each level's δ increment and joins the δ of
     the level below directly (δ rows are keyed by BFS level, so the
-    accumulated union is never needed mid-pass). The loop runs under
-    superstep_conf like the pregel fixpoints."""
-    from functools import reduce
-
-    from linkgraph.algorithms.centrality import _log_append, _log_union
-    from linkgraph.tuning import scale_partitions, superstep_conf
-
-    spark = graph.edges.sparkSession
-    p = scale_partitions(spark, graph.num_edges)
-    info = RunInfo("betweenness")
-    t0 = time.monotonic()
-    with superstep_conf(spark, p):
+    accumulated union is never needed mid-pass). Each forward hop is
+    one `fixpoint` barrier, logged when it reached a new vertex."""
+    with fixpoint(graph, "betweenness") as fx:
         und = symmetrize(graph.edges).persist()
         src = sources if sources is not None else pick_landmarks(graph, num_sources)
         src = src.select(F.col("lm").alias("s")) if "lm" in src.columns else src
 
         # ---- forward: levels + exact path counts ----------------------
-        seed = src.select(
-            "s",
-            F.col("s").alias("v"),
-            F.lit(0).alias("d"),
-            F.lit(1).cast("long").alias("sigma"),
-        ).localCheckpoint(eager=False)
-        parts: list = []
-        _log_append(
-            parts, seed, int(_metric_barrier(seed, {"n": F.count(F.lit(1))})["n"])
+        seed, vals = fx.barrier(
+            src.select(
+                "s",
+                F.col("s").alias("v"),
+                F.lit(0).alias("d"),
+                F.lit(1).cast("long").alias("sigma"),
+            ),
+            {"active": F.count(F.lit(1))},
         )
+        parts: list = []
+        log_append(parts, seed, vals["active"])
         frontier = seed.select("s", "v", "sigma")
-        depth = 0
-        h = 0
-        while h < max_hops:
-            h += 1
-            known_keys = _log_union(parts).select("s", "v")
-            nxt = (
+        for h in range(1, max_hops + 1):
+            known_keys = log_union(parts).select("s", "v")
+            nxt, vals = fx.barrier(
                 frontier.join(und, frontier["v"] == und["src"])
                 .groupBy("s", F.col("dst").alias("w"))
                 .agg(F.sum("sigma").alias("sigma"))
                 .withColumnRenamed("w", "v")
                 .join(known_keys, ["s", "v"], "left_anti")
-                .select("s", "v", F.lit(h).alias("d"), "sigma")
-                .localCheckpoint(eager=False)
+                .select("s", "v", F.lit(h).alias("d"), "sigma"),
+                {"active": F.count(F.lit(1))},
             )
-            # one action per hop (observed-metric count, pregel §2.8)
-            n = int(_metric_barrier(nxt, {"n": F.count(F.lit(1))})["n"])
-            if n == 0:
-                info.converged = True
+            if vals["active"] == 0:
+                fx.info.converged = True
                 break
-            depth = h
-            _log_append(parts, nxt, n)
+            fx.record(vals)
+            log_append(parts, nxt, vals["active"])
             frontier = nxt.select("s", "v", "sigma")
-            info.record(h, t0, active=n)
+        depth = fx.info.supersteps
 
-        known = _log_union(parts)
+        known = log_union(parts)
 
         # ---- backward: dependency accumulation, deepest level first ---
         # δ parts exist only where non-zero; each level joins the δ part
@@ -178,6 +165,4 @@ def betweenness(
     out = graph.vertices.join(bc, "id", "left").select(
         "id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
     )
-    info.supersteps = depth
-    info.wall_s = round(time.monotonic() - t0, 3)
-    return out, info
+    return out, fx.info

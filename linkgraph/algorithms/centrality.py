@@ -34,40 +34,11 @@ drained first — an empty frontier makes further hops no-ops).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import RunInfo, _metric_barrier
-
-
-def _log_append(parts: list, df: DataFrame, n: int) -> None:
-    """Append an eagerly-checkpointed increment to an accumulated
-    relation kept as a list of (part, rows) with LSM-style compaction:
-    whenever the previous part is not at least twice the size of the
-    new one, the two merge into one checkpointed part. A row is
-    therefore rewritten O(log #appends) times (vs every append when
-    the full relation is re-checkpointed per hop — VERDICT r5 #2's
-    quadratic write volume) AND the live union keeps O(log #appends)
-    branches (a plain per-hop parts list makes every later anti-join
-    scan one task-wave per hop — measured 2x slower than even the
-    quadratic form on a 64-hop chain, because task count, not bytes,
-    dominates at small per-hop increments)."""
-    parts.append((df, n))
-    while len(parts) >= 2 and parts[-2][1] <= 2 * parts[-1][1]:
-        a_df, a_n = parts.pop()
-        b_df, b_n = parts.pop()
-        parts.append(
-            (b_df.unionByName(a_df).localCheckpoint(eager=True), a_n + b_n)
-        )
-
-
-def _log_union(parts: list) -> DataFrame:
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), [p for p, _ in parts])
+from linkgraph.pregel import RunInfo, fixpoint, log_append, log_union
 
 
 def pick_landmarks(graph: Graph, num_landmarks: int) -> DataFrame:
@@ -94,60 +65,46 @@ def landmark_distances(
     including d=0 self rows, RunInfo).
 
     r6 (VERDICT r5 #2): the known set is APPEND-ONLY with LSM-style
-    compaction (`_log_append`) — each hop checkpoints its increment
-    (the new (lm, v, d=h) rows, already materialized as the frontier)
-    and similar-sized parts merge, so a row is rewritten O(log depth)
-    times instead of every hop (the old form's O(depth² · L·|V|) total
-    write volume) while the anti-join scans O(log depth) parts instead
-    of one per hop. The loop runs under superstep_conf like every
-    other fixpoint (fixed recurring plan; scale-derived partitions)."""
-    from linkgraph.tuning import scale_partitions, superstep_conf
-
-    spark = graph.edges.sparkSession
-    p = scale_partitions(spark, graph.num_edges)
-    info = RunInfo("landmark_bfs")
-    t0 = time.monotonic()
-    with superstep_conf(spark, p):
+    compaction (`pregel.log_append`) — each hop checkpoints its
+    increment (the new (lm, v, d=h) rows, already materialized as the
+    frontier) and similar-sized parts merge, so a row is rewritten
+    O(log depth) times instead of every hop (the old form's
+    O(depth² · L·|V|) total write volume) while the anti-join scans
+    O(log depth) parts instead of one per hop. Each hop is one
+    `fixpoint` barrier (fixed recurring plan; scale-derived
+    partitions); RunInfo logs every hop that reached a new pair."""
+    with fixpoint(graph, "landmark_bfs") as fx:
         und = symmetrize(graph.edges).persist()
         lms = landmarks if landmarks is not None else pick_landmarks(graph, num_landmarks)
         init_frontier = lms.select("lm", F.col("lm").alias("v")).persist()
         frontier = init_frontier
-        seed = frontier.select("lm", "v", F.lit(0).alias("d")).localCheckpoint(
-            eager=False
+        seed, vals = fx.barrier(
+            frontier.select("lm", "v", F.lit(0).alias("d")),
+            {"active": F.count(F.lit(1))},
         )
         parts: list = []
-        _log_append(
-            parts, seed, int(_metric_barrier(seed, {"n": F.count(F.lit(1))})["n"])
-        )
-        h = 0
-        while h < max_hops:
-            h += 1
-            known_keys = _log_union(parts).select("lm", "v")
-            nxt = (
+        log_append(parts, seed, vals["active"])
+        for h in range(1, max_hops + 1):
+            known_keys = log_union(parts).select("lm", "v")
+            nxt, vals = fx.barrier(
                 frontier.join(und, frontier["v"] == und["src"])
                 .select("lm", F.col("dst").alias("v"))
                 .distinct()
                 .join(known_keys, ["lm", "v"], "left_anti")
-                .withColumn("d", F.lit(h))
-                .localCheckpoint(eager=False)
+                .withColumn("d", F.lit(h)),
+                {"active": F.count(F.lit(1))},
             )
-            # one action per hop: the count rides the checkpoint-
-            # materializing job as an observed metric (pregel §2.8 form)
-            n = int(_metric_barrier(nxt, {"n": F.count(F.lit(1))})["n"])
-            if n == 0:
-                info.converged = True
+            if vals["active"] == 0:
+                fx.info.converged = True
                 break
-            _log_append(parts, nxt, n)
+            fx.record(vals)
+            log_append(parts, nxt, vals["active"])
             frontier = nxt.select("lm", "v")
-            info.record(h, t0, active=n)
         # unpersist unconditionally (ADVICE r5): with max_hops=0 or an
         # immediately drained frontier the old code leaked both blocks
         init_frontier.unpersist()
         und.unpersist()
-    known = _log_union(parts)
-    info.supersteps = info.log[-1].superstep if info.log else 0
-    info.wall_s = round(time.monotonic() - t0, 3)
-    return known, info
+    return log_union(parts), fx.info
 
 
 def double_sweep_diameter(

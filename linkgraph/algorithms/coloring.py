@@ -38,20 +38,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import PregelSpec, RunInfo, pregel_run, truncate_lineage
-from linkgraph.algorithms.mis import _priority
+from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
+from linkgraph.algorithms.mis import luby_priority
 
 
 def coloring_spec() -> PregelSpec:
     def step(links, state, frontier, aggs):
         # SQL-oracle round index is 1-based; superstep is 0-based
         r = int(aggs["_superstep"]) + 1
-        unc = truncate_lineage(
-            state.filter(F.col("color") == -1).select(
-                "id", _priority(F.col("id"), r).alias("p")
-            ),
-            eager=False,
-        )
+        unc = state.filter(F.col("color") == -1).select(
+            "id", luby_priority(F.col("id"), r).alias("p")
+        ).localCheckpoint(eager=False)
         # neighborhood min of (p, id) over UNCOLORED neighbors
         nmin = (
             links.join(
@@ -64,17 +61,17 @@ def coloring_spec() -> PregelSpec:
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("np").alias("m"))
         )
-        winners = truncate_lineage(
+        winners = (
             unc.join(nmin, "id", "left")
             .filter(
                 F.col("m").isNull()
                 | (F.struct(F.col("p"), F.col("id").alias("nid")) < F.col("m"))
             )
-            .select("id"),
-            eager=False,
+            .select("id")
+            .localCheckpoint(eager=False)
         )
         # colors already used in each winner's neighborhood
-        used = truncate_lineage(
+        used = (
             links.join(winners.withColumnRenamed("id", "dst"), "dst")
             .join(
                 state.filter(F.col("color") >= 0).select(
@@ -83,8 +80,8 @@ def coloring_spec() -> PregelSpec:
                 "src",
             )
             .select(F.col("dst").alias("id"), "c")
-            .distinct(),
-            eager=False,
+            .distinct()
+            .localCheckpoint(eager=False)
         )
         # relational mex: candidates = {0} ∪ {c+1}, minus used, min
         cand = winners.select("id", F.lit(0).cast("long").alias("i")).unionByName(

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph
-from linkgraph.pregel import PregelSpec, RunInfo, pregel_run, truncate_lineage
+from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
 
 
 def hits_spec(tol: float) -> PregelSpec:
@@ -62,12 +62,9 @@ def hits_spec(tol: float) -> PregelSpec:
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("h_old").alias("ra"))
         )
-        a_raw = truncate_lineage(
-            old.join(ra, "id", "left").withColumn(
-                "ra", F.coalesce("ra", F.lit(0.0))
-            ),
-            eager=False,
-        )
+        a_raw = old.join(ra, "id", "left").withColumn(
+            "ra", F.coalesce("ra", F.lit(0.0))
+        ).localCheckpoint(eager=False)
         na = a_raw.agg(F.sqrt(F.sum(F.col("ra") * F.col("ra"))).alias("na"))
         an = a_raw.crossJoin(F.broadcast(na)).select(
             "id",
@@ -77,19 +74,16 @@ def hits_spec(tol: float) -> PregelSpec:
             .otherwise(F.lit(0.0))
             .alias("a"),
         )
-        an = truncate_lineage(an, eager=False)
+        an = an.localCheckpoint(eager=False)
         # hub phase: gather the NEW authorities over out-edges, normalize
         rh = (
             links.join(an.select(F.col("id").alias("dst"), "a"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("a").alias("rh"))
         )
-        h_raw = truncate_lineage(
-            an.join(rh, "id", "left").withColumn(
-                "rh", F.coalesce("rh", F.lit(0.0))
-            ),
-            eager=False,
-        )
+        h_raw = an.join(rh, "id", "left").withColumn(
+            "rh", F.coalesce("rh", F.lit(0.0))
+        ).localCheckpoint(eager=False)
         nh = h_raw.agg(F.sqrt(F.sum(F.col("rh") * F.col("rh"))).alias("nh"))
         return h_raw.crossJoin(F.broadcast(nh)).select(
             "id",

@@ -44,10 +44,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import PregelSpec, RunInfo, pregel_run, truncate_lineage
+from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
 
 
-def _priority(id_col, round_i):
+def luby_priority(id_col, round_i):
     s = F.concat(id_col.cast("string"), F.lit(":"), F.lit(round_i).cast("string"))
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
@@ -62,12 +62,9 @@ def mis_spec() -> PregelSpec:
         # duplicates the whole upstream subtree in the superstep plan
         # (~34 scans of the links relation, measured). Cut, every
         # shared frame computes once inside the same barrier job.
-        und = truncate_lineage(
-            state.filter(F.col("st") == 0).select(
-                "id", _priority(F.col("id"), r).alias("p")
-            ),
-            eager=False,
-        )
+        und = state.filter(F.col("st") == 0).select(
+            "id", luby_priority(F.col("id"), r).alias("p")
+        ).localCheckpoint(eager=False)
         # neighborhood min over undecided neighbors' (p, id)
         nmin = (
             links.join(
@@ -82,7 +79,7 @@ def mis_spec() -> PregelSpec:
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("np").alias("m"))
         )
-        winners = truncate_lineage(
+        winners = (
             und.join(nmin, "id", "left")
             .filter(
                 F.col("m").isNull()
@@ -91,8 +88,8 @@ def mis_spec() -> PregelSpec:
                     < F.col("m")
                 )
             )
-            .select("id"),
-            eager=False,
+            .select("id")
+            .localCheckpoint(eager=False)
         )
         excluded = (
             links.join(winners.withColumnRenamed("id", "src"), "src")

@@ -17,7 +17,8 @@ Spark shape: per round ONE scatter join keyed on the vertex id
 aggregate + a |V| state join — the exact gather/combine shape of a
 PageRank superstep, so everything SURVEY §4 pins about that plan
 (one exchange per round, partial aggregation before it) holds here.
-State is localCheckpointed per round to keep plan depth constant.
+Each round ends in one metric-less `pregel.fixpoint` barrier, whose
+localCheckpoint keeps plan depth constant.
 Vector features: call once per dimension or pre-project the needed
 dimension — each round is linear, so per-dimension runs compose
 exactly.
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
+from linkgraph.pregel import fixpoint
 
 
 def propagate_features(
@@ -47,43 +49,33 @@ def propagate_features(
         raise ValueError("hops must be >= 0")
     if not 0.0 <= alpha <= 1.0:
         raise ValueError("alpha must be in [0, 1]")
-    from linkgraph.tuning import scale_partitions, superstep_conf
-
-    spark = graph.edges.sparkSession
-    with superstep_conf(spark, scale_partitions(spark, graph.num_edges)):
-        return _propagate_inner(graph, features, feature_col, hops, alpha)
-
-
-def _propagate_inner(graph, features, feature_col, hops, alpha):
-    und = symmetrize(graph.edges).persist()
-    state = (
-        graph.vertices.join(features.select("id", feature_col), "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col(feature_col), F.lit(0.0))
-            .cast("double")
-            .alias("x"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(hops):
-        nbr = (
-            und.join(state.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.avg("x").alias("nbr_mean"))
-        )
-        state = (
-            state.join(nbr, "id", "left")
+    with fixpoint(graph, "propagate_features") as fx:
+        und = symmetrize(graph.edges).persist()
+        state, _ = fx.barrier(
+            graph.vertices.join(features.select("id", feature_col), "id", "left")
             .select(
                 "id",
-                F.when(
-                    F.col("nbr_mean").isNotNull(),
-                    (1.0 - alpha) * F.col("x") + alpha * F.col("nbr_mean"),
-                )
-                .otherwise(F.col("x"))
+                F.coalesce(F.col(feature_col), F.lit(0.0))
+                .cast("double")
                 .alias("x"),
             )
-            .localCheckpoint(eager=True)
         )
-    und.unpersist()
+        for _ in range(hops):
+            nbr = (
+                und.join(state.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.avg("x").alias("nbr_mean"))
+            )
+            state, _ = fx.barrier(
+                state.join(nbr, "id", "left").select(
+                    "id",
+                    F.when(
+                        F.col("nbr_mean").isNotNull(),
+                        (1.0 - alpha) * F.col("x") + alpha * F.col("nbr_mean"),
+                    )
+                    .otherwise(F.col("x"))
+                    .alias("x"),
+                )
+            )
+        und.unpersist()
     return state.withColumnRenamed("x", feature_col)

@@ -24,13 +24,11 @@ plans agree.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import RunInfo
+from linkgraph.pregel import RunInfo, fixpoint
 
 
 def _oriented_wedges(graph: Graph) -> tuple[DataFrame, DataFrame]:
@@ -100,47 +98,30 @@ def triangle_counts(
     graphs the credits stream is 3× the triangle count, which can dwarf
     the counting itself; the global total never materializes it.
 
-    r6: executes under superstep_conf (AQE off, scale-derived
+    r6: executes as one `fixpoint` step (AQE off, scale-derived
     partitions) — the wedge DAG is a fixed-shape plan like a superstep,
     and AQE's per-stage re-planning measured 2.2x slower on the bench
     graph (9-12 s vs 4.6-5.5 s cold) with identical results."""
-    from linkgraph.tuning import scale_partitions, superstep_conf
-
-    spark = graph.edges.sparkSession
-    with superstep_conf(spark, scale_partitions(spark, graph.num_edges)):
-        return _triangle_counts_inner(graph, per_vertex)
-
-
-def _triangle_counts_inner(graph: Graph, per_vertex: bool):
-    t0 = time.monotonic()
-    _, wedges = _oriented_wedges(graph)
-    wedges = wedges.persist()
-
-    total_row = wedges.agg(F.sum("c").alias("s")).first()
-    total = int(total_row["s"] or 0)
-
-    if not per_vertex:
-        info = RunInfo("triangles", supersteps=1, converged=True)
-        info.wall_s = time.monotonic() - t0
-        wedges.unpersist()
-        return None, total, info
-
-    per_vertex = (
-        graph.vertices.join(_credit_sums(wedges), "id", "left_outer")
-        .select(
-            "id",
-            F.coalesce(F.col("triangles"), F.lit(0)).cast("long").alias("triangles"),
+    with fixpoint(graph, "triangles") as fx:
+        fx.info.converged = True
+        # the wedges are checkpointed by the barrier that sums the total
+        wedges, vals = fx.barrier(
+            _oriented_wedges(graph)[1], {"total": F.sum("c")}
         )
-        # materialize from the cached wedges NOW — the caller consumes
-        # per_vertex after wedges.unpersist(), which would otherwise
-        # recompute the whole wedge join from scratch
-        .localCheckpoint()
-    )
-
-    info = RunInfo("triangles", supersteps=1, converged=True)
-    info.wall_s = time.monotonic() - t0
-    wedges.unpersist()
-    return per_vertex, total, info
+        total = int(vals["total"] or 0)
+        counts = None
+        if per_vertex:
+            counts, _ = fx.barrier(
+                graph.vertices.join(_credit_sums(wedges), "id", "left_outer")
+                .select(
+                    "id",
+                    F.coalesce(F.col("triangles"), F.lit(0))
+                    .cast("long")
+                    .alias("triangles"),
+                )
+            )
+        fx.record(vals)
+    return counts, total, fx.info
 
 
 def clustering_coefficient(graph: Graph) -> DataFrame:

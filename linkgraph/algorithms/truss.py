@@ -19,9 +19,10 @@ triangle credits its three canonical edges (the (u,v) wedge row
 carries the apex count; the two apex-side edges come from ONE explode
 whose row volume is the triangle count, not the wedge volume). One
 map-side-combined groupBy sums support; an edges⋈support left join +
-filter peels. The new edge set is persisted and the old unpersisted;
-the only per-round action is the surviving-edge count that decides
-convergence.
+filter peels. Each round is one `pregel.fixpoint` barrier: it
+checkpoints the surviving edge set and counts it (the count decides
+convergence) in a single action, under the fixed-plan settings
+triangle counting also runs with.
 
 Scale shape: per round cost == one C4 triangle pass over the current
 subgraph (shrinking every round). Rounds are bounded by the peeling
@@ -33,13 +34,11 @@ reached).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, canonical_undirected
-from linkgraph.pregel import RunInfo, _metric_barrier
+from linkgraph.pregel import RunInfo, fixpoint
 
 
 def _edge_support(edges: DataFrame) -> DataFrame:
@@ -103,32 +102,29 @@ def ktruss(
     2-truss is the whole simple graph (support >= 0 is vacuous)."""
     if k < 2:
         raise ValueError("ktruss: k must be >= 2")
-    edges = canonical_undirected(graph.edges).persist()
-    n = edges.count()
-    t0 = time.monotonic()
-    info = RunInfo("ktruss")
-    rounds = 0
-    converged = k == 2
-    while not converged and (max_rounds is None or rounds < max_rounds):
-        rounds += 1
-        supp = _edge_support(edges)
-        # localCheckpoint (not persist): truncates the logical plan so
-        # round r's analysis cost stays constant instead of nesting r
-        # copies of the orientation/support subtree (quadratic plan
-        # blowup by round ~10 otherwise)
-        kept = (
-            edges.join(supp, ["u", "v"], "left")
-            .filter(F.coalesce(F.col("supp"), F.lit(0)) >= k - 2)
-            .select("u", "v")
-            .localCheckpoint(eager=False)
+    with fixpoint(graph, "ktruss") as fx:
+        info = fx.info
+        edges, vals = fx.barrier(
+            canonical_undirected(graph.edges), {"active": F.count(F.lit(1))}
         )
-        # one action per round (observed-metric count, pregel §2.8)
-        m = int(_metric_barrier(kept, {"n": F.count(F.lit(1))})["n"])
-        edges.unpersist()
-        edges, removed, n = kept, n - m, m
-        info.record(rounds, t0, delta=float(removed), active=n)
-        converged = removed == 0 or n == 0
-    info.supersteps = rounds
-    info.converged = converged
-    info.wall_s = round(time.monotonic() - t0, 3)
+        n = vals["active"]
+        fx.start_step()  # the input edge set is not part of round 1
+        info.converged = k == 2
+        while not info.converged and (
+            max_rounds is None or info.supersteps < max_rounds
+        ):
+            # localCheckpoint (not persist): truncates the logical plan so
+            # round r's analysis cost stays constant instead of nesting r
+            # copies of the orientation/support subtree (quadratic plan
+            # blowup by round ~10 otherwise)
+            kept, vals = fx.barrier(
+                edges.join(_edge_support(edges), ["u", "v"], "left")
+                .filter(F.coalesce(F.col("supp"), F.lit(0)) >= k - 2)
+                .select("u", "v"),
+                {"active": F.count(F.lit(1))},
+            )
+            removed, n = n - vals["active"], vals["active"]
+            edges = kept
+            fx.record({"delta": float(removed), "active": n})
+            info.converged = removed == 0 or n == 0
     return edges, info

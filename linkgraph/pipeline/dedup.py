@@ -401,12 +401,9 @@ def dedup_assignments(
     run on the pair graph / rep table, both bounded by the capped
     candidate set.
     """
-    from linkgraph.pregel import truncate_lineage
-
-    hashed = truncate_lineage(
-        df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("h")),
-        eager=False,
-    )
+    hashed = df.select(
+        F.col(id_col), F.sha2(F.col(text_col), 256).alias("h")
+    ).localCheckpoint(eager=False)
     groups = hashed.groupBy("h").agg(F.min(F.col(id_col)).alias("rep"))
     doc_rep = hashed.join(groups, "h").select(id_col, "rep")
     kept = df.join(

@@ -105,9 +105,6 @@ def ensure_min_partitions(df):
     return df
 
 
-_UNSET = object()
-
-
 @contextmanager
 def superstep_conf(spark, partitions: int | None = None):
     """Run a superstep loop under fixed-plan execution settings.
@@ -130,21 +127,15 @@ def superstep_conf(spark, partitions: int | None = None):
     (they would also race the same persisted-links namespace).
     """
     conf = spark.conf
-    saved: dict[str, object] = {}
     changes = {"spark.sql.adaptive.enabled": "false"}
     if partitions is not None:
         changes["spark.sql.shuffle.partitions"] = str(int(partitions))
+    # both keys have defaults, so get() always resolves (even after unset)
+    saved = {k: conf.get(k) for k in changes}
     for k, v in changes.items():
-        try:
-            saved[k] = conf.get(k)
-        except Exception:
-            saved[k] = _UNSET
         conf.set(k, v)
     try:
         yield
     finally:
         for k, old in saved.items():
-            if old is _UNSET:
-                conf.unset(k)
-            else:
-                conf.set(k, old)
+            conf.set(k, old)

@@ -13,9 +13,17 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from linkgraph.algorithms import connected_components, sssp
+from linkgraph.algorithms import (
+    betweenness,
+    connected_components,
+    ktruss,
+    landmark_distances,
+    scc,
+    sssp,
+)
 from linkgraph.graph import symmetrize
 from linkgraph.pregel import PregelSpec, pregel_run
 
@@ -451,7 +459,7 @@ def test_scc_trim_rounds_cost_one_action_each(spark, graph_builder, monkeypatch)
     real_first, real_count, real_empty = (
         DataFrame.first, DataFrame.count, DataFrame.isEmpty,
     )
-    real_barrier = pregel._metric_barrier
+    real_barrier = pregel.Fixpoint.barrier
     monkeypatch.setattr(
         DataFrame, "first",
         lambda self: (calls.__setitem__("first", calls["first"] + 1), real_first(self))[1],
@@ -465,18 +473,54 @@ def test_scc_trim_rounds_cost_one_action_each(spark, graph_builder, monkeypatch)
         lambda self: (calls.__setitem__("isEmpty", calls["isEmpty"] + 1), real_empty(self))[1],
     )
     monkeypatch.setattr(
-        pregel, "_metric_barrier",
-        lambda st, m: (calls.__setitem__("barrier", calls["barrier"] + 1), real_barrier(st, m))[1],
+        pregel.Fixpoint, "barrier",
+        lambda fx, st, m=None: (calls.__setitem__("barrier", calls["barrier"] + 1), real_barrier(fx, st, m))[1],
     )
-    # the algorithm module binds the name at import time — patch there too
-    import importlib
-
-    scc_mod = importlib.import_module("linkgraph.algorithms.scc")
-    monkeypatch.setattr(scc_mod, "_metric_barrier", pregel._metric_barrier)
     g = graph_builder([(i, i + 1) for i in range(7)])  # chain of 8
     calls.update(first=0, count=0, isEmpty=0, barrier=0)
     scc(g)
     assert calls == {"first": 0, "count": 0, "isEmpty": 0, "barrier": 4}
+
+
+def _lm(g, col):
+    return g.edges.sparkSession.createDataFrame([(0,)], f"{col} long")
+
+
+def _truss_fixture():
+    import random
+
+    rng = random.Random(1)
+    return sorted({tuple(sorted(rng.sample(range(30), 2))) for _ in range(110)})
+
+
+_CHAIN8 = [(i, i + 1) for i in range(7)]
+# (edges, call) per loop, each recording >= 4 steps: 5 k-truss peeling
+# rounds; 7 BFS levels from an end of the path; 4 scc trim rounds
+_STEP_LOOPS = {
+    "ktruss": (_truss_fixture(), lambda g: ktruss(g, 4)),
+    "landmark_distances": (
+        _CHAIN8, lambda g: landmark_distances(g, landmarks=_lm(g, "lm"))
+    ),
+    "betweenness": (_CHAIN8, lambda g: betweenness(g, sources=_lm(g, "s"))),
+    "scc": (_CHAIN8, scc),
+}
+
+
+@pytest.mark.parametrize("algo", sorted(_STEP_LOOPS))
+def test_step_walls_are_per_step(spark, graph_builder, algo):
+    """SuperstepLog.wall_s is the time of that ONE step (plan build to
+    barrier return), never a running total: the recorded step walls of
+    a call cannot add up to more than the call's own wall time."""
+    import time
+
+    edges, call = _STEP_LOOPS[algo]
+    g = graph_builder(edges)
+    t0 = time.monotonic()
+    _, info = call(g)
+    wall = time.monotonic() - t0
+    assert len(info.log) >= 4
+    assert sum(s.wall_s for s in info.log) <= wall
+    assert info.wall_s == pytest.approx(sum(s.wall_s for s in info.log))
 
 
 def test_components_estimate_aggregator(spark, graph_builder):

@@ -6,6 +6,7 @@ MECHANISMS so a regression is visible in CI, not just in bench noise."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from linkgraph import fixtures as FX
@@ -120,14 +121,23 @@ class TestOneExchangeShapes:
         # the whole window projection on a single core)
         from linkgraph.pipeline.dedup import shingles
 
+        cores = spark.sparkContext.defaultParallelism
+        if cores < 2:
+            pytest.skip("one core: no input can be under-split")
         docs = spark.createDataFrame(
             [(1, "abcabcabc"), (2, "xyzxyz")], "doc_id long, text string"
         )
-        cores = spark.sparkContext.defaultParallelism
-        wide = docs.repartition(cores)
-        assert n_exchanges(shingles(wide, k=3)) == n_exchanges(wide)
-        sh = shingles(docs, k=3)
-        assert n_exchanges(sh) <= 1
+        # AQE off so the walkable plan is final: under AQE the executed
+        # plan is one opaque adaptive node and every count reads 0
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            wide = docs.repartition(cores)
+            assert n_exchanges(shingles(wide, k=3)) == n_exchanges(wide)
+            narrow = docs.coalesce(1)
+            sh = shingles(narrow, k=3)
+            assert n_exchanges(sh) == n_exchanges(narrow) + 1
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
         # per-doc dedup still holds: 'abc...' has exactly 3 distinct 3-grams
         rows = {(r["id"], r["shingle"]) for r in sh.collect()}
         assert {(1, "abc"), (1, "bca"), (1, "cab")} <= rows
@@ -151,13 +161,14 @@ class TestOneExchangeShapes:
 
 
 class TestMetricBarrier:
-    """r6: the superstep barrier evaluates spec.metrics as observed
-    metrics during the state-materializing noop write (2 stages) instead
-    of a separate agg().first() subtree (3 stages). Values must be
-    identical either way; the fallback path must stay correct."""
+    """r6: the superstep barrier (`pregel.Fixpoint.barrier`) evaluates
+    the metrics as observed metrics during the state-materializing noop
+    write (2 stages) instead of a separate agg().first() subtree (3
+    stages). Values must equal the agg() form; only the analysis-time
+    rejection of an observed metric may take the fallback."""
 
     def test_observe_and_agg_paths_agree(self, spark):
-        from linkgraph import pregel
+        from linkgraph.pregel import Fixpoint
 
         df = spark.range(0, 10_000).select(
             F.col("id"),
@@ -169,54 +180,100 @@ class TestMetricBarrier:
             "max_rank": F.max("rank"),
             "n_est": F.approx_count_distinct("rank", rsd=0.02),
         }
-        ck = pregel.truncate_lineage(df, eager=False)
-        saved = pregel._METRIC_VIA_OBSERVE
-        try:
-            pregel._METRIC_VIA_OBSERVE = True
-            via_obs = pregel._metric_barrier(ck, metrics)
-            pregel._METRIC_VIA_OBSERVE = False
-            via_agg = pregel._metric_barrier(ck, metrics)
-        finally:
-            pregel._METRIC_VIA_OBSERVE = saved
+        ck, via_obs = Fixpoint("t", 2).barrier(df, metrics)
+        via_agg = df.agg(*[c.alias(k) for k, c in metrics.items()]).first()
         # integer/max/HLL aggregates are order-insensitive: bit-equal
-        assert via_obs == via_agg
+        assert via_obs == via_agg.asDict()
         assert via_obs["active"] == 10_000 // 7 + 1
         assert via_obs["max_rank"] == 999.0
+        assert ck.count() == 10_000
 
-    def test_unsupported_metric_falls_back(self, spark):
+    def test_unsupported_metric_falls_back(self, spark, monkeypatch):
         from linkgraph import pregel
 
+        monkeypatch.setattr(pregel, "_observe_fallback_warned", False)
         df = spark.range(0, 100).select(
             F.col("id"), (F.col("id") % 5).alias("k")
         )
         # DISTINCT aggregates are rejected by CollectMetrics at analysis
-        # time — the barrier must fall back to agg().first() and still
-        # return the right value
-        metrics = {"nk": F.countDistinct("k")}
-        out = pregel._metric_barrier(
-            pregel.truncate_lineage(df, eager=False), metrics
-        )
+        # time — the barrier must fall back to agg().first(), say so,
+        # and still return the right value
+        with pytest.warns(UserWarning, match="DISTINCT"):
+            _, out = pregel.Fixpoint("t", 2).barrier(
+                df, {"nk": F.countDistinct("k")}
+            )
         assert out["nk"] == 5
 
-    def test_pregel_run_loop_uses_single_action_values(self, spark, graph_builder):
-        # end-to-end: components over G2 under both barrier modes gives
-        # identical labels AND identical per-superstep aggregates
+    def test_pregel_run_distinct_metric_falls_back(
+        self, spark, graph_builder, monkeypatch
+    ):
+        # end-to-end: components over G2 with an extra DISTINCT metric
+        # (fallback barrier) gives the same labels, superstep count and
+        # active series as the observed-metric barrier, and warns once
+        import dataclasses
+        import warnings
+
         from linkgraph import pregel
-        from linkgraph.algorithms import connected_components
+        from linkgraph.algorithms.components import components_spec
 
         g = graph_builder(FX.G2_EDGES)
-        saved = pregel._METRIC_VIA_OBSERVE
-        try:
-            pregel._METRIC_VIA_OBSERVE = True
-            s1, i1 = connected_components(g)
-            r1 = {tuple(r) for r in s1.collect()}
-            a1 = [s.aggregates for s in i1.log]
-            pregel._METRIC_VIA_OBSERVE = False
-            s2, i2 = connected_components(g)
-            r2 = {tuple(r) for r in s2.collect()}
-            a2 = [s.aggregates for s in i2.log]
-        finally:
-            pregel._METRIC_VIA_OBSERVE = saved
-        assert r1 == r2
+        spec = components_spec()
+        s1, i1 = pregel.pregel_run(g, spec, max_supersteps=50)
+        with_distinct = dataclasses.replace(
+            spec, metrics={**spec.metrics, "n_comp": F.countDistinct("comp")}
+        )
+        monkeypatch.setattr(pregel, "_observe_fallback_warned", False)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            s2, i2 = pregel.pregel_run(g, with_distinct, max_supersteps=50)
+        assert i2.supersteps >= 2  # the fallback ran on several barriers
+        assert len([w for w in caught if "observed metrics" in str(w.message)]) == 1
+        assert {tuple(r) for r in s1.collect()} == {tuple(r) for r in s2.collect()}
         assert i1.supersteps == i2.supersteps
-        assert a1 == a2
+        assert [s.active for s in i1.log] == [s.active for s in i2.log]
+        assert i2.log[-1].aggregates["n_comp"] == len(
+            {r["comp"] for r in s2.collect()}
+        )
+
+    def test_job_failure_propagates_without_rerun(self, spark, monkeypatch):
+        # a real job failure is not an observed-metric rejection: the
+        # barrier raises after ONE failed job instead of re-running the
+        # plan through the agg() fallback
+        from linkgraph import pregel
+
+        monkeypatch.setattr(pregel, "_observe_fallback_warned", False)
+        df = spark.range(0, 100).select(
+            F.col("id"),
+            F.when(F.col("id") == 42, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("id"))
+            .alias("x"),
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("barrier_fail", "barrier_fail")
+        try:
+            with pytest.raises(SparkRuntimeException, match="boom"):
+                pregel.Fixpoint("t", 2).barrier(df, {"n": F.count(F.lit(1))})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("barrier_fail")
+        assert len(jobs) == 1
+        assert not pregel._observe_fallback_warned
+
+    def test_empty_metrics_runs_to_max_supersteps(self, spark, graph_builder):
+        # no metrics: the barrier is a bare noop write returning {}
+        import dataclasses
+
+        from linkgraph.algorithms.components import components_spec
+        from linkgraph.pregel import pregel_run
+
+        g = graph_builder(FX.G2_EDGES)
+        spec = dataclasses.replace(
+            components_spec(), metrics={}, halt=lambda aggs: False
+        )
+        state, info = pregel_run(g, spec, max_supersteps=3)
+        assert info.supersteps == 3 and not info.converged
+        assert [s.aggregates for s in info.log] == [{}, {}, {}]
+        ref, _ = pregel_run(g, components_spec(), max_supersteps=3)
+        assert {tuple(r) for r in state.collect()} == {
+            tuple(r) for r in ref.collect()
+        }
