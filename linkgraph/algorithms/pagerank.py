@@ -196,7 +196,6 @@ def pagerank(
     (1-d)/N are frozen at start, so a changed vertex set would silently
     redistribute mass. Rebuild the Graph between runs instead.
     """
-    assert dangling in ("drop", "redistribute")
     n = graph.num_vertices
     if n == 0:
         raise ValueError("pagerank on an empty graph (num_vertices == 0)")

@@ -101,7 +101,8 @@ def pagerank_csr(
     from linkgraph.pregel import PregelSpec, pregel_run
     from linkgraph.tuning import scale_partitions
 
-    assert dangling in ("drop", "redistribute")
+    if dangling not in ("drop", "redistribute"):
+        raise ValueError(f"dangling must be drop|redistribute, got {dangling!r}")
     spark = graph.edges.sparkSession
     # r6: the CSR partition count scales with the graph (one CSR row =
     # one partition's adjacency, so p bounds kernel memory) and matches

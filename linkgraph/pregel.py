@@ -19,11 +19,38 @@ landmark BFS (centrality, diameter), Brandes betweenness, k-truss
 peeling, feature propagation and triangle counting.
 
 `pregel_run` is the generic vertex-program driver (paper §2/§3.1): one
-implementation of the fused-superstep loop — scatter → unioned
-carried-state markers → one combine+apply shuffle → metric barrier →
-frontier update → checkpoint — parameterized by a `PregelSpec`.
-Algorithm modules (pagerank/components/sssp/lpa) are thin specs over
-it; a new algorithm is ~20 lines, not a copy of the loop.
+implementation of the fused-superstep loop, parameterized by a
+`PregelSpec`. Algorithm modules (pagerank/components/sssp/lpa) are thin
+specs over it; a new algorithm is ~20 lines, not a copy of the loop.
+The loop carries ONE frame — the state plus, when the spec has a
+frontier filter, a boolean frontier marker column — through these
+parts:
+
+- **resume (B10)**: the latest snapshot of an injected
+  CheckpointManager replaces the frame, the aggregates and, for a
+  mutated run, the edge table; a run recorded converged returns
+  before any Spark job.
+- **frame helpers**: `_make_frame` builds the frame (after a barrier,
+  a mutation, or at superstep 0 with every vertex in the frontier);
+  `_split_frame` gives the (state, frontier) pair `spec.step` reads.
+- **`build_links`**: the persisted, pre-partitioned, pre-sorted
+  scatter relation, rebuilt after a mutation.
+- **step**: `spec.step(links, state, frontier, aggs)` under
+  `fx.barrier` — scatter → unioned carried-state markers → one
+  combine+apply shuffle → lazy checkpoint + global aggregators, one
+  action.
+- **`resolve_mutations` / `apply_mutations`**: the barrier's (add,
+  remove) edge sets, and the edge table after them (see below).
+- **checkpoint (B9)**: every k supersteps and at finish the frame is
+  written, so resume restores the EXACT frontier — required for
+  non-idempotent programs (k-core's decrement counting), where
+  re-scattering already-delivered messages would corrupt state. A
+  mutated run also writes its changed edge table (paper §4.2: the
+  checkpoint must capture the graph once it diverged from the
+  input); resume re-fires mutation callbacks only for supersteps
+  after the snapshot (callbacks must be deterministic in the
+  superstep index — the paper's requirement on compute()). The
+  durable read-back replaces the frame.
 
 Built-in machinery the spec gets for free:
 
@@ -35,18 +62,6 @@ Built-in machinery the spec gets for free:
   vertices in superstep S+1".
 - **Vote-to-halt / frontier (B6)**: `spec.frontier_filter` names the
   changed column; only changed vertices scatter next superstep.
-- **Checkpoint/resume (B9/B10)**: durable snapshots every k supersteps
-  via an injected CheckpointManager; resume short-circuits if the run
-  already converged (meta carries the flag). Snapshots carry a
-  `_frontier` marker column so resume restores the EXACT frontier —
-  required for non-idempotent programs (k-core's decrement counting),
-  where re-scattering already-delivered messages would corrupt state.
-  A topology-mutating run additionally snapshots its current edge
-  table (paper §4.2: the checkpoint must capture the graph once it
-  diverged from the input); resume restores the mutated graph and
-  re-fires mutation callbacks only for supersteps after the snapshot
-  (callbacks must be deterministic in the superstep index — the same
-  requirement the paper places on compute()).
 - **Topology mutation (B14, paper §3.4)**: two request sources, both
   resolved at the superstep BARRIER (BSP requires every superstep to
   see a consistent graph) under the paper's pinned partial ordering —
@@ -292,13 +307,9 @@ class PregelSpec:
     #   request_mutations(new_state, aggs, superstep)
     #     -> DataFrame(op string in ('add','remove'), src long, dst long,
     #                  *extra edge columns for adds) | None
-    # Requests stay distributed end-to-end (a DataFrame transformation
-    # of the state — never collected) and are resolved at the SAME
-    # barrier under the paper's pinned partial ordering: removals
-    # apply FIRST, then additions (an edge both removed and added in
-    # one barrier ends up PRESENT); conflicting adds of the same
-    # (src,dst) resolve to the lexicographic-min extra columns — the
-    # same deterministic conflict handler as driver-callback adds.
+    # Requests stay distributed end-to-end (never collected) and are
+    # applied together with the driver callback's at the same barrier
+    # (resolve_mutations / apply_mutations).
     # Cost note: deciding "any requests this barrier?" needs one extra
     # bounded action (a 2-row groupBy(op) count). A spec can eliminate
     # it on quiet barriers by exposing a `mutation_requests` metric
@@ -307,6 +318,133 @@ class PregelSpec:
     request_mutations: (
         Callable[[DataFrame, dict, int], DataFrame | None] | None
     ) = None
+
+
+def build_links(spec: PregelSpec, edges: DataFrame, p: int) -> DataFrame:
+    """The scatter relation of `spec` over `edges`: hash-partitioned on
+    `spec.links_key` into `p` partitions (unless prepare_links already
+    emits that layout), sorted within partitions, persisted and
+    materialized — the per-superstep sort-merge join then never
+    re-sorts the |E| side, only the |V| state side."""
+    links = spec.prepare_links(edges)
+    if not spec.links_prepartitioned:
+        links = links.repartition(p, spec.links_key)
+    links = links.sortWithinPartitions(spec.links_key).persist()
+    links.count()
+    return links
+
+
+def _make_frame(
+    spec: PregelSpec, state: DataFrame, in_frontier: str | None
+) -> DataFrame:
+    """The carried frame (id, *state_cols[, _frontier]): the state, plus
+    the frontier as a boolean marker column when the spec has a
+    frontier filter. `in_frontier` is a SQL expression over `state`
+    (the spec's frontier filter after a barrier; "true" when every
+    vertex must scatter). The frame is also the checkpoint snapshot,
+    so a resumed run restores the EXACT frontier — required for
+    non-idempotent programs (k-core's decrement counting), where
+    re-scattering already-delivered messages would corrupt state."""
+    cols = ["id", *spec.state_cols]
+    if spec.frontier_filter is None:
+        return state.select(*cols)
+    return state.select(*cols, F.expr(in_frontier).cast("boolean").alias("_frontier"))
+
+
+def _split_frame(spec: PregelSpec, frame: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(state, frontier) of a frame. A frame without the marker (a
+    spec with no frontier filter) scatters every vertex."""
+    if "_frontier" not in frame.columns:
+        return frame, frame
+    return (
+        frame.select("id", *spec.state_cols),
+        frame.filter("_frontier").select("id", *spec.state_cols),
+    )
+
+
+def resolve_mutations(
+    spec: PregelSpec,
+    mutations: Callable | None,
+    state: DataFrame,
+    aggs: dict,
+    superstep: int,
+    edge_cols: list[str],
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """The barrier's (add, remove) edge sets from both request sources:
+    the driver callback `mutations(superstep)` and the spec's
+    vertex-initiated `request_mutations(state, aggs, superstep)`. Adds
+    are projected to `edge_cols`, removes to (src, dst); a side nobody
+    asked for is None."""
+    adds: list = []
+    removes: list = []
+    if mutations is not None:
+        add, remove = mutations(superstep) or (None, None)
+        adds.append(add)
+        removes.append(remove)
+    # gate: when the spec exposes a `mutation_requests` metric, a zero
+    # value means no vertex asked — skip the request evaluation (and its
+    # action) entirely on quiet barriers
+    gated_off = "mutation_requests" in spec.metrics and not (
+        aggs.get("mutation_requests") or 0
+    )
+    if spec.request_mutations is not None and not gated_off:
+        req = spec.request_mutations(state, aggs, superstep)
+        if req is not None:
+            op_counts = {
+                r["op"]: r["n"]
+                for r in req.groupBy("op").agg(F.count(F.lit(1)).alias("n")).collect()
+            }
+            unknown = set(op_counts) - {"add", "remove"}
+            if unknown:
+                raise ValueError(
+                    f"pregel_run({spec.algo}): request_mutations "
+                    f"emitted unknown op(s) {sorted(unknown)} — "
+                    "only 'add'/'remove' are defined (§3.4)"
+                )
+            if op_counts.get("add"):
+                adds.append(req.filter(F.col("op") == "add"))
+            if op_counts.get("remove"):
+                removes.append(req.filter(F.col("op") == "remove"))
+
+    def union(parts: list, cols: list[str]) -> DataFrame | None:
+        parts = [df.select(*cols) for df in parts if df is not None]
+        return reduce(DataFrame.unionByName, parts) if parts else None
+
+    return union(adds, edge_cols), union(removes, ["src", "dst"])
+
+
+def apply_mutations(
+    edges: DataFrame, add: DataFrame | None, remove: DataFrame | None, p: int
+) -> DataFrame:
+    """`edges` after one barrier's mutations, under the paper's §3.4
+    partial ordering: removals FIRST, then additions (an edge both
+    removed and added ends up present). Every edge column (weights
+    etc.) is kept: re-adding an existing (src,dst) replaces its row,
+    and duplicates within `add` resolve to the lexicographic-min extra
+    columns — deterministic, unlike dropDuplicates' arbitrary survivor.
+    Self-loops are dropped; the result is hash-partitioned on src into
+    `p` partitions and checkpointed."""
+    if remove is not None:
+        edges = edges.join(remove, ["src", "dst"], "left_anti")
+    if add is not None:
+        extras = [c for c in edges.columns if c not in ("src", "dst")]
+        if extras:
+            add = (
+                add.groupBy("src", "dst")
+                .agg(F.min(F.struct(*extras)).alias("_e"))
+                .select("src", "dst", "_e.*")
+            )
+        else:
+            add = add.distinct()
+        edges = edges.join(
+            add.select("src", "dst"), ["src", "dst"], "left_anti"
+        ).unionByName(add)
+    # (src,dst) is already unique — conflicts were resolved above
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .repartition(p, "src")
+        .localCheckpoint()
+    )
 
 
 def pregel_run(
@@ -334,302 +472,140 @@ def pregel_run(
     """
     from linkgraph.graph import vertices_of
 
-    if mutations is not None and not spec.mutation_safe:
+    if not spec.mutation_safe and (
+        mutations is not None or spec.request_mutations is not None
+    ):
         raise ValueError(
             f"pregel_run({spec.algo}): this spec is marked "
-            "mutation_safe=False — barrier-time topology mutation would "
-            "re-deliver non-idempotent messages or re-base non-confluent "
-            "state; run it without mutations="
-        )
-    if spec.request_mutations is not None and not spec.mutation_safe:
-        raise ValueError(
-            f"pregel_run({spec.algo}): the spec declares "
-            "request_mutations but is marked mutation_safe=False — a "
-            "barrier-time mutation resets the frontier to the full "
-            "state, which this program cannot tolerate"
+            "mutation_safe=False — a barrier-time topology mutation (a "
+            "mutations= callback or the spec's request_mutations) resets "
+            "the frontier to the full state, which would re-deliver "
+            "non-idempotent messages or re-base non-confluent state"
         )
     with fixpoint(graph, spec.algo, partitions) as fx:
+        info, p = fx.info, fx.p
         edges = graph.edges
-        p = fx.p
-
-        def build_links(e: DataFrame) -> DataFrame:
-            # pre-sorted persisted scatter side: the per-superstep sort-merge
-            # join never re-sorts the |E| relation, only the |V| state side
-            l_ = spec.prepare_links(e)
-            if not spec.links_prepartitioned:
-                l_ = l_.repartition(p, spec.links_key)
-            l_ = l_.sortWithinPartitions(spec.links_key).persist()
-            l_.count()
-            return l_
-
-        info = fx.info
-
-        # resume check BEFORE the |E| scatter-relation build: a run already
-        # recorded converged must return without paying the prep job
-        start_step = 0
-        state = None
-        frontier = None
-        resumed_aggs: dict = {}
+        frame = None
+        aggs: dict = {}
         mutated = False  # a mutation has been applied (possibly pre-resume)
         edges_dirty = False  # edges changed since the last edge snapshot
+
+        # resume BEFORE the |E| scatter-relation build: a run already
+        # recorded converged returns without paying the prep job
+        resumed = None
         if checkpointer is not None:
             resumed = checkpointer.try_resume(spec.algo)
-            if resumed is not None:
-                start_step, state, meta = resumed
-                if meta.get("converged"):
-                    info.converged = True
-                    info.supersteps = start_step
-                    return state.select("id", *spec.state_cols), info
-                state = state.repartition(p, "id").localCheckpoint()
-                ckpt_frame = state  # pre-projection: retains _frontier for finish
-                # restore the frontier exactly as the uninterrupted run had
-                # it (B10): snapshots carry a `_frontier` marker column when
-                # the spec has a frontier filter. Falling back to the full
-                # state is only safe for CONFLUENT specs (min/argmax); a
-                # non-idempotent program like k-core's decrement counting
-                # would re-scatter messages already delivered before the
-                # checkpoint, corrupting the result.
-                if "_frontier" in state.columns:
-                    frontier = state.filter("_frontier").select(
-                        "id", *spec.state_cols
-                    )
-                    state = state.select("id", *spec.state_cols)
-                # restore the checkpointed aggregator values (paper §3.3):
-                # the first post-resume step() must see superstep S's
-                # aggregates exactly as an uninterrupted run would
-                resumed_aggs = meta.get("aggregates") or {}
-                if meta.get("has_edges"):
-                    # a topology mutation happened before the checkpoint:
-                    # the snapshot's edge table IS the graph to resume on
-                    # (callbacks for supersteps > start_step re-fire; ones
-                    # already executed are baked into this edge snapshot)
-                    edges = checkpointer.read_edges(spec.algo, start_step)
-                    mutated = True
+        if resumed is not None:
+            info.supersteps, snapshot, meta = resumed
+            if meta.get("converged"):
+                info.converged = True
+                return _split_frame(spec, snapshot)[0], info
+            frame = snapshot.repartition(p, "id").localCheckpoint()
+            # superstep S's aggregates are the input of S+1 (paper §3.3)
+            aggs = meta.get("aggregates") or {}
+            if meta.get("has_edges"):
+                # a mutation happened before the snapshot: its edge table
+                # IS the graph to resume on (callbacks for supersteps >
+                # the snapshot's re-fire; earlier ones are baked in)
+                edges = checkpointer.read_edges(spec.algo, info.supersteps)
+                mutated = True
 
-        links = build_links(edges)
-        if state is None:
-            state = (
-                spec.init_state(graph.vertices).repartition(p, "id").localCheckpoint()
-            )
-        # superstep 0: every vertex is "changed" (confluent specs tolerate
-        # a too-large frontier at the cost of one superstep); resume uses
-        # the restored frontier when the snapshot carries one
-        if frontier is None:
-            frontier = state
-            ckpt_frame = state
+        links = build_links(spec, edges, p)
+        if frame is None:
+            # superstep 0: every vertex scatters (confluent specs tolerate
+            # a too-large frontier at the cost of one superstep)
+            init = spec.init_state(graph.vertices).repartition(p, "id")
+            frame = _make_frame(spec, init.localCheckpoint(), "true")
 
-        aggs: dict = resumed_aggs
-        step_i = info.supersteps = start_step
         converged = False
-        any_mutation = mutated  # an edge-snapshot resume counts as mutated
-        while step_i < max_supersteps and not converged:
+        while info.supersteps < max_supersteps and not converged:
             fx.start_step()
-            # paper §2: compute() can query the current superstep index.
-            # Exposed under the reserved "_superstep" aggs key (0-based,
-            # resume-exact: a resumed run passes start_step, identical to
-            # what the uninterrupted run's step S would have seen) so
-            # round-seeded programs (e.g. Luby MIS priorities) are
-            # deterministic across checkpointing.
+            state, frontier = _split_frame(spec, frame)
+            # paper §2: compute() can query the current superstep index,
+            # under the reserved "_superstep" aggs key (0-based and
+            # resume-exact, so round-seeded programs like Luby MIS are
+            # deterministic across checkpointing)
+            aggs = {**aggs, "_superstep": info.supersteps}
             new_state, aggs = fx.barrier(
-                spec.step(links, state, frontier, {**aggs, "_superstep": step_i}),
-                spec.metrics,
+                spec.step(links, state, frontier, aggs), spec.metrics
             )
-            if spec.frontier_filter is not None:
-                frontier = new_state.filter(spec.frontier_filter).select(
-                    "id", *spec.state_cols
-                )
-                # snapshot view carrying the frontier marker: a resumed run
-                # restores exactly this frontier (see the resume path above)
-                ckpt_frame = new_state.select(
-                    "id",
-                    *spec.state_cols,
-                    F.expr(spec.frontier_filter).cast("boolean").alias("_frontier"),
-                )
-            state = new_state.select("id", *spec.state_cols)
-            if spec.frontier_filter is None:
-                frontier = state
-                ckpt_frame = state
-            step_i += 1
+            frame = _make_frame(spec, new_state, spec.frontier_filter)
             fx.record(aggs)
-            if spec.halt(aggs):
-                converged = True
+            converged = bool(spec.halt(aggs))
 
             # Mutations resolve at EVERY barrier, including the one where
-            # the run converges — a mutation scheduled for superstep K must
-            # not be silently skipped because the algorithm settled at K.
-            # They resolve BEFORE the checkpoint below so a snapshot at
-            # this barrier captures the post-mutation graph + state —
-            # resume then re-fires callbacks only for supersteps > this one.
-            # Two request sources share one application under the paper's
-            # §3.4 partial ordering (removals first, then additions — an
-            # edge both removed and added in one barrier ends up PRESENT):
-            # the driver-side `mutations(superstep)` callback, and the
-            # spec's own `request_mutations` (vertex-initiated, derived
-            # from the post-superstep state — never collected).
-            mut_add: DataFrame | None = None
-            mut_remove: DataFrame | None = None
-            if mutations is not None:
-                mut = mutations(step_i)
-                if mut is not None:
-                    mut_add, mut_remove = mut
-            if spec.request_mutations is not None:
-                # gate: when the spec exposes a `mutation_requests` metric,
-                # a zero value means no vertex asked — skip the request
-                # evaluation (and its action) entirely on quiet barriers
-                gated_off = (
-                    "mutation_requests" in spec.metrics
-                    and not (aggs.get("mutation_requests") or 0)
-                )
-                if not gated_off:
-                    req = spec.request_mutations(state, aggs, step_i)
-                    if req is not None:
-                        op_counts = {
-                            r["op"]: r["n"]
-                            for r in req.groupBy("op")
-                            .agg(F.count(F.lit(1)).alias("n"))
-                            .collect()
-                        }
-                        unknown = set(op_counts) - {"add", "remove"}
-                        if unknown:
-                            raise ValueError(
-                                f"pregel_run({spec.algo}): request_mutations "
-                                f"emitted unknown op(s) {sorted(unknown)} — "
-                                "only 'add'/'remove' are defined (§3.4)"
-                            )
-                        if op_counts.get("remove"):
-                            rdf = req.filter(F.col("op") == "remove").select(
-                                "src", "dst"
-                            )
-                            mut_remove = (
-                                rdf
-                                if mut_remove is None
-                                else mut_remove.select("src", "dst").unionByName(rdf)
-                            )
-                        if op_counts.get("add"):
-                            adf = req.filter(F.col("op") == "add").select(
-                                *edges.columns
-                            )
-                            mut_add = (
-                                adf
-                                if mut_add is None
-                                else mut_add.select(*edges.columns).unionByName(adf)
-                            )
-            if (mut_add is not None or mut_remove is not None) and (
-                step_i >= max_supersteps
-            ):
+            # the run converges (a mutation scheduled for superstep K must
+            # not be skipped because the algorithm settled at K), and
+            # BEFORE the checkpoint, so a snapshot at this barrier holds
+            # the post-mutation graph and state.
+            state = _split_frame(spec, frame)[0]
+            add, remove = resolve_mutations(
+                spec, mutations, state, aggs, info.supersteps, edges.columns
+            )
+            mutation = add is not None or remove is not None
+            if mutation and info.supersteps >= max_supersteps:
                 # terminal barrier: no superstep remains to observe the
                 # mutated graph — applying it would return state labeled
                 # converged=False for a graph it never ran on
                 warnings.warn(
                     f"pregel_run({spec.algo}): mutation returned at the "
-                    f"max_supersteps barrier ({step_i}) cannot be "
+                    f"max_supersteps barrier ({info.supersteps}) cannot be "
                     "applied — no superstep remains; raise "
                     "max_supersteps",
                     stacklevel=2,
                 )
-                mut_add = mut_remove = None
-            if mut_add is not None or mut_remove is not None:
-                any_mutation = True
-                # §3.4 partial ordering: removals FIRST ...
-                if mut_remove is not None:
-                    edges = edges.join(
-                        mut_remove.select("src", "dst"), ["src", "dst"], "left_anti"
-                    )
-                # ... then additions. Preserve ALL edge columns (weights
-                # etc.) — added edges must carry the same schema. Re-adding
-                # an existing (src,dst) replaces the old row
-                # (last-write-wins); duplicates WITHIN the added batch
-                # resolve to the lexicographic-min extra columns —
-                # deterministic, unlike dropDuplicates' arbitrary survivor
-                # on conflicting weights
-                if mut_add is not None:
-                    add_rows = mut_add.select(*edges.columns)
-                    extras = [c for c in edges.columns if c not in ("src", "dst")]
-                    if extras:
-                        add_rows = (
-                            add_rows.groupBy("src", "dst")
-                            .agg(F.min(F.struct(*extras)).alias("_e"))
-                            .select("src", "dst", "_e.*")
-                        )
-                    else:
-                        add_rows = add_rows.distinct()
-                    edges = edges.join(
-                        add_rows.select("src", "dst"), ["src", "dst"], "left_anti"
-                    ).unionByName(add_rows)
-                # weight-preserving canonicalization: drop self-loops
-                # WITHOUT projecting away extra edge columns (plain
-                # canonicalize would strip weights); (src,dst) is
-                # already unique — conflicts were resolved above
-                edges = (
-                    edges.filter(F.col("src") != F.col("dst"))
-                    .repartition(p, "src")
-                    .localCheckpoint()
-                )
+            elif mutation:
+                edges = apply_mutations(edges, add, remove, p)
                 links.unpersist()
-                links = build_links(edges)
+                links = build_links(spec, edges, p)
                 # NEW vertices get init rows; existing state is kept even
                 # if a vertex became edge-isolated (edge removal never
-                # removes a vertex — paper §3.4 separates the two)
-                verts = vertices_of(edges).repartition(p, "id")
-                new_ids = verts.join(state, "id", "left_anti")
+                # removes a vertex — paper §3.4 separates the two); the
+                # whole state is reactivated to re-settle the new graph
+                new_ids = vertices_of(edges).repartition(p, "id").join(
+                    state, "id", "left_anti"
+                )
                 state = state.unionByName(spec.init_state(new_ids)).localCheckpoint()
-                frontier = state  # reactivate everything at the barrier
-                converged = False  # a mutated graph must be re-settled
-                mutated = True
-                edges_dirty = True
-                if spec.frontier_filter is not None:
-                    ckpt_frame = state.select(
-                        "id",
-                        *spec.state_cols,
-                        F.lit(True).alias("_frontier"),
-                    )
-                else:
-                    ckpt_frame = state
+                frame = _make_frame(spec, state, "true")
+                converged = False
+                mutated = edges_dirty = True
 
             if checkpointer is not None:
-                cp = checkpointer.maybe_checkpoint(
+                snapshot = checkpointer.maybe_checkpoint(
                     spec.algo,
-                    step_i,
-                    ckpt_frame,
+                    info.supersteps,
+                    frame,
                     delta=aggs.get("delta"),
                     active=aggs.get("active"),
                     aggregates=dict(aggs),
-                    # write the mutated edge table alongside state (paper
+                    # the mutated edge table rides the snapshot (paper
                     # §4.2: the checkpoint must capture the graph once it
                     # diverged from the input); skipped while unchanged —
                     # resume reads the latest edge snapshot <= its superstep
                     edges=edges if edges_dirty else None,
                     mutated=mutated,
                 )
-                if cp is not None:
-                    # durable read-back replaces in-memory state/frontier
+                if snapshot is not None:
+                    # the durable read-back replaces the in-memory frame
+                    frame = snapshot
                     edges_dirty = False
-                    if "_frontier" in cp.columns:
-                        frontier = cp.filter("_frontier").select(
-                            "id", *spec.state_cols
-                        )
-                        state = cp.select("id", *spec.state_cols)
-                    else:
-                        state = cp
-                        frontier = state
 
         info.converged = converged
-        if mutations is not None and not any_mutation:
+        if mutations is not None and not mutated:
             warnings.warn(
                 f"pregel_run({spec.algo}): the mutations callback never "
                 f"returned a mutation before the run ended at superstep "
-                f"{step_i} (converged={converged}) — a mutation scheduled "
-                "for a later superstep was not applied",
+                f"{info.supersteps} (converged={converged}) — a mutation "
+                "scheduled for a later superstep was not applied",
                 stacklevel=2,
             )
         links.unpersist()
         if checkpointer is not None:
-            # carry the frontier marker in the final snapshot too: resuming
-            # an unconverged max_supersteps run must not re-widen the
-            # frontier (non-idempotent specs — see the resume path)
+            # the final snapshot carries the frontier too: resuming an
+            # unconverged max_supersteps run must not re-widen it
             checkpointer.finish(
-                spec.algo, step_i, ckpt_frame, converged=converged,
+                spec.algo, info.supersteps, frame, converged=converged,
                 aggregates=dict(aggs),
                 edges=edges if edges_dirty else None, mutated=mutated,
             )
-        return state, info
+        return _split_frame(spec, frame)[0], info

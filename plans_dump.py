@@ -69,16 +69,13 @@ def dump(out_dir: str, tag: str, sf_dir: str) -> None:
     # localCheckpoint, the whole thing under the loop's superstep_conf
     # (so the dump shows the recurring per-step plan the loop actually
     # executes, not the one-time build lineage or the session's AQE)
+    from linkgraph.pregel import build_links
     from linkgraph.tuning import scale_partitions, superstep_conf
 
     p_steps = scale_partitions(spark, max(g.num_edges, g.num_vertices))
 
     def mid_loop(spec):
-        links = spec.prepare_links(g.edges)
-        if not spec.links_prepartitioned:
-            links = links.repartition(p_steps, spec.links_key)
-        links = links.sortWithinPartitions(spec.links_key).persist()
-        links.count()
+        links = build_links(spec, g.edges, p_steps)
         state = (
             spec.init_state(g.vertices).repartition(p_steps, "id").localCheckpoint()
         )

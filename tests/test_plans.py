@@ -152,18 +152,13 @@ def test_superstep_shuffle_is_bounded(spark, graph_builder):
     built by pagerank_spec().step, exactly what pregel_run executes.
     Cached/checkpointed subtrees are excluded."""
     from linkgraph.algorithms.pagerank import pagerank_spec
+    from linkgraph.pregel import build_links
 
     g = graph_builder(FX.G1_EDGES)
     n = g.num_vertices
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     spec = pagerank_spec(n)
-    links = (
-        spec.prepare_links(g.edges)
-        .repartition(p, spec.links_key)
-        .sortWithinPartitions(spec.links_key)
-        .persist()
-    )
-    links.count()
+    links = build_links(spec, g.edges, p)
     state = spec.init_state(g.vertices).localCheckpoint()
     new_state = spec.step(links, state, state, {})
     plan = plan_of(new_state)

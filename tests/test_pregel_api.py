@@ -250,6 +250,48 @@ def test_mutation_ordering_removal_then_addition(spark, graph_builder):
     assert info2.converged
 
 
+def test_callback_remove_and_requested_add_at_one_barrier(spark, graph_builder):
+    """Both request sources at ONE barrier: the driver callback removes
+    (2,10) while a vertex-initiated request re-adds it at superstep 1.
+    The resolver merges them and §3.4's removals-first ordering keeps
+    the edge, so one component remains; the callback's removal alone
+    (control) splits the graph."""
+    import dataclasses
+
+    from linkgraph.algorithms.components import components_spec
+
+    edges = [(0, 1), (1, 2), (2, 10), (10, 11)]
+    cut = spark.createDataFrame([(2, 10)], "src long, dst long")
+
+    def callback(superstep):
+        return (None, cut) if superstep == 1 else None
+
+    def requests(new_state, aggs, superstep):
+        if superstep != 1:
+            return None
+        return new_state.filter(F.col("id") == 2).select(
+            F.lit("add").alias("op"),
+            F.col("id").alias("src"),
+            F.lit(10).cast("long").alias("dst"),
+        )
+
+    spec = dataclasses.replace(components_spec(), request_mutations=requests)
+    state, info = pregel_run(
+        graph_builder(edges), spec, max_supersteps=50, mutations=callback
+    )
+    got = {r["id"]: r["comp"] for r in state.collect()}
+    assert set(got.values()) == {0}, "the requested add must win"
+    assert info.converged
+
+    state2, info2 = pregel_run(
+        graph_builder(edges), components_spec(), max_supersteps=50,
+        mutations=callback,
+    )
+    got2 = {r["id"]: r["comp"] for r in state2.collect()}
+    assert got2 == {0: 0, 1: 0, 2: 0, 10: 2, 11: 2}
+    assert info2.converged
+
+
 def test_request_mutations_gate_metric_skips_quiet_barriers(
     spark, graph_builder
 ):
@@ -385,6 +427,54 @@ def test_mutations_with_checkpointer_resume_equals_uninterrupted(
     )
     got = {r["id"]: r["comp"] for r in state_b.collect()}
     assert got == want
+    assert 1 not in fired  # superstep-1 callback not re-fired on resume
+
+
+def test_resume_from_mutation_barrier_snapshot(spark, graph_builder, tmp_path):
+    """The snapshot written AT a mutation barrier (every=1: superstep
+    1's, right after the mutation) holds the post-mutation graph and a
+    frontier reset to every vertex. A run that crashes in superstep 2's
+    callback resumes from it to the uninterrupted labels, without
+    re-firing the superstep-1 callback."""
+    from linkgraph.catalog import ParquetManifestCatalog
+    from linkgraph.checkpoint import CheckpointManager
+
+    edges = [(0, 1), (1, 2), (10, 11), (11, 12)]
+    g = graph_builder(edges)
+    bridge = spark.createDataFrame([(2, 10), (12, 20)], "src long, dst long")
+    fired: list[int] = []
+    crash = [False]
+
+    def mutations(superstep):
+        fired.append(superstep)
+        if crash[0] and superstep == 2:
+            raise RuntimeError("simulated crash at superstep 2")
+        return (bridge, None) if superstep == 1 else None
+
+    full_state, _ = connected_components(g, mutations=mutations)
+    want = {r["id"]: r["comp"] for r in full_state.collect()}
+    assert want == {i: 0 for i in want} and 20 in want
+
+    cat = ParquetManifestCatalog(spark, str(tmp_path / "wh"))
+    crash[0] = True
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        connected_components(
+            g, checkpointer=CheckpointManager(cat, run_id="mut2", every=1),
+            mutations=mutations,
+        )
+    crash[0] = False
+
+    ck = CheckpointManager(cat, run_id="mut2", every=1)
+    step, snap, meta = ck.try_resume("components")
+    assert step == 1 and meta.get("has_edges")
+    assert {r["_frontier"] for r in snap.collect()} == {True}
+    assert 20 in {r["id"] for r in snap.collect()}  # new vertex initialized
+
+    fired.clear()
+    state_b, info_b = connected_components(g, checkpointer=ck, mutations=mutations)
+    got = {r["id"]: r["comp"] for r in state_b.collect()}
+    assert got == want
+    assert info_b.converged
     assert 1 not in fired  # superstep-1 callback not re-fired on resume
 
 

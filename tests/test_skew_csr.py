@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from linkgraph import fixtures as FX
@@ -50,6 +51,15 @@ def test_pagerank_csr_dangling(spark, graph_builder):
     g = graph_builder(FX.G1B_EDGES, extra_vertices=[3])
     state, _ = pagerank_csr(g, tol=1e-9, dangling="redistribute")
     assert np.allclose(ranks_of(state, 4), FX.G1B_PR_REDIST, atol=1e-6)
+
+
+@pytest.mark.parametrize("run", [pagerank, pagerank_csr])
+def test_invalid_dangling_rejected(spark, graph_builder, run):
+    """An unknown `dangling` mode is a ValueError on both entry points
+    (an assert would vanish under `python -O` and run as "drop")."""
+    g = graph_builder(FX.G1B_EDGES)
+    with pytest.raises(ValueError, match="dangling"):
+        run(g, dangling="bogus")
 
 
 def test_hot_broadcast_equals_naive(spark, graph_builder):
