@@ -22,7 +22,8 @@ Public surface:
     algorithms.triangles     — per-vertex + global triangle counts
     algorithms.sssp          — single-source shortest paths
     corpus.derive_edges      — (repo,path,commit,lang,content) → edges
-    csr.pack_csr / csr.pagerank_csr — CSR kernels (Arrow/pandas path)
+    csr.pack_csr / csr.pagerank_csr — CSR kernels (Arrow/pandas path);
+                               pagerank_csr = PageRank with a CSR scatter
     checkpoint.CheckpointManager — snapshot/lineage/resume seam
     pipeline.*               — dedup (exact/MinHash-LSH/SimHash),
                                similarity (cosine/IVF), textstats,

@@ -8,9 +8,10 @@ matching library conventions). Convergence: L1 delta < tol.
 
 Superstep plan (one Spark job, ONE shuffle — the fused form, built by
 pregel.pregel_run from this module's spec):
-  scatter  B2: links ⋈ state on src — links pre-partitioned P ways on
-              src, pre-sorted and persisted once by the driver; AQE
-              broadcasts the state side when it fits.
+  scatter  B2: the plain scatter is links ⋈ state on src — links
+              pre-partitioned P ways on src, pre-sorted and persisted
+              once by the driver; the static planner broadcasts the
+              state side when its size estimate fits.
   combine+apply B3/B5, fused: the old-rank rows are UNIONED into the
               message stream as (id, contrib=0, old=rank) markers, so
               a single `groupBy(id).agg(sum(contrib), sum(old))`
@@ -21,15 +22,15 @@ pregel.pregel_run from this module's spec):
               faster per superstep than the join-based apply and it
               removes the one stage that didn't scale with cores.
   aggregate B7/B8: sum(|new-old|) — the delta accumulator (a
-              spec.metrics entry); its `first()` is the superstep
-              barrier (and it materializes the lazy lineage checkpoint
-              in the same job).
+              spec.metrics entry), observed on the superstep barrier's
+              one noop write (`Fixpoint.barrier`), which materializes
+              the lazy local checkpoint in the same job.
 
 Skew: in-degree skew is absorbed by the map-side partial sum (each
-task pre-merges its contributions to a hot dst before shuffling);
-out-degree skew in the scatter join is handled by AQE skew-join
-splitting (enabled in session.py). The explicit hot-vertex broadcast
-split (B12) lives in skew.py and is exercised by tests for parity.
+task pre-merges its contributions to a hot dst before shuffling). The
+loop runs with AQE off (`tuning.superstep_conf`), so AQE skew-join
+splitting never applies to the scatter join; out-degree skew is the
+hot-broadcast scatter's job (`hot_threshold`).
 
 Note (negative result, measured): chaining k supersteps lazily
 between barriers to amortize driver latency is a 5.7× REGRESSION —
@@ -41,11 +42,70 @@ correct structure; Pregel's barrier is not overhead to skip.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from dataclasses import replace
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, out_degrees
 from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
+from linkgraph.skew import hot_vertices, scatter_hot_broadcast
+
+
+class Scatter(NamedTuple):
+    """How rank messages reach their destinations — the ONLY part that
+    varies between PageRank variants (plain join, weighted join,
+    hot-broadcast split, csr.csr_scatter kernel); pagerank_spec is the
+    one vertex program around it."""
+
+    prepare_links: Callable[[DataFrame], DataFrame]  # edges -> links, once
+    contribs: Callable[[DataFrame, DataFrame], DataFrame]  # -> (dst, contrib)
+    links_key: str = "src"  # partition/sort column of links
+
+
+def _outdeg_links(edges: DataFrame) -> DataFrame:
+    # out-edges with the sender's degree attached: the per-superstep
+    # scatter is then a single equi-join producing rank/outdeg
+    deg = out_degrees(edges).withColumnRenamed("id", "src")
+    return edges.join(deg, "src").select("src", "dst", "outdeg")
+
+
+def _join_contribs(links: DataFrame, state: DataFrame) -> DataFrame:
+    return links.join(state.withColumnRenamed("id", "src"), "src").select(
+        "dst", (F.col("rank") / F.col("outdeg")).alias("contrib")
+    )
+
+
+PLAIN_SCATTER = Scatter(_outdeg_links, _join_contribs)
+
+
+def weighted_scatter(weight_col: str) -> Scatter:
+    """The degree becomes the out-weight sum and each edge carries its
+    weight — contrib = rank * w / wsum. (A scatter of its own so the
+    unweighted plan's float ops — and the fixed-K CTE oracles pinned to
+    them — are untouched.)"""
+
+    def prepare_links(edges):
+        w = F.col(weight_col).cast("double")
+        ws = edges.groupBy("src").agg(F.sum(w).alias("wsum"))
+        return edges.join(ws, "src").select("src", "dst", w.alias("w"), "wsum")
+
+    def contribs(links, state):
+        return links.join(state.withColumnRenamed("id", "src"), "src").select(
+            "dst", (F.col("rank") * F.col("w") / F.col("wsum")).alias("contrib")
+        )
+
+    return Scatter(prepare_links, contribs)
+
+
+def _delta() -> Column:  # L1 convergence metric
+    return F.sum(F.abs(F.col("rank") - F.col("rank_old")))
+
+
+def _halt_below(tol: float) -> Callable[[dict], bool]:
+    return lambda a: a.get("delta") is not None and float(a["delta"]) < tol
 
 
 def pagerank_spec(
@@ -53,10 +113,9 @@ def pagerank_spec(
     d: float = 0.85,
     tol: float = 1e-6,
     dangling: str = "drop",
-    hot_ids=None,
+    scatter: Scatter = PLAIN_SCATTER,
     dangling_ids=None,
     n_dangling: int = 0,
-    weight_col: str | None = None,
 ) -> PregelSpec:
     """The PageRank vertex program as a PregelSpec (n = |V|, frozen).
 
@@ -74,11 +133,6 @@ def pagerank_spec(
     """
     if dangling not in ("drop", "redistribute"):
         raise ValueError(f"dangling must be drop|redistribute, got {dangling!r}")
-    if weight_col is not None and hot_ids is not None:
-        raise ValueError(
-            "weight_col + hot_ids is unsupported: the hot-broadcast "
-            "scatter splits on rank/outdeg, not weight fractions"
-        )
     redistribute = dangling == "redistribute"
     if redistribute and dangling_ids is None:
         raise ValueError(
@@ -87,22 +141,6 @@ def pagerank_spec(
         )
     base = (1.0 - d) / n
     dm0 = n_dangling / n  # dangling mass of the uniform init state
-
-    def prepare_links(edges):
-        # out-edges with the sender's degree attached: the per-superstep
-        # scatter is then a single equi-join producing rank/outdeg.
-        # Weighted: the degree becomes the out-weight sum, and each edge
-        # carries its weight — contrib = rank * w / wsum. (Kept as a
-        # separate branch so the unweighted plan's float ops — and the
-        # fixed-K CTE oracles pinned to them — are untouched.)
-        if weight_col is not None:
-            w = F.col(weight_col).cast("double")
-            ws = edges.groupBy("src").agg(F.sum(w).alias("wsum"))
-            return edges.join(ws, "src").select(
-                "src", "dst", w.alias("w"), "wsum"
-            )
-        deg = out_degrees(edges).withColumnRenamed("id", "src")
-        return edges.join(deg, "src").select("src", "dst", "outdeg")
 
     def init_state(verts):
         s = verts.select("id", F.lit(1.0 / n).cast("double").alias("rank"))
@@ -121,22 +159,7 @@ def pagerank_spec(
             dm = aggs.get("dangling_mass")
             dm = dm0 if dm is None else float(dm or 0.0)
             extra = d * dm / n
-        if hot_ids is not None:
-            from linkgraph.skew import scatter_hot_broadcast
-
-            contribs = scatter_hot_broadcast(links, state, hot_ids)
-        elif weight_col is not None:
-            contribs = links.join(
-                state.withColumnRenamed("id", "src"), "src"
-            ).select(
-                "dst",
-                (F.col("rank") * F.col("w") / F.col("wsum")).alias("contrib"),
-            )
-        else:
-            contribs = links.join(
-                state.withColumnRenamed("id", "src"), "src"
-            ).select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
-        contribs = contribs.withColumn("old", F.lit(0.0))
+        contribs = scatter.contribs(links, state).withColumn("old", F.lit(0.0))
         carried_cols = [
             F.col("id").alias("dst"),
             F.lit(0.0).alias("contrib"),
@@ -159,19 +182,57 @@ def pagerank_spec(
             .agg(*aggregates)
         )
 
-    metrics = {"delta": F.sum(F.abs(F.col("rank") - F.col("rank_old")))}
+    metrics = {"delta": _delta()}
     if redistribute:
         metrics["dangling_mass"] = F.sum(F.col("rank") * F.col("is_dangling"))
     return PregelSpec(
         algo="pagerank",
         state_cols=("rank", "is_dangling") if redistribute else ("rank",),
         init_state=init_state,
-        prepare_links=prepare_links,
+        prepare_links=scatter.prepare_links,
         step=step,
         metrics=metrics,
-        halt=lambda a: a.get("delta") is not None and float(a["delta"]) < tol,
+        halt=_halt_below(tol),
         frontier_filter=None,  # every vertex scatters every superstep
+        links_key=scatter.links_key,
     )
+
+
+def _run_pagerank(
+    graph: Graph, scatter: Scatter, *, d, tol, max_supersteps, dangling,
+    checkpointer, algo: str = "pagerank", persisted: tuple = (),
+) -> tuple[DataFrame, RunInfo]:
+    """Run the PageRank program with `scatter` under checkpoint namespace
+    `algo`; `persisted` frames (and the dangling set built here) are
+    released however the run ends."""
+    persisted = list(persisted)
+    try:
+        n = graph.num_vertices
+        if n == 0:
+            raise ValueError(f"{algo} on an empty graph (num_vertices == 0)")
+        dangling_ids = None
+        n_dangling = 0
+        if dangling == "redistribute":
+            dangling_ids = graph.vertices.join(
+                out_degrees(graph.edges), "id", "left_anti"
+            ).persist()
+            persisted.append(dangling_ids)
+            # one count at setup seeds superstep 1's dangling mass
+            # (n_dangling/n on the uniform init); every later superstep
+            # reads the mass from the previous barrier's aggregates
+            n_dangling = dangling_ids.count()
+        spec = pagerank_spec(
+            n, d=d, tol=tol, dangling=dangling, scatter=scatter,
+            dangling_ids=dangling_ids, n_dangling=n_dangling,
+        )
+        state, info = pregel_run(
+            graph, replace(spec, algo=algo),
+            max_supersteps=max_supersteps, checkpointer=checkpointer,
+        )
+        return state.select("id", "rank"), info
+    finally:
+        for df in persisted:
+            df.unpersist()
 
 
 def pagerank(
@@ -196,9 +257,12 @@ def pagerank(
     (1-d)/N are frozen at start, so a changed vertex set would silently
     redistribute mass. Rebuild the Graph between runs instead.
     """
-    n = graph.num_vertices
-    if n == 0:
-        raise ValueError("pagerank on an empty graph (num_vertices == 0)")
+    if weight_col is not None and hot_threshold is not None:
+        raise ValueError(
+            "weight_col + hot_ids is unsupported: the hot-broadcast "
+            "scatter splits on rank/outdeg, not weight fractions"
+        )
+    scatter, persisted = PLAIN_SCATTER, ()
     if weight_col is not None:
         # NULLs must be caught explicitly: `w <= 0` is NULL for null
         # rows, which filter() drops — a null weight would then make
@@ -214,39 +278,19 @@ def pagerank(
                 "(zero out-weight sums divide by zero; null contribs "
                 "leak rank mass)"
             )
-
-    hot_ids = None
-    if hot_threshold is not None:
-        from linkgraph.skew import hot_vertices
-
-        deg = out_degrees(graph.edges)
-        hot_ids = hot_vertices(deg.select("id", "outdeg"), hot_threshold).persist()
+        scatter = weighted_scatter(weight_col)
+    elif hot_threshold is not None:
+        hot_ids = hot_vertices(out_degrees(graph.edges), hot_threshold).persist()
+        persisted = (hot_ids,)
         hot_ids.count()
-
-    dangling_ids = None
-    n_dangling = 0
-    if dangling == "redistribute":
-        dangling_ids = graph.vertices.join(
-            out_degrees(graph.edges), "id", "left_anti"
-        ).persist()
-        # one count at setup seeds superstep 1's dangling mass
-        # (n_dangling/n on the uniform init); every later superstep
-        # reads the mass from the previous barrier's aggregates
-        n_dangling = dangling_ids.count()
-
-    spec = pagerank_spec(
-        n, d=d, tol=tol, dangling=dangling,
-        hot_ids=hot_ids, dangling_ids=dangling_ids, n_dangling=n_dangling,
-        weight_col=weight_col,
+        # B12: hot-src edges join a broadcast copy of the hot state slice
+        scatter = PLAIN_SCATTER._replace(
+            contribs=lambda links, state: scatter_hot_broadcast(links, state, hot_ids)
+        )
+    return _run_pagerank(
+        graph, scatter, d=d, tol=tol, max_supersteps=max_supersteps,
+        dangling=dangling, checkpointer=checkpointer, persisted=persisted,
     )
-    state, info = pregel_run(
-        graph, spec, max_supersteps=max_supersteps, checkpointer=checkpointer
-    )
-    if hot_ids is not None:
-        hot_ids.unpersist()
-    if dangling_ids is not None:
-        dangling_ids.unpersist()
-    return state.select("id", "rank"), info
 
 
 def personalized_pagerank(
@@ -265,7 +309,9 @@ def personalized_pagerank(
     A ~20-line PregelSpec over the same generic driver — the static
     preference vector rides the carried marker rows exactly like
     redistribute-mode's is_dangling flag, so the superstep stays ONE
-    fused shuffle + one barrier action.
+    fused shuffle + one barrier action. It shares the plain scatter,
+    the delta metric and the halt rule with pagerank_spec; its own
+    step keeps the (1-d)·pref teleport.
     """
     # set semantics: duplicates collapse; every source must exist in the
     # graph — silently dropping an unknown id would shrink the teleport
@@ -291,14 +337,9 @@ def personalized_pagerank(
             .select("id", F.col("pref").alias("rank"), "pref")
         )
 
-    def prepare_links(edges):
-        deg = out_degrees(edges).withColumnRenamed("id", "src")
-        return edges.join(deg, "src").select("src", "dst", "outdeg")
-
     def step(links, state, frontier, aggs):
         contribs = (
-            links.join(state.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
+            PLAIN_SCATTER.contribs(links, state)
             .withColumn("old", F.lit(0.0))
             .withColumn("pref_m", F.lit(0.0))
         )
@@ -325,10 +366,10 @@ def personalized_pagerank(
         algo="ppr",
         state_cols=("rank", "pref"),
         init_state=init_state,
-        prepare_links=prepare_links,
+        prepare_links=PLAIN_SCATTER.prepare_links,
         step=step,
-        metrics={"delta": F.sum(F.abs(F.col("rank") - F.col("rank_old")))},
-        halt=lambda a: a.get("delta") is not None and float(a["delta"]) < tol,
+        metrics={"delta": _delta()},
+        halt=_halt_below(tol),
         frontier_filter=None,
     )
     state, info = pregel_run(graph, spec, max_supersteps=max_supersteps)

@@ -7,8 +7,10 @@ Three layers, cheapest first:
    HashAggregate before the exchange, so a dst with in-degree 10^6
    receives at most one pre-merged row per map partition — in-degree
    skew mostly dies here.
-2. **AQE skew-join splitting** (enabled in session.py): fat shuffle
-   partitions in the scatter join are split at runtime.
+2. **AQE skew-join splitting** (a session default, session.py): fat
+   shuffle partitions of one-shot joins are split at runtime. It does
+   not apply inside superstep loops, which run with AQE off
+   (`tuning.superstep_conf`).
 3. **Explicit mechanisms** (this module), for the residual cases:
    - `salted_sum` — two-phase aggregation that spreads a single hot
      reduce key over S sub-keys before the final merge (B11). Matters

@@ -33,16 +33,18 @@ def test_csr_pack_roundtrip(spark, graph_builder):
     assert sum(stats.values()) == len(FX.G1_EDGES)
 
 
-def test_pagerank_csr_equals_join_path(spark, graph_builder):
+@pytest.mark.parametrize("dangling", ["drop", "redistribute"])
+def test_pagerank_csr_equals_join_path(spark, graph_builder, dangling):
     import networkx as nx
 
     G = nx.karate_club_graph()
     edges = [(u, v) for u, v in G.edges()] + [(v, u) for u, v in G.edges()]
-    g = graph_builder(edges)
-    join_state, join_info = pagerank(g, tol=1e-9)
-    csr_state, csr_info = pagerank_csr(g, tol=1e-9)
-    a = ranks_of(join_state, 34)
-    b = ranks_of(csr_state, 34)
+    # one-way edges into new sinks 34..36, so redistribute mode moves mass
+    g = graph_builder(edges + [(0, 34), (5, 35), (33, 36)])
+    join_state, join_info = pagerank(g, tol=1e-9, dangling=dangling)
+    csr_state, csr_info = pagerank_csr(g, tol=1e-9, dangling=dangling)
+    a = ranks_of(join_state, 37)
+    b = ranks_of(csr_state, 37)
     assert np.allclose(a, b, atol=1e-12)
     assert join_info.supersteps == csr_info.supersteps
 
@@ -62,14 +64,18 @@ def test_invalid_dangling_rejected(spark, graph_builder, run):
         run(g, dangling="bogus")
 
 
-def test_hot_broadcast_equals_naive(spark, graph_builder):
+@pytest.mark.parametrize("dangling", ["drop", "redistribute"])
+def test_hot_broadcast_equals_naive(spark, graph_builder, dangling):
     # star hub 0 -> spokes has extreme out-degree skew
     edges = FX.g3_star_edges(300)
-    g = graph_builder(edges + [(s, d) for d, s in edges])  # both directions
-    naive, _ = pagerank(g, tol=1e-9)
-    hot, _ = pagerank(g, tol=1e-9, hot_threshold=50)
+    # both directions, plus one-way edges into two new sinks (one fed by
+    # the hub) so redistribute mode has dangling mass to move
+    g = graph_builder(edges + [(s, d) for d, s in edges] + [(0, 301), (1, 302)])
     n = g.num_vertices
+    naive, naive_info = pagerank(g, tol=1e-9, dangling=dangling)
+    hot, hot_info = pagerank(g, tol=1e-9, dangling=dangling, hot_threshold=50)
     assert np.allclose(ranks_of(naive, n), ranks_of(hot, n), atol=1e-12)
+    assert naive_info.supersteps == hot_info.supersteps
 
 
 def test_salted_sum_equals_naive(spark):
