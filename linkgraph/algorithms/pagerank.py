@@ -29,8 +29,9 @@ pregel.pregel_run from this module's spec):
 Skew: in-degree skew is absorbed by the map-side partial sum (each
 task pre-merges its contributions to a hot dst before shuffling). The
 loop runs with AQE off (`tuning.superstep_conf`), so AQE skew-join
-splitting never applies to the scatter join; out-degree skew is the
-hot-broadcast scatter's job (`hot_threshold`).
+splitting never applies to the scatter join. Out-degree skew has no
+scatter of its own: a hot-src broadcast scatter (B12) measured slower
+than the plain join and was removed (see linkgraph/skew.py).
 
 Note (negative result, measured): chaining k supersteps lazily
 between barriers to amortize driver latency is a 5.7× REGRESSION —
@@ -51,14 +52,13 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, out_degrees
 from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
-from linkgraph.skew import hot_vertices, scatter_hot_broadcast
 
 
 class Scatter(NamedTuple):
     """How rank messages reach their destinations — the ONLY part that
     varies between PageRank variants (plain join, weighted join,
-    hot-broadcast split, csr.csr_scatter kernel); pagerank_spec is the
-    one vertex program around it."""
+    csr.csr_scatter kernel); pagerank_spec is the one vertex program
+    around it."""
 
     prepare_links: Callable[[DataFrame], DataFrame]  # edges -> links, once
     contribs: Callable[[DataFrame, DataFrame], DataFrame]  # -> (dst, contrib)
@@ -198,25 +198,21 @@ def pagerank_spec(
     )
 
 
-def _run_pagerank(
+def run_pagerank(
     graph: Graph, scatter: Scatter, *, d, tol, max_supersteps, dangling,
-    checkpointer, algo: str = "pagerank", persisted: tuple = (),
+    checkpointer, algo: str = "pagerank",
 ) -> tuple[DataFrame, RunInfo]:
-    """Run the PageRank program with `scatter` under checkpoint namespace
-    `algo`; `persisted` frames (and the dangling set built here) are
-    released however the run ends."""
-    persisted = list(persisted)
+    """Run the PageRank program with `scatter` under checkpoint namespace `algo`."""
+    dangling_ids = None
     try:
         n = graph.num_vertices
         if n == 0:
             raise ValueError(f"{algo} on an empty graph (num_vertices == 0)")
-        dangling_ids = None
         n_dangling = 0
         if dangling == "redistribute":
             dangling_ids = graph.vertices.join(
                 out_degrees(graph.edges), "id", "left_anti"
             ).persist()
-            persisted.append(dangling_ids)
             # one count at setup seeds superstep 1's dangling mass
             # (n_dangling/n on the uniform init); every later superstep
             # reads the mass from the previous barrier's aggregates
@@ -231,8 +227,8 @@ def _run_pagerank(
         )
         return state.select("id", "rank"), info
     finally:
-        for df in persisted:
-            df.unpersist()
+        if dangling_ids is not None:
+            dangling_ids.unpersist()
 
 
 def pagerank(
@@ -242,7 +238,6 @@ def pagerank(
     max_supersteps: int = 100,
     dangling: str = "drop",
     checkpointer=None,
-    hot_threshold: int | None = None,
     weight_col: str | None = None,
 ) -> tuple[DataFrame, RunInfo]:
     """Returns (state(id, rank), RunInfo). float64 end-to-end (§A.6).
@@ -257,12 +252,7 @@ def pagerank(
     (1-d)/N are frozen at start, so a changed vertex set would silently
     redistribute mass. Rebuild the Graph between runs instead.
     """
-    if weight_col is not None and hot_threshold is not None:
-        raise ValueError(
-            "weight_col + hot_ids is unsupported: the hot-broadcast "
-            "scatter splits on rank/outdeg, not weight fractions"
-        )
-    scatter, persisted = PLAIN_SCATTER, ()
+    scatter = PLAIN_SCATTER
     if weight_col is not None:
         # NULLs must be caught explicitly: `w <= 0` is NULL for null
         # rows, which filter() drops — a null weight would then make
@@ -279,17 +269,9 @@ def pagerank(
                 "leak rank mass)"
             )
         scatter = weighted_scatter(weight_col)
-    elif hot_threshold is not None:
-        hot_ids = hot_vertices(out_degrees(graph.edges), hot_threshold).persist()
-        persisted = (hot_ids,)
-        hot_ids.count()
-        # B12: hot-src edges join a broadcast copy of the hot state slice
-        scatter = PLAIN_SCATTER._replace(
-            contribs=lambda links, state: scatter_hot_broadcast(links, state, hot_ids)
-        )
-    return _run_pagerank(
+    return run_pagerank(
         graph, scatter, d=d, tol=tol, max_supersteps=max_supersteps,
-        dangling=dangling, checkpointer=checkpointer, persisted=persisted,
+        dangling=dangling, checkpointer=checkpointer,
     )
 
 

@@ -27,6 +27,7 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -269,12 +270,15 @@ class IcebergCatalog:
 
 
 def iceberg_available(spark: SparkSession) -> bool:
+    """Whether the Iceberg Spark runtime is on the JVM classpath. Only
+    the ClassNotFoundException (a Py4JJavaError) means "absent"; any
+    other failure, a dead gateway included, propagates."""
     try:
         spark._jvm.java.lang.Class.forName(  # noqa: SLF001
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.algorithms.pagerank import Scatter, _run_pagerank
+from linkgraph.algorithms.pagerank import Scatter, run_pagerank
 from linkgraph.graph import Graph
 from linkgraph.pregel import RunInfo
 from linkgraph.tuning import scale_partitions
@@ -144,7 +144,7 @@ def pagerank_csr(
     p = scale_partitions(
         graph.edges.sparkSession, max(graph.num_edges, graph.num_vertices)
     )
-    return _run_pagerank(
+    return run_pagerank(
         graph, csr_scatter(p), d=d, tol=tol, max_supersteps=max_supersteps,
         dangling=dangling, checkpointer=checkpointer, algo="pagerank_csr",
     )

@@ -196,6 +196,36 @@ def lsh_band_rows(
     )
 
 
+def drop_oversized_buckets(
+    banded: DataFrame, key: str, max_bucket_size: int, caller: str
+) -> DataFrame:
+    """Drop the rows of (band, key) buckets over max_bucket_size from a
+    materialized banded table, warning the dropped buckets and rows (no
+    silent caps)."""
+    # no persist: banded is already materialized, so the anti-join's
+    # recompute of `big` is one cheap aggregate (a persist here would
+    # leak a cached block per call)
+    big = (
+        banded.groupBy("band", key)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > max_bucket_size)
+    )
+    dropped = big.agg(
+        F.count(F.lit(1)).alias("buckets"), F.sum("n").alias("rows")
+    ).first()
+    if dropped["buckets"]:
+        warnings.warn(
+            f"{caller}: dropped {dropped['buckets']} bucket(s) "
+            f"over max_bucket_size={max_bucket_size} "
+            f"({dropped['rows']} banded rows) from candidate generation",
+            stacklevel=3,
+        )
+    # oversized buckets are few by construction — broadcast anti-join
+    return banded.join(
+        F.broadcast(big.select("band", key)), ["band", key], "left_anti"
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
@@ -237,27 +267,8 @@ def lsh_candidate_pairs(
     # three fixed-width columns is tiny next to that recompute.
     banded = banded.localCheckpoint()
     if max_bucket_size is not None:
-        # no persist: banded is already materialized above, so the
-        # anti-join's recompute of `big` is one cheap aggregate (a
-        # persist here would leak a cached block per call)
-        big = (
-            banded.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-        )
-        dropped = big.agg(
-            F.count(F.lit(1)).alias("buckets"), F.sum("n").alias("rows")
-        ).first()
-        if dropped["buckets"]:
-            warnings.warn(
-                f"lsh_candidate_pairs: dropped {dropped['buckets']} bucket(s) "
-                f"over max_bucket_size={max_bucket_size} "
-                f"({dropped['rows']} banded rows) from candidate generation",
-                stacklevel=2,
-            )
-        # oversized buckets are few by construction — broadcast anti-join
-        banded = banded.join(
-            F.broadcast(big.select("band", "bh")), ["band", "bh"], "left_anti"
+        banded = drop_oversized_buckets(
+            banded, "bh", max_bucket_size, "lsh_candidate_pairs"
         )
     a = banded.select(F.col("id").alias("id_a"), "band", "bh")
     b = banded.select(F.col("id").alias("id_b"), "band", "bh")

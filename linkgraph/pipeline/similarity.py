@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.pipeline.dedup import drop_oversized_buckets
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -343,7 +345,7 @@ def rp_lsh_candidates(
     id_b. `max_bucket_size` caps the per-bucket pair blowup the same
     way the text-LSH path does: oversized buckets are dropped (they
     are near-constant embedding regions a verify stage should handle
-    by other means)."""
+    by other means), with the dropped mass warned (no silent caps)."""
     if nbits % bands != 0:
         raise ValueError(f"rp_lsh_candidates: bands={bands} must divide nbits={nbits}")
     width = nbits // bands
@@ -366,11 +368,8 @@ def rp_lsh_candidates(
     # would re-run the signature matmul kernel over the source
     banded = banded.localCheckpoint()
     if max_bucket_size is not None:
-        counts = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("_n"))
-        banded = banded.join(
-            counts.filter(F.col("_n") <= max_bucket_size).select("band", "key"),
-            ["band", "key"],
-            "left_semi",
+        banded = drop_oversized_buckets(
+            banded, "key", max_bucket_size, "rp_lsh_candidates"
         )
     a = banded.select("band", "key", F.col("id").alias("id_a"))
     b = banded.select("band", "key", F.col("id").alias("id_b"))

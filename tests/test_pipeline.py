@@ -651,11 +651,14 @@ def test_rp_lsh_candidates_find_planted_neardup(spark):
     # degenerate: many identical vectors -> one hot bucket; cap drops it
     clones = [(200 + i, list(base)) for i in range(20)]
     df2 = spark.createDataFrame(rows + clones, "vec_id long, embedding array<float>")
-    capped = rp_lsh_candidates(df2, nbits=16, bands=4, max_bucket_size=10)
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert not any(a >= 200 and b >= 200 for a, b in got)
 
     import pytest
+
+    # the cap is loud: the dropped buckets and rows are warned
+    with pytest.warns(UserWarning, match=r"rp_lsh_candidates: dropped [1-9]\d* bucket"):
+        capped = rp_lsh_candidates(df2, nbits=16, bands=4, max_bucket_size=10)
+    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
+    assert not any(a >= 200 and b >= 200 for a, b in got)
 
     with pytest.raises(ValueError, match="must divide"):
         rp_lsh_candidates(df, nbits=16, bands=3)

@@ -675,27 +675,6 @@ def test_weighted_pagerank_null_weight_rejected(spark):
         sssp(g, source=0, weight_col="w")
 
 
-def test_weighted_hot_broadcast_rejected_before_any_job(spark):
-    """weight_col + hot_threshold is rejected up front: no weight
-    validation count, no persisted hot-vertex set, no Spark job."""
-    from linkgraph.algorithms import pagerank
-    from linkgraph.graph import Graph, vertices_of
-
-    edf = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 2, 2.0)], "src long, dst long, w double"
-    )
-    verts = vertices_of(edf)
-    g = Graph(edges=edf, vertices=verts, num_vertices=verts.count(), num_edges=2)
-    sc = spark.sparkContext
-    sc.setJobGroup("pr_weight_hot", "pr_weight_hot")
-    try:
-        with pytest.raises(ValueError, match="weight_col \\+ hot_ids"):
-            pagerank(g, weight_col="w", hot_threshold=1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("pr_weight_hot") == []
-
-
 def test_scc_empty_graph(spark):
     """ADVICE r3: scc() on an empty vertex set must return an empty
     (id, scc) frame instead of raising IndexError."""

@@ -27,6 +27,35 @@ def catalog(spark, tmp_path, request):
     return ParquetManifestCatalog(spark, str(tmp_path / "warehouse"))
 
 
+def _stub_spark(for_name):
+    """A SparkSession stand-in whose JVM answers Class.forName only."""
+    from types import SimpleNamespace as NS
+
+    lang = NS(Class=NS(forName=for_name))
+    return NS(_jvm=NS(java=NS(lang=lang)))
+
+
+def test_iceberg_probe_lets_real_failures_propagate():
+    """Only a JVM-side error (ClassNotFoundException arrives as a
+    Py4JJavaError) means "no Iceberg"; anything else — a dead gateway,
+    a bug — must surface instead of silently picking the parquet
+    provider. No Spark needed: the JVM is a stub."""
+    from py4j.protocol import Py4JJavaError
+
+    from linkgraph.catalog import iceberg_available
+
+    def not_found(name):
+        raise Py4JJavaError("ClassNotFoundException", type("J", (), {"_target_id": "o1"})())
+
+    def broken(name):
+        raise RuntimeError("gateway down")
+
+    assert iceberg_available(_stub_spark(lambda name: object())) is True
+    assert iceberg_available(_stub_spark(not_found)) is False
+    with pytest.raises(RuntimeError, match="gateway down"):
+        iceberg_available(_stub_spark(broken))
+
+
 def ranks_of(state_df, n):
     rows = {r["id"]: r["rank"] for r in state_df.collect()}
     return np.array([rows[i] for i in range(n)])
