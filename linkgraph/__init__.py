@@ -26,8 +26,7 @@ Public surface:
                                pagerank_csr = PageRank with a CSR scatter
     checkpoint.CheckpointManager — snapshot/lineage/resume seam
     pipeline.*               — dedup (exact/MinHash-LSH/SimHash),
-                               similarity (cosine/IVF), textstats,
-                               multimodal (lib-free PPM/WAV/PPMV decode)
+                               similarity (cosine/IVF), textstats
 """
 
 __version__ = "0.1.0"

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 from dataclasses import dataclass
 
@@ -132,9 +131,6 @@ class ParquetManifestCatalog:
         if not snaps:
             raise FileNotFoundError(f"no snapshots for table {table}")
         return self.spark.read.parquet(*[s.path for s in snaps])
-
-    def drop(self, table: str) -> None:
-        shutil.rmtree(os.path.join(self.root, table), ignore_errors=True)
 
 
 class IcebergCatalog:

@@ -209,14 +209,12 @@ class CheckpointManager:
             if snap is not None and int(snap.meta["superstep"]) == superstep:
                 last = (superstep, 0.0)
         if last is not None and last[0] == superstep:
-            retag = getattr(self.catalog, "update_latest_meta", None)
-            if retag is not None:
-                retag(
-                    self._state_table(algo),
-                    extra,
-                    predicate=lambda m: m.get("run_id") == self.run_id,
-                )
-                return
+            self.catalog.update_latest_meta(
+                self._state_table(algo),
+                extra,
+                predicate=lambda m: m.get("run_id") == self.run_id,
+            )
+            return
         self.checkpoint(
             algo, superstep, state, aggregates=aggregates, extra_meta=extra,
             edges=edges, mutated=mutated,

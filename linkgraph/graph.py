@@ -89,12 +89,6 @@ def out_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def in_degrees(edges: DataFrame) -> DataFrame:
-    return edges.groupBy(F.col("dst").alias("id")).agg(
-        F.count(F.lit(1)).alias("indeg")
-    )
-
-
 def assign_dense_ids(
     names: DataFrame, col: str = "repo", partitions: int | None = None
 ) -> DataFrame:

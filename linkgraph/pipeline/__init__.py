@@ -23,7 +23,6 @@ from linkgraph.pipeline.dedup import (
 )
 from linkgraph.pipeline.decontam import contamination_report, decontaminate
 from linkgraph.pipeline.dedup import lsh_band_rows
-from linkgraph.pipeline.dedup_incremental import IncrementalDeduper
 from linkgraph.pipeline.similarity import cosine_topk, ivf_build, ivf_topk
 from linkgraph.pipeline.textstats import (
     token_count_col,
@@ -54,7 +53,6 @@ __all__ = [
     "dedup_near",
     "simhash_bits",
     "lsh_band_rows",
-    "IncrementalDeduper",
     "contamination_report",
     "decontaminate",
     "cosine_topk",

@@ -144,12 +144,10 @@ def lsh_band_rows(
 ) -> DataFrame:
     """(id, band, bh) — one LSH bucket row per (doc, band).
 
-    Band hash = hash64 of the band's signature slice; depends only on
-    the signature (hence only on the text), which is what makes the
-    banded table an INDEX: it can be persisted and joined against by
-    later batches (dedup_incremental) — a doc's bucket membership never
-    changes. Shared by lsh_candidate_pairs (in-memory self-join) and
-    the incremental index (catalog-persisted)."""
+    Band hash = hash64 of the band's signature slice; it depends only on
+    the signature (hence only on the text), so a doc's bucket
+    membership never changes. lsh_candidate_pairs self-joins these
+    rows on (band, bh)."""
     if num_hashes is None or int(num_hashes) <= 0:
         raise ValueError(f"num_hashes must be positive, got {num_hashes}")
     sig_len = int(num_hashes)

@@ -21,7 +21,6 @@ from linkgraph.pipeline import (
     simhash_bits,
 )
 from linkgraph.pipeline.dedup import hamming
-from linkgraph.pipeline.multimodal import extract_features, frame_sample, synth_media
 
 
 def docs_df(spark):
@@ -158,90 +157,6 @@ def test_lsh_bucket_cap_drops_oversized_and_warns(spark):
         n = pairs.count()
     assert n == 0  # the single oversized bucket was dropped entirely
     assert any("dropped" in str(w.message) for w in caught)
-
-
-def test_incremental_dedup_equals_full_recompute(spark, tmp_path):
-    """Batch-incremental dedup over the persisted LSH index ==
-    full dedup_assignments recompute over the union, on a planted
-    fixture with exact dups and near-dups WITHIN and ACROSS batches
-    (an across-batch near-dup can only be found by joining the new
-    batch's bands against the stored index)."""
-    from linkgraph.catalog import ParquetManifestCatalog
-    from linkgraph.pipeline import IncrementalDeduper
-    from linkgraph.pipeline.dedup import dedup_assignments
-
-    batch1 = spark.createDataFrame(
-        [
-            (0, "the quick brown fox jumps over the lazy dog tonight"),
-            (1, "the quick brown fox jumps over the lazy dog tonight"),  # exact dup
-            (2, "an unrelated essay about distributed shuffle design"),
-            (3, "numerical recipes for eigenvalue decomposition at scale"),
-        ],
-        "doc_id long, text string",
-    )
-    batch2 = spark.createDataFrame(
-        [
-            # near-dup of doc 0 — across batches, via the stored index
-            (10, "the quick brown fox jumped over the lazy dog tonight!"),
-            (11, "an unrelated essay about distributed shuffle design"),  # exact dup of 2
-            (12, "completely novel content with no relatives anywhere"),
-            # near-dup pair within batch 2
-            (13, "recipes for eigenvalue decomposition at petabyte scale"),
-        ],
-        "doc_id long, text string",
-    )
-    params = dict(k=5, num_hashes=16, bands=4, threshold=0.5)
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "wh"))
-    inc = IncrementalDeduper(cat, max_bucket_size=None, **params)
-
-    a1 = {r["doc_id"]: r["canonical_id"] for r in inc.add_batch(batch1).collect()}
-    full1 = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_assignments(batch1, max_bucket_size=None, **params).collect()
-    }
-    assert a1 == full1
-
-    a2 = {r["doc_id"]: r["canonical_id"] for r in inc.add_batch(batch2).collect()}
-    union = batch1.unionByName(batch2)
-    full2 = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_assignments(union, max_bucket_size=None, **params).collect()
-    }
-    assert a2 == full2
-    # the planted relations actually collapsed
-    assert a2[1] == a2[0] and a2[11] == a2[2] and a2[10] == a2[0]
-    assert a2[12] == 12
-
-    # changed parameters must be rejected (they invalidate the index)
-    import pytest
-
-    bad = IncrementalDeduper(cat, k=7, num_hashes=16, bands=4)
-    with pytest.raises(ValueError, match="index was built with"):
-        bad.add_batch(batch2)
-
-
-def test_incremental_dedup_index_stores_distinct_content_once(spark, tmp_path):
-    """The index is keyed by content hash: a batch of N copies of one
-    text appends exactly ONE set of shingle/band rows, and a later
-    batch repeating known content appends none."""
-    from linkgraph.catalog import ParquetManifestCatalog
-    from linkgraph.pipeline import IncrementalDeduper
-
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "wh2"))
-    inc = IncrementalDeduper(cat, k=4, num_hashes=8, bands=2)
-    same = "identical boilerplate page content here"
-    b1 = spark.createDataFrame(
-        [(i, same) for i in range(5)], "doc_id long, text string"
-    )
-    inc.add_batch(b1)
-    assert cat.read_all("dedupidx_banded").count() == 2  # 1 content × 2 bands
-    b2 = spark.createDataFrame(
-        [(100, same), (101, "something genuinely new appears")],
-        "doc_id long, text string",
-    )
-    a = {r["doc_id"]: r["canonical_id"] for r in inc.add_batch(b2).collect()}
-    assert cat.read_all("dedupidx_banded").count() == 4  # +1 content × 2 bands
-    assert a[100] == 0 and a[101] == 101
 
 
 def test_contamination_report_finds_planted_eval_leak(spark):
@@ -383,78 +298,6 @@ def test_text_ops(spark):
     assert all(0.0 <= v <= 1.0 for v in q.values())
     langs = {r["doc_id"]: r["lang_pred"] for r in language_id(df).collect()}
     assert langs[0] == "en" and langs[3] == "fr" and langs[5] == "es"
-
-
-def test_multimodal_plumbing(spark):
-    media = synth_media(spark, 30)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["features"]) == 16 for r in rows)
-    # determinism: same payload → same features across separate runs
-    again = {r["media_id"]: r["features"] for r in extract_features(media).collect()}
-    first = {r["media_id"]: r["features"] for r in rows}
-    assert again == first
-    frames = frame_sample(media, every_ms=500)
-    vid_count = media.filter("kind='video'").count()
-    assert frames.select("media_id").distinct().count() == vid_count
-    assert frames.filter("ts_ms % 500 != 0").count() == 0
-
-
-def test_multimodal_decode_is_real(spark):
-    """The lib-free decoders produce verifiable values, not hashes:
-    a solid-red PPM must yield mean_rgb=(1,0,0); a full-scale sine WAV
-    must yield rms≈1/√2; a 2-frame PPMV must count 2 frames."""
-    import math
-
-    import numpy as np
-
-    from linkgraph.pipeline.multimodal import (
-        _decode_payload,
-        decode_ppm,
-        decode_wav_pcm16,
-        encode_ppm,
-        encode_ppmv,
-        encode_wav_pcm16,
-    )
-
-    red = np.zeros((4, 6, 3), np.uint8)
-    red[:, :, 0] = 255
-    f = _decode_payload(encode_ppm(red), "image")
-    assert f[2] == 1.0 and f[3] == 0.0 and f[4] == 0.0  # mean r,g,b
-    assert decode_ppm(encode_ppm(red)).shape == (4, 6, 3)
-
-    t = np.arange(8000, dtype=np.float64)
-    sine = (np.sin(2 * np.pi * 440 * t / 8000) * 32767).astype(np.int16)
-    fa = _decode_payload(encode_wav_pcm16(sine), "audio")
-    assert abs(fa[0] - 1.0) < 1e-9  # duration: 8000 samples @ 8 kHz
-    assert abs(fa[1] - 1 / math.sqrt(2)) < 0.01  # rms of a sine
-    samples, rate = decode_wav_pcm16(encode_wav_pcm16(sine))
-    assert rate == 8000 and samples.size == 8000
-
-    blue = np.zeros((4, 6, 3), np.uint8)
-    blue[:, :, 2] = 255
-    fv = _decode_payload(encode_ppmv([red, blue]), "video")
-    assert fv[0] == 2 / 100.0  # frame count feature
-    assert fv[15] > 0.0  # motion between a red and a blue frame
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        _decode_payload(b"garbage-bytes", "image")
-    with pytest.raises(NotImplementedError):
-        _decode_payload(b"\xff\xd8\xff rest-of-jpeg", "image")  # codec seam
-
-
-def test_multimodal_resize(spark):
-    from linkgraph.pipeline.multimodal import decode_ppm, resize_images
-
-    media = synth_media(spark, 12)
-    small = resize_images(media, 8, 5)
-    rows = small.collect()
-    assert len(rows) == media.filter("kind='image'").count()
-    for r in rows:
-        assert decode_ppm(bytes(r["payload"])).shape == (5, 8, 3)
 
 
 def test_jaccard_verify_is_candidate_driven(spark):
