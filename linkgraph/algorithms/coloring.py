@@ -25,11 +25,12 @@ i.e. candidates = 0 plus every used color + 1, anti-join the used set,
 take the min. No collect_set, no per-vertex array proportional to the
 degree — a hub's candidates stay |S|+1 rows, map-side combinable.
 
-Spark shape: one superstep = one lazy plan — the MIS-style
-neighborhood-min combine over the uncolored frontier, the winner
-filter, one winner-adjacency join for used colors, the candidate
-anti-join + min-agg for the mex, and the state merge. Message volume
-is O(|E over uncolored|), shrinking geometrically per round.
+Spark shape: one superstep = one lazy plan — MIS's winner round
+(`mis.luby_winners`: the neighborhood-min combine over the uncolored
+frontier and the winner filter), one winner-adjacency join for used
+colors, the candidate anti-join + min-agg for the mex, and the state
+merge. Message volume is O(|E over uncolored|), shrinking
+geometrically per round.
 """
 
 from __future__ import annotations
@@ -39,37 +40,14 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
 from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
-from linkgraph.algorithms.mis import luby_priority
+from linkgraph.algorithms.mis import luby_winners
 
 
 def coloring_spec() -> PregelSpec:
     def step(links, state, frontier, aggs):
         # SQL-oracle round index is 1-based; superstep is 0-based
         r = int(aggs["_superstep"]) + 1
-        unc = state.filter(F.col("color") == -1).select(
-            "id", luby_priority(F.col("id"), r).alias("p")
-        ).localCheckpoint(eager=False)
-        # neighborhood min of (p, id) over UNCOLORED neighbors
-        nmin = (
-            links.join(
-                unc.select(
-                    F.col("id").alias("src"),
-                    F.struct(F.col("p"), F.col("id").alias("nid")).alias("np"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("np").alias("m"))
-        )
-        winners = (
-            unc.join(nmin, "id", "left")
-            .filter(
-                F.col("m").isNull()
-                | (F.struct(F.col("p"), F.col("id").alias("nid")) < F.col("m"))
-            )
-            .select("id")
-            .localCheckpoint(eager=False)
-        )
+        winners = luby_winners(links, state.filter(F.col("color") == -1), r)
         # colors already used in each winner's neighborhood
         used = (
             links.join(winners.withColumnRenamed("id", "dst"), "dst")
@@ -115,7 +93,6 @@ def coloring_spec() -> PregelSpec:
             "id", F.lit(-1).cast("long").alias("color")
         ),
         prepare_links=symmetrize,
-        links_prepartitioned=True,  # symmetrize emits hash(src) (r6)
         step=step,
         metrics={"uncolored": F.sum((F.col("color") == -1).cast("long"))},
         halt=lambda m: int(m.get("uncolored") or 0) == 0,

@@ -10,19 +10,49 @@ and schedule-independent; supersteps = O(component diameter).
 Expressed as a PregelSpec over the generic fused-superstep driver
 (pregel.pregel_run): one combine+apply shuffle per superstep carrying
 messages AND old labels as marker rows; the frontier filter implements
-vote-to-halt (B6) — the scatter join's state side shrinks every
-superstep, and AQE re-plans it to a broadcast join once the frontier
-fits the threshold (the classic long-tail speedup for high-diameter
-graphs).
+vote-to-halt (B6) — only changed vertices scatter, so the scatter
+join's state side shrinks every superstep. The superstep itself is
+`min_relax`, the one min-relaxation kernel SSSP and SCC also run.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
 from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
+
+
+def min_relax(
+    links: DataFrame, state: DataFrame, frontier: DataFrame, col: str, msg: Column
+) -> DataFrame:
+    """One lazy min-relaxation superstep -> (id, col, changed).
+
+    Every `frontier` row scatters `msg` (an expression over the links
+    and the frontier's columns) along its out-links; the old `col` of
+    every `state` row rides the same shuffle as a marker row, and ONE
+    groupBy(id).agg(min(msg), max(old)) is both the combiner and the
+    apply: col = min(old, min msgs), `changed` iff a message lowered
+    it. HashMin components, SSSP (msg = dist + w) and SCC's coloring
+    and backward-reach phases are all this step."""
+    null = F.lit(None).cast(state.schema[col].dataType)
+    msgs = links.join(frontier.withColumnRenamed("id", "src"), "src").select(
+        "dst", msg.alias("msg"), null.alias("old")
+    )
+    carried = state.select(
+        F.col("id").alias("dst"), null.alias("msg"), F.col(col).alias("old")
+    )
+    return (
+        msgs.unionByName(carried)
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("msg").alias("m"), F.max("old").alias("o"))
+        .select(
+            "id",
+            F.least(F.coalesce(F.col("m"), F.col("o")), F.col("o")).alias(col),
+            F.coalesce(F.col("m") < F.col("o"), F.lit(False)).alias("changed"),
+        )
+    )
 
 
 def components_spec(estimate_components: bool = False) -> PregelSpec:
@@ -36,24 +66,7 @@ def components_spec(estimate_components: bool = False) -> PregelSpec:
     per partition, constant in |V|."""
 
     def step(links, state, frontier, aggs):
-        msgs = links.join(frontier.withColumnRenamed("id", "src"), "src").select(
-            "dst", F.col("comp").alias("msg"), F.lit(None).cast("long").alias("old")
-        )
-        carried = state.select(
-            F.col("id").alias("dst"),
-            F.lit(None).cast("long").alias("msg"),
-            F.col("comp").alias("old"),
-        )
-        return (
-            msgs.unionByName(carried)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("msg").alias("m"), F.max("old").alias("o"))
-            .select(
-                "id",
-                F.least(F.coalesce(F.col("m"), F.col("o")), F.col("o")).alias("comp"),
-                F.coalesce(F.col("m") < F.col("o"), F.lit(False)).alias("changed"),
-            )
-        )
+        return min_relax(links, state, frontier, "comp", F.col("comp"))
 
     metrics = {"active": F.sum(F.col("changed").cast("long"))}
     if estimate_components:
@@ -67,7 +80,6 @@ def components_spec(estimate_components: bool = False) -> PregelSpec:
         metrics=metrics,
         halt=lambda a: int(a.get("active") or 0) == 0,
         frontier_filter="changed",
-        links_prepartitioned=True,  # prepare_links = symmetrize (hash(src))
     )
 
 

@@ -39,6 +39,8 @@ number, so the fixpoint is exact and schedule-independent (confluent).
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -118,6 +120,16 @@ def kcore_spec(k: int, degrees: DataFrame) -> PregelSpec:
     )
 
 
+def _undirected(graph: Graph) -> tuple[Graph, DataFrame]:
+    """(the symmetrized graph, its undirected degree per id) — the input
+    of both k-core programs, whose links are the symmetrized edges."""
+    sym = symmetrize(graph.edges)
+    degrees = sym.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    return replace(graph, edges=sym), degrees
+
+
 def kcore(
     graph: Graph, k: int, max_supersteps: int = 10_000, checkpointer=None
 ) -> tuple[DataFrame, RunInfo]:
@@ -129,16 +141,7 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"kcore: k must be >= 1, got {k}")
-    sym = symmetrize(graph.edges)
-    degrees = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    sym_graph = Graph(
-        edges=sym,
-        vertices=graph.vertices,
-        num_vertices=graph.num_vertices,
-        num_edges=graph.num_edges,
-    )
+    sym_graph, degrees = _undirected(graph)
     return pregel_run(
         sym_graph,
         kcore_spec(k, degrees),
@@ -237,16 +240,7 @@ def core_number(
     ["degeneracy"] is the graph degeneracy (max core number).
     Agrees with peeling (`kcore`): {id | core >= k} == the k-core.
     """
-    sym = symmetrize(graph.edges)
-    degrees = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    sym_graph = Graph(
-        edges=sym,
-        vertices=graph.vertices,
-        num_vertices=graph.num_vertices,
-        num_edges=graph.num_edges,
-    )
+    sym_graph, degrees = _undirected(graph)
     state, info = pregel_run(
         sym_graph,
         core_number_spec(degrees),

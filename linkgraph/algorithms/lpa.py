@@ -79,7 +79,6 @@ def lpa_spec(early_stop: bool = True) -> PregelSpec:
         metrics={"active": F.sum(F.col("changed").cast("long"))},
         halt=(lambda a: int(a.get("active") or 0) == 0) if early_stop else (lambda a: False),
         frontier_filter=None,  # sync LPA: every vertex scatters each iter
-        links_prepartitioned=True,  # prepare_links = symmetrize (hash(src))
     )
 
 

@@ -22,10 +22,11 @@ strict total order. The round index comes from the engine's reserved
 so the sequence is identical under checkpoint/resume.
 
 Spark shape: a PregelSpec over `pregel_run` on the SYMMETRIZED links
-relation. One round = one superstep: the undecided frontier scatters
-(p, id) to neighbors, a single groupBy(id).min(struct(p, id)) is the
-combiner+apply (map-side partial, |V|-bounded shuffle), winners are
-the undecided vertices beating their neighborhood min, and the
+relation. One round = one superstep: `luby_winners` (also coloring's
+winner round) scatters the undecided frontier's (p, id) to neighbors,
+a single groupBy(id).min(struct(p, id)) is the combiner+apply
+(map-side partial, |V|-bounded shuffle), and the winners are the
+undecided vertices beating their neighborhood min; the
 winner→neighbor exclusion wave is a second bounded join in the same
 lazy plan. State is one byte-ish column `st`: 0 undecided, 1 in MIS,
 2 excluded — integer-exact, so the driver oracle needs no rounding.
@@ -52,45 +53,48 @@ def luby_priority(id_col, round_i):
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
+def luby_winners(links: DataFrame, candidates: DataFrame, r: int) -> DataFrame:
+    """(id) of the round-r Luby winners: the `candidates` rows whose
+    (luby_priority, id) strictly beats every candidate neighbor's over
+    `links`. The winner round of both MIS and Jones–Plassmann coloring.
+
+    Lazy localCheckpoint cuts: the priority frame feeds both the
+    scatter and the winner filter, and the winners feed two consumers
+    in each caller's superstep — without the cuts each reference
+    duplicates the whole upstream subtree in the superstep plan (~34
+    scans of the links relation, measured). Cut, every shared frame
+    computes once inside the same barrier job."""
+    und = candidates.select(
+        "id", luby_priority(F.col("id"), r).alias("p")
+    ).localCheckpoint(eager=False)
+    # neighborhood min over candidate neighbors' (p, id)
+    nmin = (
+        links.join(
+            und.select(
+                F.col("id").alias("src"),
+                F.struct(F.col("p"), F.col("id").alias("nid")).alias("np"),
+            ),
+            "src",
+        )
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("np").alias("m"))
+    )
+    return (
+        und.join(nmin, "id", "left")
+        .filter(
+            F.col("m").isNull()
+            | (F.struct(F.col("p"), F.col("id").alias("nid")) < F.col("m"))
+        )
+        .select("id")
+        .localCheckpoint(eager=False)
+    )
+
+
 def mis_spec() -> PregelSpec:
     def step(links, state, frontier, aggs):
         # SQL-oracle round index is 1-based; superstep is 0-based
         r = int(aggs["_superstep"]) + 1
-        # lazy localCheckpoint cuts: `und` feeds both the scatter and
-        # the winner filter, `winners` feeds both the exclusion wave
-        # and the final apply — without the cuts each reference
-        # duplicates the whole upstream subtree in the superstep plan
-        # (~34 scans of the links relation, measured). Cut, every
-        # shared frame computes once inside the same barrier job.
-        und = state.filter(F.col("st") == 0).select(
-            "id", luby_priority(F.col("id"), r).alias("p")
-        ).localCheckpoint(eager=False)
-        # neighborhood min over undecided neighbors' (p, id)
-        nmin = (
-            links.join(
-                und.select(
-                    F.col("id").alias("src"),
-                    F.struct(
-                        F.col("p"), F.col("id").alias("nid")
-                    ).alias("np"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("np").alias("m"))
-        )
-        winners = (
-            und.join(nmin, "id", "left")
-            .filter(
-                F.col("m").isNull()
-                | (
-                    F.struct(F.col("p"), F.col("id").alias("nid"))
-                    < F.col("m")
-                )
-            )
-            .select("id")
-            .localCheckpoint(eager=False)
-        )
+        winners = luby_winners(links, state.filter(F.col("st") == 0), r)
         excluded = (
             links.join(winners.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"))
@@ -117,7 +121,6 @@ def mis_spec() -> PregelSpec:
             "id", F.lit(0).cast("long").alias("st")
         ),
         prepare_links=symmetrize,
-        links_prepartitioned=True,  # symmetrize emits hash(src) (r6)
         step=step,
         metrics={"undecided": F.sum((F.col("st") == 0).cast("long"))},
         halt=lambda m: int(m.get("undecided") or 0) == 0,

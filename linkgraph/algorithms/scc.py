@@ -16,16 +16,18 @@ BSP/Pregel SCC construction (FW-BW coloring):
    flagged set IS SCC(root) — assign scc = color, remove, repeat.
    All color classes are processed simultaneously per round.
 
-Every phase is a fixpoint of one combine+apply exchange per superstep
-(the same fused shape as the PregelSpec algorithms; hand-rolled here
-because the outer driver interleaves three different inner fixpoints
-over a shrinking vertex set). Confluent (min / or are idempotent,
-commutative, associative), so the result is exact and
-schedule-independent — property-tested against networkx.
+Every phase is a fixpoint of one combine+apply exchange per superstep.
+Coloring and backward reach run `components.min_relax`, the step of
+HashMin components, under a loop of their own: the outer driver
+interleaves three different inner fixpoints over a shrinking vertex
+set. Confluent (min / or are idempotent, commutative, associative), so
+the result is exact and schedule-independent — property-tested against
+networkx.
 
 Scale shape: per superstep the shuffle carries only the remaining
-subgraph's messages; `remaining` shrinks every outer round, and AQE
-re-plans the semi-joins to broadcasts once it fits. Worst case is
+subgraph's messages, and `remaining` shrinks every outer round. The
+whole loop runs under `fixpoint` (AQE off), so the joins keep the plan
+they start with as it shrinks. Worst case is
 O(#SCC-DAG-levels) outer rounds after trimming; each inner fixpoint is
 O(diameter of remaining). Every inner superstep and trim round is one
 `pregel.fixpoint` barrier (lazy localCheckpoint + observed metrics),
@@ -37,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.algorithms.components import min_relax
 from linkgraph.graph import Graph
 from linkgraph.pregel import Fixpoint, RunInfo, fixpoint
 
@@ -45,29 +48,17 @@ def _min_fixpoint(
     edges: DataFrame, labels: DataFrame, fx: Fixpoint
 ) -> tuple[DataFrame, int]:
     """labels(id, lab) -> fixpoint of lab(dst) = min(lab(dst), lab(src))
-    over the given directed edges. One exchange per superstep; the
-    frontier (changed rows) is the only scatter source after step 1.
+    over the given directed edges. Each superstep is one
+    `components.min_relax` step (one exchange); the frontier (changed
+    rows) is the only scatter source after step 1.
 
     Returns (labels, n_zero) where n_zero = #vertices with lab == 0 at
     convergence, computed by the SAME final-barrier aggregate (no extra
     action) — the backward phase's reach count rides it for free."""
     frontier = labels
     for _ in range(100_000):  # bounded by remaining-subgraph diameter
-        msgs = edges.join(
-            frontier.withColumnRenamed("id", "src"), "src"
-        ).select("dst", F.col("lab").alias("m"), F.lit(None).cast("long").alias("o"))
-        carried = labels.select(
-            F.col("id").alias("dst"), F.lit(None).cast("long").alias("m"), F.col("lab").alias("o")
-        )
         new, row = fx.barrier(
-            msgs.unionByName(carried)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("m").alias("m"), F.max("o").alias("o"))
-            .select(
-                "id",
-                F.least(F.coalesce(F.col("m"), F.col("o")), F.col("o")).alias("lab"),
-                F.coalesce(F.col("m") < F.col("o"), F.lit(False)).alias("changed"),
-            ),
+            min_relax(edges, labels, frontier, "lab", F.col("lab")),
             {
                 "active": F.sum(F.col("changed").cast("long")),
                 "z": F.sum((F.col("lab") == 0).cast("long")),

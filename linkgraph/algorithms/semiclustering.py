@@ -190,7 +190,6 @@ def semi_clustering(
         state_cols=("clusters",),
         init_state=init_state,
         prepare_links=lambda e: symmetrize(e),
-        links_prepartitioned=True,  # symmetrize emits hash(src) (r6)
         step=step,
         metrics={"active": F.sum(F.col("changed").cast("long"))},
         halt=lambda a: int(a.get("active") or 0) == 0,

@@ -1,7 +1,8 @@
 """Single-source shortest paths (paper §5.2) — parity extra, SURVEY C5.
 
-A PregelSpec with a `min` combiner and `dist + weight` scatter — same
-frontier machinery as connected components via the generic driver.
+A PregelSpec whose superstep is `components.min_relax`, the
+min-relaxation kernel connected components runs, with a
+`dist + weight` message and a frontier that never scatters +inf.
 Unweighted edges default to weight 1.0. Unreachable vertices report
 +inf.
 """
@@ -11,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.algorithms.components import min_relax
 from linkgraph.graph import Graph
 from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
 
@@ -29,26 +31,7 @@ def sssp_spec(source: int, weight_col: str | None = None) -> PregelSpec:
         # never scatter +inf (unreached frontier members on the first /
         # post-resume superstep): an inf message can't lower any dist
         live = frontier.filter(F.col("dist") != INF)
-        msgs = links.join(live.withColumnRenamed("id", "src"), "src").select(
-            "dst",
-            (F.col("dist") + F.col("w")).alias("msg"),
-            F.lit(None).cast("double").alias("old"),
-        )
-        carried = state.select(
-            F.col("id").alias("dst"),
-            F.lit(None).cast("double").alias("msg"),
-            F.col("dist").alias("old"),
-        )
-        return (
-            msgs.unionByName(carried)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("msg").alias("m"), F.max("old").alias("o"))
-            .select(
-                "id",
-                F.least(F.coalesce(F.col("m"), F.col("o")), F.col("o")).alias("dist"),
-                F.coalesce(F.col("m") < F.col("o"), F.lit(False)).alias("changed"),
-            )
-        )
+        return min_relax(links, state, live, "dist", F.col("dist") + F.col("w"))
 
     return PregelSpec(
         algo="sssp",

@@ -11,7 +11,8 @@ discovered exactly once — at edge (a,b), as the common out-neighbor c
 of a and b. Hub vertices in power-law graphs keep only their
 above-rank neighbors, so adjacency lists are short (O(√E) amortized)
 and no join row blows up. Everything is JVM-side DataFrame work
-(`sort_array(collect_list)`, `array_intersect`) — no Python boundary.
+(sorted adjacency arrays and their intersection, `oriented_wedges`) —
+no Python boundary. k-truss runs the same plan for its edge support.
 
 Per-vertex credit: a triangle found at (a,b) with apex c credits a, b
 (the edge endpoints, +size each) and each apex (+1 via explode).
@@ -31,18 +32,21 @@ from linkgraph.graph import Graph, symmetrize
 from linkgraph.pregel import RunInfo, fixpoint
 
 
-def _oriented_wedges(graph: Graph) -> tuple[DataFrame, DataFrame]:
-    """(deg(id, d), wedges(u, v, apexes, c)) — the shared degree-ordered
-    triangle discovery plan (lazy; callers decide persistence)."""
-    und = symmetrize(graph.edges)  # both directions, simple
-
+def oriented_wedges(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(deg(id, d), wedges(u, v, apexes, c)) over `und`, a symmetrized
+    simple (src, dst) relation (both directions of every edge) — the
+    one degree-ordered triangle discovery plan, shared by triangle
+    counting, clustering and k-truss (lazy; callers decide
+    persistence). Each triangle is one wedge row: its lowest-rank edge
+    (u, v) with the apex c in `apexes`."""
     # Orientation rank: (degree, id) totally orders vertices.
-    # r6: symmetrize emits und hash(src)-partitioned, so the degree
-    # aggregate and the ds-join need no exchange, and the old explicit
-    # repartition(p, src) after the joins was redundant — when the deg
-    # joins broadcast (|V| ≪ |E|) the src partitioning survives to the
-    # adjacency groupBy untouched, and when they shuffle at scale
-    # Catalyst inserts exactly the exchange the groupBy needs anyway.
+    # An und from symmetrize is hash(src)-partitioned (r6), so the
+    # degree aggregate and the ds-join need no exchange. No explicit
+    # repartition(p, src) follows the joins: when the deg joins
+    # broadcast (|V| ≪ |E|) the src partitioning survives to the
+    # adjacency groupBy untouched, and when they shuffle, or und is not
+    # partitioned (k-truss), Catalyst inserts exactly the exchange the
+    # groupBy needs anyway.
     deg = und.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
     oriented = (
         und.join(deg.select(F.col("id").alias("src"), F.col("d").alias("ds")), "src")
@@ -106,7 +110,7 @@ def triangle_counts(
         fx.info.converged = True
         # the wedges are checkpointed by the barrier that sums the total
         wedges, vals = fx.barrier(
-            _oriented_wedges(graph)[1], {"total": F.sum("c")}
+            oriented_wedges(symmetrize(graph.edges))[1], {"total": F.sum("c")}
         )
         total = int(vals["total"] or 0)
         counts = None
@@ -130,7 +134,7 @@ def clustering_coefficient(graph: Graph) -> DataFrame:
     0.0 when deg(v) < 2. Shares the degree-ordered wedge plan with
     triangle_counts but skips its global-total action and reuses ONE
     degree aggregate for both the orientation and the final formula."""
-    deg, wedges = _oriented_wedges(graph)
+    deg, wedges = oriented_wedges(symmetrize(graph.edges))
     per_vertex = graph.vertices.join(_credit_sums(wedges), "id", "left_outer").select(
         "id",
         F.coalesce(F.col("triangles"), F.lit(0)).cast("long").alias("triangles"),

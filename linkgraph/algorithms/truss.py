@@ -11,18 +11,19 @@ or past convergence yields the identical edge set — the driver oracle
 exploits this the same way the k-core one does.
 
 Plan per round: triangle support over the surviving canonical edge
-set using the same degree-ordered orientation as triangle counting
-(C4) — each triangle {a,b,c} is discovered exactly once at its lowest-
-rank edge via `array_intersect` of above-rank adjacency lists, so hub
-vertices never enumerate their full neighborhood squared — then each
-triangle credits its three canonical edges (the (u,v) wedge row
-carries the apex count; the two apex-side edges come from ONE explode
-whose row volume is the triangle count, not the wedge volume). One
-map-side-combined groupBy sums support; an edges⋈support left join +
-filter peels. Each round is one `pregel.fixpoint` barrier: it
-checkpoints the surviving edge set and counts it (the count decides
-convergence) in a single action, under the fixed-plan settings
-triangle counting also runs with.
+set from `triangles.oriented_wedges`, the degree-ordered wedge plan of
+triangle counting (C4) — each triangle {a,b,c} is discovered exactly
+once at its lowest-rank edge by intersecting above-rank adjacency
+lists, so hub vertices never enumerate their full neighborhood
+squared. k-truss adds only the edge credits: each triangle credits
+its three canonical edges (the (u,v) wedge row carries the apex
+count; the two apex-side edges come from ONE explode whose row volume
+is the triangle count, not the wedge volume). One map-side-combined
+groupBy sums support; an edges⋈support left join + filter peels.
+Each round is one `pregel.fixpoint` barrier: it checkpoints the
+surviving edge set and counts it (the count decides convergence) in
+a single action, under the fixed-plan settings triangle counting
+also runs with.
 
 Scale shape: per round cost == one C4 triangle pass over the current
 subgraph (shrinking every round). Rounds are bounded by the peeling
@@ -37,38 +38,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.algorithms.triangles import oriented_wedges
 from linkgraph.graph import Graph, canonical_undirected
 from linkgraph.pregel import RunInfo, fixpoint
 
 
 def _edge_support(edges: DataFrame) -> DataFrame:
     """(u, v, supp) triangle support per canonical edge; edges in no
-    triangle are absent (callers coalesce to 0)."""
-    spark = edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = und.groupBy(F.col("u").alias("id")).agg(F.count(F.lit(1)).alias("d"))
-    oriented = (
-        und.join(deg.select(F.col("id").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("id").alias("v"), F.col("d").alias("dv")), "v")
-        .filter(
-            (F.col("dv") > F.col("du"))
-            | ((F.col("dv") == F.col("du")) & (F.col("v") > F.col("u")))
+    triangle are absent (callers coalesce to 0). The wedges come from
+    the symmetrized edge set: canonical u < v edges are simple, so the
+    two directions need no dedup."""
+    _, wedges = oriented_wedges(
+        edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
+            edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
         )
-        .select("u", "v")
-        .repartition(p, "u")
-    )
-    adj = oriented.groupBy(F.col("u").alias("id")).agg(
-        F.sort_array(F.collect_list("v")).alias("nbrs")
-    )
-    wedges = (
-        oriented.join(adj.select(F.col("id").alias("u"), F.col("nbrs").alias("nu")), "u")
-        .join(adj.select(F.col("id").alias("v"), F.col("nbrs").alias("nv")), "v")
-        .select("u", "v", F.array_intersect("nu", "nv").alias("apexes"))
-        .withColumn("c", F.size("apexes").cast("long"))
-        .filter(F.col("c") > 0)
     )
     # the wedge edge takes the whole apex count; each apex credits the
     # two side edges (explode volume = total triangles, not wedges)

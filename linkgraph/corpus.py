@@ -222,15 +222,14 @@ def unresolved_imports(imports: DataFrame, exports: DataFrame) -> DataFrame:
 
 
 def derive_edges(
-    corpus: DataFrame, exports: DataFrame, use_arrow: bool = False
+    corpus: DataFrame, exports: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full A1–A9 pipeline.
 
     Returns (edges_by_name(src_repo, dst_repo), idmap(id, repo),
     edges(src, dst) dense-encoded).
     """
-    extractor = extract_imports_arrow if use_arrow else extract_imports
-    imports = extractor(corpus)
+    imports = extract_imports(corpus)
     # r6: pin the resolved name-edge table (lazy localCheckpoint — the
     # first consumer materializes it). It fans out into BOTH the dense-
     # id path (via verts) and the final encode join; without the pin

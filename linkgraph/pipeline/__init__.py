@@ -22,7 +22,6 @@ from linkgraph.pipeline.dedup import (
     simhash_bits,
 )
 from linkgraph.pipeline.decontam import contamination_report, decontaminate
-from linkgraph.pipeline.dedup import lsh_band_rows
 from linkgraph.pipeline.similarity import cosine_topk, ivf_build, ivf_topk
 from linkgraph.pipeline.textstats import (
     token_count_col,
@@ -52,7 +51,6 @@ __all__ = [
     "dedup_assignments",
     "dedup_near",
     "simhash_bits",
-    "lsh_band_rows",
     "contamination_report",
     "decontaminate",
     "cosine_topk",

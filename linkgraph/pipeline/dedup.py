@@ -216,11 +216,37 @@ def drop_oversized_buckets(
             f"{caller}: dropped {dropped['buckets']} bucket(s) "
             f"over max_bucket_size={max_bucket_size} "
             f"({dropped['rows']} banded rows) from candidate generation",
-            stacklevel=3,
+            stacklevel=4,
         )
     # oversized buckets are few by construction — broadcast anti-join
     return banded.join(
         F.broadcast(big.select("band", key)), ["band", key], "left_anti"
+    )
+
+
+def lsh_bucket_pairs(
+    banded: DataFrame, key: str, max_bucket_size: int | None, caller: str
+) -> DataFrame:
+    """Distinct candidate pairs (id_a, id_b), id_a < id_b, of the
+    banded rows (id, band, key) that share a (band, key) bucket — the
+    tail of both MinHash-LSH and RP-LSH candidate generation.
+
+    Materializes the banded table ONCE: the pair self-join reads it
+    twice (three times with the cap's bucket-size count), and each
+    read would otherwise replay the whole signature pipeline upstream —
+    the expensive part. |docs|×bands rows of three fixed-width columns
+    is tiny next to that recompute. A max_bucket_size drops the
+    oversized buckets first (drop_oversized_buckets)."""
+    banded = banded.localCheckpoint()
+    if max_bucket_size is not None:
+        banded = drop_oversized_buckets(banded, key, max_bucket_size, caller)
+    a = banded.select(F.col("id").alias("id_a"), "band", key)
+    b = banded.select(F.col("id").alias("id_b"), "band", key)
+    return (
+        a.join(b, ["band", key])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
     )
 
 
@@ -238,9 +264,9 @@ def lsh_candidate_pairs(
 
     num_hashes is the signature length. Pass it (every caller knows it
     from minhash_signatures) — probing it from the data costs one full
-    execution of the shingle→hash→min pipeline BEFORE the
-    localCheckpoint below materializes it. The probe fallback exists
-    only for signatures of unknown provenance.
+    execution of the shingle→hash→min pipeline BEFORE the banded
+    table's localCheckpoint (lsh_bucket_pairs) materializes it. The
+    probe fallback exists only for signatures of unknown provenance.
 
     max_bucket_size bounds the m² blowup of a bucket of m
     near-identical docs (guaranteed on dup-heavy crawl data): buckets
@@ -258,24 +284,7 @@ def lsh_candidate_pairs(
     banded = lsh_band_rows(
         signatures, bands=bands, hash_mode=hash_mode, num_hashes=num_hashes
     )
-    # Materialize the banded table ONCE: it is read 2× by the pair
-    # self-join (3× with the cap's bucket-size count) and each read
-    # would otherwise replay the whole shingle-explode + H-hash +
-    # min-aggregate pipeline — the expensive part. |docs|×bands rows of
-    # three fixed-width columns is tiny next to that recompute.
-    banded = banded.localCheckpoint()
-    if max_bucket_size is not None:
-        banded = drop_oversized_buckets(
-            banded, "bh", max_bucket_size, "lsh_candidate_pairs"
-        )
-    a = banded.select(F.col("id").alias("id_a"), "band", "bh")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bh")
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return lsh_bucket_pairs(banded, "bh", max_bucket_size, "lsh_candidate_pairs")
 
 
 def ngram_jaccard_pairs(

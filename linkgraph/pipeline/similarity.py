@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.pipeline.dedup import drop_oversized_buckets
+from linkgraph.pipeline.dedup import lsh_bucket_pairs
 
 
 def _as_double(col):
@@ -363,19 +363,4 @@ def rp_lsh_candidates(
             ])
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # materialize ONCE: the pair self-join (and the optional cap count)
-    # reference this table twice — without the checkpoint each side
-    # would re-run the signature matmul kernel over the source
-    banded = banded.localCheckpoint()
-    if max_bucket_size is not None:
-        banded = drop_oversized_buckets(
-            banded, "key", max_bucket_size, "rp_lsh_candidates"
-        )
-    a = banded.select("band", "key", F.col("id").alias("id_a"))
-    b = banded.select("band", "key", F.col("id").alias("id_b"))
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return lsh_bucket_pairs(banded, "key", max_bucket_size, "rp_lsh_candidates")

@@ -287,13 +287,6 @@ class PregelSpec:
     frontier_filter: str | None = "changed"  # None = every vertex scatters
     links_key: str = "src"  # partition/sort column of the scatter relation
     # ("pk" for the CSR layout, whose relation is one row per partition)
-    # True = prepare_links already returns its relation hash-partitioned
-    # on links_key at the CURRENT spark.sql.shuffle.partitions (e.g. it
-    # ends in graph.symmetrize, whose dedup repartitions on src) — the
-    # driver then skips its own repartition, saving one full |links|
-    # exchange per run (r6, guide §2.4). prepare_links is always called
-    # under the loop's superstep_conf, so "current" == the loop's p.
-    links_prepartitioned: bool = False
     # False = the program is not safe under barrier-time topology
     # mutation: applying one resets the frontier to the FULL state,
     # which re-delivers messages a non-idempotent program (k-core's
@@ -322,14 +315,19 @@ class PregelSpec:
 
 def build_links(spec: PregelSpec, edges: DataFrame, p: int) -> DataFrame:
     """The scatter relation of `spec` over `edges`: hash-partitioned on
-    `spec.links_key` into `p` partitions (unless prepare_links already
-    emits that layout), sorted within partitions, persisted and
-    materialized — the per-superstep sort-merge join then never
-    re-sorts the |E| side, only the |V| state side."""
-    links = spec.prepare_links(edges)
-    if not spec.links_prepartitioned:
-        links = links.repartition(p, spec.links_key)
-    links = links.sortWithinPartitions(spec.links_key).persist()
+    `spec.links_key` into `p` partitions, sorted within partitions,
+    persisted and materialized — the per-superstep sort-merge join then
+    never re-sorts the |E| side, only the |V| state side. When
+    prepare_links already emits that layout (it ends in
+    graph.symmetrize, called under the loop's superstep_conf at the same
+    p), Spark's EnsureRequirements drops the repartition as redundant,
+    so the relation costs the one symmetrize exchange."""
+    links = (
+        spec.prepare_links(edges)
+        .repartition(p, spec.links_key)
+        .sortWithinPartitions(spec.links_key)
+        .persist()
+    )
     links.count()
     return links
 

@@ -112,9 +112,9 @@ def dump(out_dir: str, tag: str, sf_dir: str) -> None:
     write("corpus_derive", cedges)
 
     from linkgraph.algorithms import triangle_counts
-    from linkgraph.algorithms.triangles import _oriented_wedges
+    from linkgraph.algorithms.triangles import oriented_wedges
 
-    _, wedges = _oriented_wedges(g)
+    _, wedges = oriented_wedges(symmetrize(g.edges))
     write("corpus_triangles_wedges", wedges)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -23,18 +23,19 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def n_exchanges_in(node) -> int:
+    """Shuffle exchanges in a physical-plan (JVM SparkPlan) tree."""
+    n = 1 if node.nodeName() == "Exchange" else 0
+    for i in range(node.children().length()):
+        n += n_exchanges_in(node.children().apply(i))
+    return n
+
+
 def n_exchanges(df) -> int:
     """Count LIVE shuffle exchanges by walking the physical-plan tree —
     a text count would also pick up the build plans explain() prints
     for cached InMemoryRelations, which are not executed again."""
-
-    def walk(node) -> int:
-        n = 1 if node.nodeName() == "Exchange" else 0
-        for i in range(node.children().length()):
-            n += walk(node.children().apply(i))
-        return n
-
-    return walk(df._jdf.queryExecution().executedPlan())
+    return n_exchanges_in(df._jdf.queryExecution().executedPlan())
 
 
 class TestScalePartitions:
@@ -143,19 +144,50 @@ class TestOneExchangeShapes:
         assert {(1, "abc"), (1, "bca"), (1, "cab")} <= rows
         assert len([r for r in rows if r[0] == 1]) == 3
 
-    def test_links_prepartitioned_skips_repartition(self, spark, graph_builder):
-        # components' scatter relation: exactly the symmetrize exchange,
-        # no second repartition by the pregel driver (AQE off so the
-        # explain shows one plan, as in the superstep loop itself)
+    @pytest.mark.parametrize(
+        "algo", ["components", "lpa", "mis", "coloring", "semi_clustering"]
+    )
+    def test_symmetrized_links_take_one_exchange(
+        self, spark, graph_builder, monkeypatch, algo
+    ):
+        # a scatter relation built on graph.symmetrize: build_links'
+        # repartition(p, src) over symmetrize's own hash(src) exchange at
+        # the same p is dropped by the planner, so the persisted relation
+        # costs exactly the symmetrize exchange (AQE off, as in the
+        # superstep loop itself)
+        from linkgraph.algorithms import semiclustering
+        from linkgraph.algorithms.coloring import coloring_spec
         from linkgraph.algorithms.components import components_spec
+        from linkgraph.algorithms.lpa import lpa_spec
+        from linkgraph.algorithms.mis import mis_spec
+        from linkgraph.pregel import build_links
 
         g = graph_builder(FX.G2_EDGES)
-        spec = components_spec()
-        assert spec.links_prepartitioned
+        if algo == "semi_clustering":
+            # its spec closes over the run's adjacency: take it from the
+            # pregel_run call instead of running the loop
+            specs = []
+            monkeypatch.setattr(
+                semiclustering,
+                "pregel_run",
+                lambda graph, spec, **kw: specs.append(spec) or (None, None),
+            )
+            semiclustering.semi_clustering(g)
+            spec = specs[0]
+        else:
+            spec = {
+                "components": components_spec,
+                "lpa": lpa_spec,
+                "mis": mis_spec,
+                "coloring": coloring_spec,
+            }[algo]()
+        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            links = spec.prepare_links(g.edges).sortWithinPartitions("src")
-            assert n_exchanges(links) == 1
+            links = build_links(spec, g.edges, p)
+            cached = links._jdf.queryExecution().executedPlan().relation().cachedPlan()
+            assert n_exchanges_in(cached) == 1
+            links.unpersist()
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
 
