@@ -113,8 +113,8 @@ def run_suite(spark, sf_dir: str) -> tuple[dict, dict]:
     meta["corpus_graph"] = {"vertices": cg.num_vertices, "edges": cg.num_edges}
 
     def run_cpr():
-        # hot_threshold intentionally OFF: per-superstep broadcasts cost
-        # more than AQE skew-splitting saves at this scale (measured 4.7x)
+        # the plain scatter: a hot-src broadcast scatter measured slower
+        # than the plain join at this scale and was removed (skew.py)
         state, cinfo = pagerank(cg, tol=1e-6)
         state.count()
         return cinfo

@@ -22,7 +22,7 @@ pays exactly one action/barrier. The two global L2 norms are 1-row
 aggregates broadcast back into the plan (BroadcastNestedLoopJoin on a
 1-row side — the same shape as textstats' corpus-level stats joins),
 evaluated inside the same job, never collected to the driver. The
-scatter relation is the pre-sorted persisted links table keyed by src
+scatter relation is the pre-sorted checkpointed links table keyed by src
 (the hub gather reuses its partitioning; the authority gather's
 by-dst shuffle is inherent to HITS — on a 1000-executor cluster both
 gathers are map-side-combined partial aggregates, so the shuffle

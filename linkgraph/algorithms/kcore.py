@@ -39,12 +39,10 @@ number, so the fixpoint is exact and schedule-independent (confluent).
 
 from __future__ import annotations
 
-from dataclasses import replace
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.graph import Graph, symmetrize
+from linkgraph.graph import Graph, undirected
 from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
 
 
@@ -120,16 +118,6 @@ def kcore_spec(k: int, degrees: DataFrame) -> PregelSpec:
     )
 
 
-def _undirected(graph: Graph) -> tuple[Graph, DataFrame]:
-    """(the symmetrized graph, its undirected degree per id) — the input
-    of both k-core programs, whose links are the symmetrized edges."""
-    sym = symmetrize(graph.edges)
-    degrees = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    return replace(graph, edges=sym), degrees
-
-
 def kcore(
     graph: Graph, k: int, max_supersteps: int = 10_000, checkpointer=None
 ) -> tuple[DataFrame, RunInfo]:
@@ -141,7 +129,7 @@ def kcore(
     """
     if k < 1:
         raise ValueError(f"kcore: k must be >= 1, got {k}")
-    sym_graph, degrees = _undirected(graph)
+    sym_graph, degrees = undirected(graph)
     return pregel_run(
         sym_graph,
         kcore_spec(k, degrees),
@@ -240,7 +228,7 @@ def core_number(
     ["degeneracy"] is the graph degeneracy (max core number).
     Agrees with peeling (`kcore`): {id | core >= k} == the k-core.
     """
-    sym_graph, degrees = _undirected(graph)
+    sym_graph, degrees = undirected(graph)
     state, info = pregel_run(
         sym_graph,
         core_number_spec(degrees),

@@ -39,8 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import PregelSpec, RunInfo, pregel_run
+from linkgraph.graph import Graph, undirected
+from linkgraph.pregel import PregelSpec, RunInfo, merge_relation, pregel_run, release
+from linkgraph.tuning import loop_partitions
 
 _CLUSTER_T = T.ArrayType(
     T.StructType(
@@ -148,12 +149,15 @@ def semi_clustering(
         raise ValueError(
             f"semi_clustering: need c_max >= 1 and m_max >= 2, got {c_max}/{m_max}"
         )
-    sym = symmetrize(graph.edges)
-    degrees = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    adjacency = sym.groupBy(F.col("src").alias("id")).agg(
-        F.sort_array(F.collect_list("dst")).alias("nbrs")
+    sym_graph, degrees = undirected(graph)
+    # built once and joined on id every superstep, co-partitioned with
+    # the loop's state
+    adjacency = merge_relation(
+        sym_graph.edges.groupBy(F.col("src").alias("id")).agg(
+            F.sort_array(F.collect_list("dst")).alias("nbrs")
+        ),
+        "id",
+        loop_partitions(graph),
     )
 
     def init_state(verts):
@@ -189,12 +193,15 @@ def semi_clustering(
         algo="semi_clustering",
         state_cols=("clusters",),
         init_state=init_state,
-        prepare_links=lambda e: symmetrize(e),
+        prepare_links=lambda e: e,  # the symmetrized graph is passed
         step=step,
         metrics={"active": F.sum(F.col("changed").cast("long"))},
         halt=lambda a: int(a.get("active") or 0) == 0,
         frontier_filter=None,
     )
-    return pregel_run(
-        graph, spec, max_supersteps=max_iter, checkpointer=checkpointer
-    )
+    try:
+        return pregel_run(
+            sym_graph, spec, max_supersteps=max_iter, checkpointer=checkpointer
+        )
+    finally:
+        release(adjacency)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from linkgraph.algorithms.pagerank import Scatter, run_pagerank
 from linkgraph.graph import Graph
 from linkgraph.pregel import RunInfo
-from linkgraph.tuning import scale_partitions
+from linkgraph.tuning import loop_partitions
 
 CSR_SCHEMA = (
     "pk int, vids array<long>, indptr array<long>, indices array<long>"
@@ -118,7 +118,9 @@ def csr_scatter(p: int) -> Scatter:
             .applyInPandas(scatter, schema="dst long, contrib double")
         )
 
-    return Scatter(lambda edges: pack_csr(edges, p), contribs, links_key="pk")
+    return Scatter(
+        lambda edges: pack_csr(edges, p), contribs, links_key="pk", links_joined=False
+    )
 
 
 def pagerank_csr(
@@ -138,12 +140,10 @@ def pagerank_csr(
     machinery and the fused combine+apply shuffle for free.
     """
     # r6: the CSR partition count scales with the graph (one CSR row =
-    # one partition's adjacency, so p bounds kernel memory) and matches
+    # one partition's adjacency, so p bounds kernel memory) and is
     # the partition count pregel_run derives for the loop — state and
     # CSR rows cogroup on the same pk space with no re-keying.
-    p = scale_partitions(
-        graph.edges.sparkSession, max(graph.num_edges, graph.num_vertices)
-    )
+    p = loop_partitions(graph)
     return run_pagerank(
         graph, csr_scatter(p), d=d, tol=tol, max_supersteps=max_supersteps,
         dangling=dangling, checkpointer=checkpointer, algo="pagerank_csr",

@@ -20,10 +20,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from linkgraph.tuning import loop_partitions
 
 
 def canonicalize(edges: DataFrame) -> DataFrame:
@@ -256,3 +258,16 @@ class Graph:
         return Graph.prepare(
             self.edges.join(gone_edges.select("src", "dst"), ["src", "dst"], "left_anti")
         )
+
+
+def undirected(graph: Graph) -> tuple[Graph, DataFrame]:
+    """(the symmetrized graph, its undirected degree per id): the input
+    of the vertex programs whose links are the symmetrized edges
+    (k-core, core number, semi-clustering). The symmetrize exchange runs
+    at the superstep loop's partition count, so the loop's scatter
+    relation and the degrees reuse it."""
+    sym = symmetrize(graph.edges, loop_partitions(graph))
+    degrees = sym.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    return replace(graph, edges=sym), degrees

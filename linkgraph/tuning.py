@@ -3,7 +3,8 @@
 Two facts drive this module, both measured (OPTIMIZATION_r06.md §2):
 
 1. A superstep's recurring plan is FIXED and tiny in shape — one
-   scatter join against a persisted, pre-partitioned links relation,
+   sort-merge scatter join against a checkpointed, pre-partitioned,
+   pre-sorted links relation,
    one combine exchange whose map-side partial aggregate is the Pregel
    combiner, one scalar metric aggregate. AQE's stage-by-stage
    re-planning buys nothing here (there is nothing left to re-plan)
@@ -11,8 +12,7 @@ Two facts drive this module, both measured (OPTIMIZATION_r06.md §2):
    PER SUPERSTEP: measured 0.68 s vs 0.33 s median superstep on the
    463k-edge corpus graph (2.1x). Value-skew is absorbed by the
    map-side combiner; structural out-degree skew is handled by the
-   dedicated operators (skew.py salting / hot-vertex broadcast), not by
-   AQE's SMJ splitting. So the loop runs with AQE off and is restored
+   dedicated operator (skew.py salting), not by AQE's SMJ splitting. So the loop runs with AQE off and is restored
    to the caller's setting afterwards.
 
 2. `spark.sql.shuffle.partitions` is a session constant (cores-derived)
@@ -85,6 +85,16 @@ def scale_partitions(
     return int(min(max(p, lo), MAX_PARTITIONS))
 
 
+def loop_partitions(graph) -> int:
+    """The shuffle partition count of a superstep loop over `graph`:
+    scale_partitions over its larger side. A relation built outside the
+    loop at this count (a symmetrized edge set, an adjacency) is
+    co-partitioned with the loop's state and scatter relation."""
+    return scale_partitions(
+        graph.edges.sparkSession, max(graph.num_edges, graph.num_vertices)
+    )
+
+
 def ensure_min_partitions(df):
     """Round-robin repartition a compute-heavy source UP to one task
     wave — only when its scan is under-split (fewer partitions than
@@ -123,8 +133,7 @@ def superstep_conf(spark, partitions: int | None = None):
     drivers are single-threaded by construction; nesting (a loop
     launched from inside another loop's ctx, e.g. the dedup closure's
     CC run) is fine — restores are LIFO. Running two INDEPENDENT loops
-    from concurrent driver threads on one session was never supported
-    (they would also race the same persisted-links namespace).
+    from concurrent driver threads on one session was never supported.
     """
     conf = spark.conf
     changes = {"spark.sql.adaptive.enabled": "false"}

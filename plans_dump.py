@@ -65,7 +65,7 @@ def dump(out_dir: str, tag: str, sf_dir: str) -> None:
     write("graph_build_vertices", g.vertices)
 
     # one fused superstep over links/state EXACTLY as pregel_run holds
-    # them mid-loop: links persisted + materialized, state a
+    # them mid-loop: links checkpointed by build_links, state a
     # localCheckpoint, the whole thing under the loop's superstep_conf
     # (so the dump shows the recurring per-step plan the loop actually
     # executes, not the one-time build lineage or the session's AQE)

@@ -39,3 +39,32 @@ def make_graph(spark, edges, extra_vertices=()):
 @pytest.fixture(scope="session")
 def graph_builder(spark):
     return lambda edges, extra_vertices=(): make_graph(spark, edges, extra_vertices)
+
+
+@pytest.fixture(scope="session")
+def executed_stages(spark):
+    """stages(tag) -> the status-store records of the stages that the
+    jobs of job group `tag` executed. Skipped stages (shuffle output
+    reused) are left out; the store may already have evicted them, as
+    it evicts stages without a completion time first."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tracker = sc.statusTracker()
+
+    def stages(tag: str) -> list:
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        out = []
+        for j in tracker.getJobIdsForGroup(tag):
+            for sid in tracker.getJobInfo(j).stageIds:
+                try:
+                    st = store.lastStageAttempt(sid)
+                except Py4JJavaError:
+                    continue  # evicted, so never executed
+                if str(st.status()) != "SKIPPED":
+                    out.append(st)
+        return out
+
+    return stages

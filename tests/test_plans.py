@@ -145,27 +145,51 @@ def test_dense_ids_equal_global_window_form(spark):
         assert got == want, f"partitions={p}"
 
 
+def node_names(node):
+    """Every node name of a physical-plan (JVM SparkPlan) tree."""
+    yield node.nodeName()
+    for i in range(node.children().length()):
+        yield from node_names(node.children().apply(i))
+
+
+def find_node(node, name):
+    """The first node called `name` in a pre-order walk, or None."""
+    if node.nodeName() == name:
+        return node
+    for i in range(node.children().length()):
+        hit = find_node(node.children().apply(i), name)
+        if hit is not None:
+            return hit
+    return None
+
+
 def test_superstep_shuffle_is_bounded(spark, graph_builder):
-    """The fused superstep must contain exactly ONE exchange over the
-    message stream (the combine) in its live plan — no apply-join
-    exchange. Gates the REAL vertex program: the plan under test is
-    built by pagerank_spec().step, exactly what pregel_run executes.
-    Cached/checkpointed subtrees are excluded."""
+    """The fused superstep must contain exactly ONE exchange (the
+    combine over the message stream) — no apply-join exchange, no
+    state exchange, no broadcast — and the scatter join must be a
+    sort-merge join whose links side neither shuffles nor sorts. Gates
+    the REAL vertex program: the plan under test is built by
+    pagerank_spec().step over build_links, with the state laid out as
+    pregel_run carries it (hash-partitioned on id at p), under the
+    loop's fixed-plan settings."""
     from linkgraph.algorithms.pagerank import pagerank_spec
     from linkgraph.pregel import build_links
+    from linkgraph.tuning import superstep_conf
 
     g = graph_builder(FX.G1_EDGES)
-    n = g.num_vertices
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spec = pagerank_spec(n)
-    links = build_links(spec, g.edges, p)
-    state = spec.init_state(g.vertices).localCheckpoint()
-    new_state = spec.step(links, state, state, {})
-    plan = plan_of(new_state)
-    live = plan.split("InMemoryRelation")[0]  # strip cached-plan printouts
-    n_exchanges = live.count("Exchange hashpartitioning")
-    assert n_exchanges <= 1, f"superstep live plan has {n_exchanges} exchanges:\n{live}"
-    links.unpersist()
+    spec = pagerank_spec(g.num_vertices)
+    with superstep_conf(spark, p):
+        links = build_links(spec, g.edges, p)
+        state = spec.init_state(g.vertices).repartition(p, "id").localCheckpoint()
+        plan = spec.step(links, state, state, {})._jdf.queryExecution().executedPlan()
+    names = list(node_names(plan))
+    assert names.count("Exchange") == 1, plan.toString()
+    assert "BroadcastExchange" not in names, plan.toString()
+    smj = find_node(plan, "SortMergeJoin")
+    assert smj is not None, plan.toString()
+    links_side = set(node_names(smj.left()))
+    assert not links_side & {"Sort", "Exchange"}, plan.toString()
 
 
 def test_tfidf_scan_prunes_and_window_is_per_doc(spark, tmp_path_factory):

@@ -145,51 +145,65 @@ class TestOneExchangeShapes:
         assert len([r for r in rows if r[0] == 1]) == 3
 
     @pytest.mark.parametrize(
-        "algo", ["components", "lpa", "mis", "coloring", "semi_clustering"]
+        "algo",
+        ["components", "lpa", "mis", "coloring", "semi_clustering", "kcore"],
     )
     def test_symmetrized_links_take_one_exchange(
-        self, spark, graph_builder, monkeypatch, algo
+        self, spark, graph_builder, monkeypatch, executed_stages, algo
     ):
         # a scatter relation built on graph.symmetrize: build_links'
         # repartition(p, src) over symmetrize's own hash(src) exchange at
-        # the same p is dropped by the planner, so the persisted relation
-        # costs exactly the symmetrize exchange (AQE off, as in the
-        # superstep loop itself)
+        # the same p is dropped by the planner, so the build job runs
+        # exactly one shuffle-map stage, the symmetrize exchange (under
+        # the loop's own superstep_conf at its own p)
+        import importlib
+
         from linkgraph.algorithms import semiclustering
         from linkgraph.algorithms.coloring import coloring_spec
         from linkgraph.algorithms.components import components_spec
         from linkgraph.algorithms.lpa import lpa_spec
         from linkgraph.algorithms.mis import mis_spec
         from linkgraph.pregel import build_links
+        from linkgraph.tuning import loop_partitions
 
+        # the package re-exports the function `kcore` under its module's name
+        kcore = importlib.import_module("linkgraph.algorithms.kcore")
         g = graph_builder(FX.G2_EDGES)
-        if algo == "semi_clustering":
-            # its spec closes over the run's adjacency: take it from the
-            # pregel_run call instead of running the loop
-            specs = []
+        if algo in ("semi_clustering", "kcore"):
+            # these drivers symmetrize the graph themselves and their
+            # specs close over derived relations: take the graph and the
+            # spec from the pregel_run call instead of running the loop
+            calls = []
+            module, driver = {
+                "semi_clustering": (semiclustering, semiclustering.semi_clustering),
+                "kcore": (kcore, lambda g: kcore.kcore(g, k=2)),
+            }[algo]
             monkeypatch.setattr(
-                semiclustering,
+                module,
                 "pregel_run",
-                lambda graph, spec, **kw: specs.append(spec) or (None, None),
+                lambda graph, spec, **kw: calls.append((graph, spec)) or (None, None),
             )
-            semiclustering.semi_clustering(g)
-            spec = specs[0]
+            driver(g)
+            graph, spec = calls[0]
         else:
+            graph = g
             spec = {
                 "components": components_spec,
                 "lpa": lpa_spec,
                 "mis": mis_spec,
                 "coloring": coloring_spec,
             }[algo]()
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            links = build_links(spec, g.edges, p)
-            cached = links._jdf.queryExecution().executedPlan().relation().cachedPlan()
-            assert n_exchanges_in(cached) == 1
-            links.unpersist()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        p = loop_partitions(g)
+        sc = spark.sparkContext
+        tag = f"build_links_{algo}"
+        with superstep_conf(spark, p):
+            sc.setJobGroup(tag, tag)
+            try:
+                build_links(spec, graph.edges, p)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        shuffle_map = [st for st in executed_stages(tag) if st.shuffleWriteRecords()]
+        assert len(shuffle_map) == 1
 
 
 class TestMetricBarrier:
