@@ -8,14 +8,13 @@ was empty at survey time, so no file:line citations into it exist
 
 Public surface:
     session.get_spark        — pinned SparkSession builder
-    graph.Graph              — edges/vertices bundle (prepare/mutate)
+    graph.Graph              — edges/vertices bundle (prepare)
     pregel.pregel_run / PregelSpec — the generic vertex-program driver:
                                write a new algorithm as a ~20-line spec
                                (init_state, prepare_links, step,
                                metrics = user-defined aggregators,
                                halt, frontier_filter); supports
-                               checkpoint/resume and barrier-resolved
-                               topology mutations (paper §3.3/§3.4)
+                               checkpoint/resume (paper §3.3/§4.2)
     algorithms.pagerank      — PageRank (d=0.85, L1 delta < tol)
     algorithms.connected_components — min-label propagation
     algorithms.label_propagation    — sync LPA, pinned tie-break

@@ -41,8 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import RunInfo, fixpoint, log_append, log_union
-from linkgraph.algorithms.centrality import pick_landmarks
+from linkgraph.pregel import RunInfo, fixpoint
+from linkgraph.algorithms.centrality import bfs_levels, pick_landmarks
 
 
 def betweenness(
@@ -54,55 +54,20 @@ def betweenness(
     """Returns ((id, betweenness) for every vertex — raw Brandes sums
     over the pivot set, no normalization —, RunInfo).
 
-    r6 (VERDICT r5 #2): both accumulated relations are APPEND-ONLY
-    with LSM-style compaction (pregel.log_append). The forward
-    pass checkpoints each hop's (s, v, d, σ) increment — the frontier,
-    already materialized — and merges similar-sized parts, so a row is
-    rewritten O(log depth) times (old form: re-checkpointed the whole
-    relation every hop, O(depth² · |S|·|V|) write volume) while
-    anti-joins and level filters scan O(log depth) parts. The backward
-    pass checkpoints only each level's δ increment and joins the δ of
-    the level below directly (δ rows are keyed by BFS level, so the
-    accumulated union is never needed mid-pass). Each forward hop is
-    one `fixpoint` barrier, logged when it reached a new vertex."""
+    The forward pass is `centrality.bfs_levels` (levels and exact σ;
+    each hop one `fixpoint` barrier, logged when it reached a new
+    vertex). The backward pass checkpoints only each level's δ
+    increment and joins the δ of the level below directly (δ rows are
+    keyed by BFS level, so the accumulated union is never needed
+    mid-pass)."""
     with fixpoint(graph, "betweenness") as fx:
         und = symmetrize(graph.edges).persist()
         src = sources if sources is not None else pick_landmarks(graph, num_sources)
         src = src.select(F.col("lm").alias("s")) if "lm" in src.columns else src
 
         # ---- forward: levels + exact path counts ----------------------
-        seed, vals = fx.barrier(
-            src.select(
-                "s",
-                F.col("s").alias("v"),
-                F.lit(0).alias("d"),
-                F.lit(1).cast("long").alias("sigma"),
-            ),
-            {"active": F.count(F.lit(1))},
-        )
-        parts: list = []
-        log_append(parts, seed, vals["active"])
-        frontier = seed.select("s", "v", "sigma")
-        for h in range(1, max_hops + 1):
-            known_keys = log_union(parts).select("s", "v")
-            nxt, vals = fx.barrier(
-                frontier.join(und, frontier["v"] == und["src"])
-                .groupBy("s", F.col("dst").alias("w"))
-                .agg(F.sum("sigma").alias("sigma"))
-                .withColumnRenamed("w", "v")
-                .join(known_keys, ["s", "v"], "left_anti")
-                .select("s", "v", F.lit(h).alias("d"), "sigma"),
-                {"active": F.count(F.lit(1))},
-            )
-            if vals["active"] == 0:
-                fx.info.converged = True
-                break
-            fx.record(vals)
-            log_append(parts, nxt, vals["active"])
-            frontier = nxt.select("s", "v", "sigma")
+        known = bfs_levels(fx, und, src, max_hops, count_paths=True)
         depth = fx.info.supersteps
-
-        known = log_union(parts)
 
         # ---- backward: dependency accumulation, deepest level first ---
         # δ parts exist only where non-zero; each level joins the δ part

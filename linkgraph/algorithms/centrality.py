@@ -18,12 +18,13 @@ ANSI-SQL oracle (no sampling RNG).
 
 Spark shape: the BFS state is the (landmark, vertex) pair relation —
 L·|V| rows at completion, fine for the small L (16–64) the
-approximation calls for. Per hop: frontier ⋈ edges keyed on the
-vertex id (reusing the graph partitioning), distinct, and an anti-join
-against the known set — the exact frontier discipline of the SSSP/
-components specs, with the landmark id riding along as part of the
-key. The known set is localCheckpointed each hop so plan depth stays
-constant. Per-hop actions: one emptiness count.
+approximation calls for. Per hop (`bfs_levels`, shared with Brandes'
+forward pass): frontier ⋈ edges keyed on the vertex id (reusing the
+graph partitioning), one aggregate per (source, vertex), and an
+anti-join against the known set — the exact frontier discipline of
+the SSSP/components specs, with the source id riding along as part of
+the key. Each hop's increment is checkpointed by its barrier so plan
+depth stays constant. Per-hop actions: one barrier.
 
 Scale: a 100 TB graph runs this with L≪|V| landmarks; all shuffles
 are keyed on (vertex) or (landmark, vertex) — no |V|² term. BFS depth
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.graph import Graph, symmetrize
-from linkgraph.pregel import RunInfo, fixpoint, log_append, log_union
+from linkgraph.pregel import Fixpoint, RunInfo, fixpoint, log_append, log_union
 
 
 def pick_landmarks(graph: Graph, num_landmarks: int) -> DataFrame:
@@ -55,6 +56,62 @@ def pick_landmarks(graph: Graph, num_landmarks: int) -> DataFrame:
     )
 
 
+def bfs_levels(
+    fx: Fixpoint,
+    und: DataFrame,
+    sources: DataFrame,
+    max_hops: int,
+    *,
+    count_paths: bool,
+) -> DataFrame:
+    """Multi-source BFS over the symmetrized edges `und` from every
+    source in `sources(s)`, at most `max_hops` hops. Returns the
+    (s, v, d, sigma) rows of every reached pair: d is the hop distance
+    (0 for the source itself). With `count_paths`, sigma is the exact
+    number of shortest s-v paths (BIGINT; σ(s,v) = Σ σ(s,u) over the
+    predecessors u, so the recurrence is the message combiner).
+    Without it sigma is 0 everywhere: a caller that needs only the
+    levels cannot overflow BIGINT on graphs with more than 2^63
+    shortest paths between a pair (deep grids, road networks).
+
+    The known set is APPEND-ONLY with LSM-style compaction
+    (`pregel.log_append`): each hop checkpoints its increment (the new
+    rows, already materialized as the frontier) and similar-sized parts
+    merge, so a row is rewritten O(log depth) times while the anti-join
+    scans O(log depth) parts. Each hop is one `fx` barrier, recorded
+    when it reached a new pair; a hop that reaches none ends the BFS
+    and marks `fx.info` converged."""
+    seed, vals = fx.barrier(
+        sources.select(
+            "s",
+            F.col("s").alias("v"),
+            F.lit(0).alias("d"),
+            F.lit(int(count_paths)).cast("long").alias("sigma"),
+        ),
+        {"active": F.count(F.lit(1))},
+    )
+    parts: list = []
+    log_append(parts, seed, vals["active"])
+    frontier = seed.select("s", "v", "sigma")
+    for h in range(1, max_hops + 1):
+        known_keys = log_union(parts).select("s", "v")
+        nxt, vals = fx.barrier(
+            frontier.join(und, frontier["v"] == und["src"])
+            .groupBy("s", F.col("dst").alias("v"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(known_keys, ["s", "v"], "left_anti")
+            .select("s", "v", F.lit(h).alias("d"), "sigma"),
+            {"active": F.count(F.lit(1))},
+        )
+        if vals["active"] == 0:
+            fx.info.converged = True
+            break
+        fx.record(vals)
+        log_append(parts, nxt, vals["active"])
+        frontier = nxt.select("s", "v", "sigma")
+    return log_union(parts)
+
+
 def landmark_distances(
     graph: Graph,
     num_landmarks: int = 16,
@@ -62,49 +119,18 @@ def landmark_distances(
     landmarks: DataFrame | None = None,
 ) -> tuple[DataFrame, RunInfo]:
     """Returns ((lm, v, d) hop distances for every reached pair
-    including d=0 self rows, RunInfo).
-
-    r6 (VERDICT r5 #2): the known set is APPEND-ONLY with LSM-style
-    compaction (`pregel.log_append`) — each hop checkpoints its
-    increment (the new (lm, v, d=h) rows, already materialized as the
-    frontier) and similar-sized parts merge, so a row is rewritten
-    O(log depth) times instead of every hop (the old form's
-    O(depth² · L·|V|) total write volume) while the anti-join scans
-    O(log depth) parts instead of one per hop. Each hop is one
-    `fixpoint` barrier (fixed recurring plan; scale-derived
+    including d=0 self rows, RunInfo): `bfs_levels` from the landmarks
+    under one `fixpoint` (fixed recurring plan; scale-derived
     partitions); RunInfo logs every hop that reached a new pair."""
     with fixpoint(graph, "landmark_bfs") as fx:
         und = symmetrize(graph.edges).persist()
         lms = landmarks if landmarks is not None else pick_landmarks(graph, num_landmarks)
-        init_frontier = lms.select("lm", F.col("lm").alias("v")).persist()
-        frontier = init_frontier
-        seed, vals = fx.barrier(
-            frontier.select("lm", "v", F.lit(0).alias("d")),
-            {"active": F.count(F.lit(1))},
+        known = bfs_levels(
+            fx, und, lms.select(F.col("lm").alias("s")), max_hops,
+            count_paths=False,
         )
-        parts: list = []
-        log_append(parts, seed, vals["active"])
-        for h in range(1, max_hops + 1):
-            known_keys = log_union(parts).select("lm", "v")
-            nxt, vals = fx.barrier(
-                frontier.join(und, frontier["v"] == und["src"])
-                .select("lm", F.col("dst").alias("v"))
-                .distinct()
-                .join(known_keys, ["lm", "v"], "left_anti")
-                .withColumn("d", F.lit(h)),
-                {"active": F.count(F.lit(1))},
-            )
-            if vals["active"] == 0:
-                fx.info.converged = True
-                break
-            fx.record(vals)
-            log_append(parts, nxt, vals["active"])
-            frontier = nxt.select("lm", "v")
-        # unpersist unconditionally (ADVICE r5): with max_hops=0 or an
-        # immediately drained frontier the old code leaked both blocks
-        init_frontier.unpersist()
         und.unpersist()
-    return log_union(parts), fx.info
+    return known.select(F.col("s").alias("lm"), "v", "d"), fx.info
 
 
 def double_sweep_diameter(

@@ -97,10 +97,6 @@ def coloring_spec() -> PregelSpec:
         metrics={"uncolored": F.sum((F.col("color") == -1).cast("long"))},
         halt=lambda m: int(m.get("uncolored") or 0) == 0,
         frontier_filter=None,  # scatter filters on color == -1 internally
-        # a colored vertex never re-checks a mutated neighborhood — an
-        # edge added between two same-colored vertices would break
-        # properness silently; refuse the combination
-        mutation_safe=False,
     )
 
 

@@ -87,16 +87,9 @@ def connected_components(
     graph: Graph,
     max_supersteps: int = 200,
     checkpointer=None,
-    mutations=None,
     estimate_components: bool = False,
 ) -> tuple[DataFrame, RunInfo]:
     """Returns (state(id, comp), RunInfo). comp = min vertex id reachable.
-
-    mutations: optional barrier-resolved topology mutation callback
-    (B14, paper §3.4) — min-label is confluent under edge ADDITION, so
-    mid-compute growth converges to the final graph's components;
-    removals only stop future message flow (monotone state is not
-    retracted).
 
     estimate_components: record a per-superstep HyperLogLog estimate of
     the remaining distinct labels in RunInfo.log[i].aggregates
@@ -108,5 +101,4 @@ def connected_components(
         components_spec(estimate_components=estimate_components),
         max_supersteps=max_supersteps,
         checkpointer=checkpointer,
-        mutations=mutations,
     )

@@ -114,12 +114,6 @@ def hits_spec(tol: float) -> PregelSpec:
         metrics={"delta": F.sum("dah")},
         halt=lambda m: m.get("delta") is not None and m["delta"] < tol,
         frontier_filter=None,  # dense iteration: every vertex each step
-        # normalization re-bases every score each superstep — a
-        # barrier-time topology mutation's full-frontier reset is
-        # harmless, but scores already propagated over removed edges
-        # are NOT retracted until the next iteration re-gathers; that
-        # next iteration recomputes from scratch, so HITS is safe
-        mutation_safe=True,
     )
 
 

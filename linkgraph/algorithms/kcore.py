@@ -111,10 +111,6 @@ def kcore_spec(k: int, degrees: DataFrame) -> PregelSpec:
         },
         halt=lambda a: int(a.get("active") or 0) == 0,
         frontier_filter="changed",
-        # decrement counting is non-confluent: a barrier-time topology
-        # mutation resets the frontier to the full state, re-delivering
-        # decrements that were already applied (pregel.py mutation_safe)
-        mutation_safe=False,
     )
 
 
@@ -212,9 +208,6 @@ def core_number_spec(degrees: DataFrame) -> PregelSpec:
         },
         halt=lambda a: int(a.get("active") or 0) == 0,
         frontier_filter=None,  # every vertex re-scatters each round
-        # estimates must shrink from the CURRENT graph's degrees; a
-        # barrier mutation adding edges cannot raise a settled estimate
-        mutation_safe=False,
     )
 
 

@@ -87,7 +87,6 @@ def label_propagation(
     max_iter: int = 10,
     early_stop: bool = True,
     checkpointer=None,
-    mutations=None,
 ) -> tuple[DataFrame, RunInfo]:
     """Returns (state(id, label), RunInfo)."""
     return pregel_run(
@@ -95,5 +94,4 @@ def label_propagation(
         lpa_spec(early_stop),
         max_supersteps=max_iter,
         checkpointer=checkpointer,
-        mutations=mutations,
     )

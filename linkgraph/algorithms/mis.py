@@ -125,10 +125,6 @@ def mis_spec() -> PregelSpec:
         metrics={"undecided": F.sum((F.col("st") == 0).cast("long"))},
         halt=lambda m: int(m.get("undecided") or 0) == 0,
         frontier_filter=None,  # scatter filters on st==0 internally
-        # decided vertices never re-examine a mutated neighborhood —
-        # an edge added between two MIS members post-hoc would break
-        # independence silently; refuse the combination
-        mutation_safe=False,
     )
 
 

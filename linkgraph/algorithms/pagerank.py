@@ -257,9 +257,9 @@ def pagerank(
     rank proportionally to edge weight (contrib = rank * w / Σ
     out-weights) instead of uniformly.
 
-    PageRank does NOT accept mid-compute topology mutations: 1/N and
-    (1-d)/N are frozen at start, so a changed vertex set would silently
-    redistribute mass. Rebuild the Graph between runs instead.
+    1/N and (1-d)/N are fixed from the graph at the start of the run.
+    To rank a changed edge set, rebuild the graph with `Graph.prepare`
+    and run again.
     """
     scatter = PLAIN_SCATTER
     if weight_col is not None:

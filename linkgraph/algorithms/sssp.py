@@ -56,7 +56,6 @@ def sssp(
     weight_col: str | None = None,
     max_supersteps: int = 200,
     checkpointer=None,
-    mutations=None,
 ) -> tuple[DataFrame, RunInfo]:
     """Returns (state(id, dist), RunInfo)."""
     if weight_col is not None:
@@ -78,5 +77,4 @@ def sssp(
         sssp_spec(source, weight_col),
         max_supersteps=max_supersteps,
         checkpointer=checkpointer,
-        mutations=mutations,
     )

@@ -64,9 +64,6 @@ class CheckpointManager:
             )
         )
 
-    def _edges_table(self, algo: str) -> str:
-        return f"edges_{algo}"
-
     def checkpoint(
         self,
         algo: str,
@@ -76,8 +73,6 @@ class CheckpointManager:
         active: int | None = None,
         aggregates: dict | None = None,
         extra_meta: dict | None = None,
-        edges: DataFrame | None = None,
-        mutated: bool = False,
     ) -> DataFrame:
         """Write a snapshot + lineage rows; return the read-back state.
 
@@ -86,29 +81,8 @@ class CheckpointManager:
         aggregator state the next step() would have seen (paper §3.3 —
         aggregates of superstep S are input to S+1; without them a
         metric-dependent program like redistribute-mode PageRank would
-        restart from its superstep-1 closed form mid-run).
-
-        `edges`: the CURRENT edge table of a topology-mutating run
-        (paper §3.4 + §4.2 — a checkpoint must capture the graph, not
-        just the state, once the graph has diverged from the input).
-        Written as its own snapshot tagged with the same (run_id,
-        superstep); the state meta records `has_edges` so resume knows
-        to restore the mutated graph. Pass it only when edges actually
-        changed since the last edge snapshot — resume picks the latest
-        edge snapshot at superstep <= the resumed one. `mutated` keeps
-        the `has_edges` flag sticky on checkpoints after the mutation
-        whose edge write already happened (edges unchanged since)."""
+        restart from its superstep-1 closed form mid-run)."""
         t0 = time.monotonic()
-        if edges is not None:
-            self.catalog.write_snapshot(
-                self._edges_table(algo),
-                edges,
-                meta={
-                    "run_id": self.run_id,
-                    "algorithm": algo,
-                    "superstep": superstep,
-                },
-            )
         snap = self.catalog.write_snapshot(
             self._state_table(algo),
             state,
@@ -116,7 +90,6 @@ class CheckpointManager:
                 "run_id": self.run_id,
                 "algorithm": algo,
                 "superstep": superstep,
-                **({"has_edges": True} if (edges is not None or mutated) else {}),
                 **(
                     {"aggregates": {k: v for k, v in aggregates.items()}}
                     if aggregates
@@ -155,25 +128,6 @@ class CheckpointManager:
                 return None  # adaptive cadence: too soon since last write
         return self.checkpoint(algo, superstep, state, **metrics)
 
-    def read_edges(self, algo: str, max_superstep: int) -> DataFrame:
-        """Latest edge snapshot for this run at superstep <= the resumed
-        one (a checkpoint with unchanged edges skips the edge rewrite,
-        so the snapshot may be older than the state snapshot)."""
-        snap = self.catalog.latest(
-            self._edges_table(algo),
-            predicate=lambda m: (
-                m.get("run_id") == self.run_id
-                and int(m.get("superstep", -1)) <= max_superstep
-            ),
-        )
-        if snap is None:
-            raise FileNotFoundError(
-                f"read_edges({algo!r}): state meta says has_edges but no "
-                f"edge snapshot <= superstep {max_superstep} exists for "
-                f"run {self.run_id!r}"
-            )
-        return self.catalog.read_snapshot(self._edges_table(algo), snap.snapshot_id)
-
     def finish(
         self,
         algo: str,
@@ -181,8 +135,6 @@ class CheckpointManager:
         state: DataFrame,
         converged: bool = False,
         aggregates: dict | None = None,
-        edges: DataFrame | None = None,
-        mutated: bool = False,
     ) -> None:
         """Mark the run finished. If the last checkpoint already holds
         this superstep's state, only retag its meta (skips rewriting
@@ -192,7 +144,7 @@ class CheckpointManager:
         re-enters with the right aggregator state)."""
         extra = {"final": True, "converged": bool(converged)}
         last = self._last.get(algo)
-        if last is None and edges is None:
+        if last is None:
             # fresh manager resuming an earlier run: the catalog (not
             # this process) may already hold this superstep's snapshot —
             # e.g. a resume whose start_step already satisfies
@@ -216,8 +168,7 @@ class CheckpointManager:
             )
             return
         self.checkpoint(
-            algo, superstep, state, aggregates=aggregates, extra_meta=extra,
-            edges=edges, mutated=mutated,
+            algo, superstep, state, aggregates=aggregates, extra_meta=extra
         )
 
     def try_resume(self, algo: str) -> tuple[int, DataFrame, dict] | None:

@@ -185,9 +185,8 @@ class Graph:
         edges down to (src, dst) and a weight a user just loaded is
         silently stripped. Self-loops are still dropped; duplicate
         (src, dst) rows resolve to the lexicographic-min weight tuple
-        (F.min over a struct) — the same deterministic rule the
-        topology-mutation path applies to conflicting added edges
-        (pregel.pregel_run), so prepared and mutated graphs agree.
+        (F.min over a struct), so the surviving row does not depend on
+        the input order.
         """
         spark = raw_edges.sparkSession
         p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -245,19 +244,6 @@ class Graph:
     def unpersist(self) -> None:
         self.edges.unpersist()
         self.vertices.unpersist()
-
-    # B14 topology mutation (paper §3.4): none of the v0 algorithms
-    # mutate topology mid-run, but the operators exist for callers that
-    # rebuild the graph between supersteps / runs. Both return a NEW
-    # prepared Graph — state under BSP must only see a consistent graph
-    # at superstep boundaries, so mutation is a barrier operation.
-    def add_edges(self, new_edges: DataFrame) -> "Graph":
-        return Graph.prepare(self.edges.unionByName(new_edges.select("src", "dst")))
-
-    def remove_edges(self, gone_edges: DataFrame) -> "Graph":
-        return Graph.prepare(
-            self.edges.join(gone_edges.select("src", "dst"), ["src", "dst"], "left_anti")
-        )
 
 
 def undirected(graph: Graph) -> tuple[Graph, DataFrame]:

@@ -107,13 +107,8 @@ def tokenize(
     runs, empty tokens dropped. JVM split+explode — the tokenizer is
     pinned to a regex both Spark (Java regex) and DuckDB (RE2)
     evaluate identically, so ranking oracles can re-tokenize."""
-    from linkgraph.tuning import ensure_min_partitions
-
-    # under-split sources only (see shingles): spread the split+explode
-    # map work across the cores; no-op when the scan has >= cores splits
     return (
-        ensure_min_partitions(df.select(id_col, text_col))
-        .select(
+        df.select(
             id_col,
             F.explode(
                 F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")

@@ -27,30 +27,22 @@ frontier filter, a boolean frontier marker column — through these
 parts:
 
 - **resume (B10)**: the latest snapshot of an injected
-  CheckpointManager replaces the frame, the aggregates and, for a
-  mutated run, the edge table; a run recorded converged returns
-  before any Spark job.
+  CheckpointManager replaces the frame and the aggregates; a run
+  recorded converged returns before any Spark job.
 - **frame helpers**: `_make_frame` builds the frame (after a barrier,
-  a mutation, or at superstep 0 with every vertex in the frontier);
-  `_split_frame` gives the (state, frontier) pair `spec.step` reads.
+  or at superstep 0 with every vertex in the frontier); `_split_frame`
+  gives the (state, frontier) pair `spec.step` reads.
 - **`build_links`**: the checkpointed, pre-partitioned, pre-sorted
-  scatter relation (merge-joined), rebuilt after a mutation and
-  released when the loop ends.
+  scatter relation (merge-joined), built once and released when the
+  loop ends.
 - **step**: `spec.step(links, state, frontier, aggs)` under
   `fx.barrier` — scatter → unioned carried-state markers → one
   combine+apply shuffle → lazy checkpoint + global aggregators, one
   action.
-- **`resolve_mutations` / `apply_mutations`**: the barrier's (add,
-  remove) edge sets, and the edge table after them (see below).
 - **checkpoint (B9)**: every k supersteps and at finish the frame is
   written, so resume restores the EXACT frontier — required for
   non-idempotent programs (k-core's decrement counting), where
-  re-scattering already-delivered messages would corrupt state. A
-  mutated run also writes its changed edge table (paper §4.2: the
-  checkpoint must capture the graph once it diverged from the
-  input); resume re-fires mutation callbacks only for supersteps
-  after the snapshot (callbacks must be deterministic in the
-  superstep index — the paper's requirement on compute()). The
+  re-scattering already-delivered messages would corrupt state. The
   durable read-back replaces the frame.
 
 Built-in machinery the spec gets for free:
@@ -63,32 +55,9 @@ Built-in machinery the spec gets for free:
   vertices in superstep S+1".
 - **Vote-to-halt / frontier (B6)**: `spec.frontier_filter` names the
   changed column; only changed vertices scatter next superstep.
-- **Topology mutation (B14, paper §3.4)**: two request sources, both
-  resolved at the superstep BARRIER (BSP requires every superstep to
-  see a consistent graph) under the paper's pinned partial ordering —
-  removals apply first, then additions, so an edge both removed and
-  added in one barrier ends up present; conflicting adds of one
-  (src,dst) resolve to the lexicographic-min extra columns. (a) A
-  driver-side `mutations(superstep)` callback returning (add_edges,
-  remove_edges) DataFrames — scheduled growth, external feeds. (b)
-  VERTEX-INITIATED: `spec.request_mutations(new_state, aggs,
-  superstep)` derives ('add'|'remove', src, dst) request rows from
-  the program's own post-superstep state — the paper's compute()-
-  issued mutations (e.g. its clustering example, where vertices
-  decide to collapse edges), fully distributed, never collected.
-  After application the scatter relation is rebuilt, new vertices get
-  `spec.init_state` rows, and the frontier is conservatively reset to
-  the full vertex set. Edge removal never
-  deletes a vertex — existing state rows are retained even when a
-  vertex loses all its edges (the paper separates edge and vertex
-  mutation; correct for the confluent min/argmax programs; monotone
-  state already propagated over a removed edge is NOT retracted —
-  the paper's compute() semantics, where handling retraction is the
-  program's job). The callback is ALSO invoked at the barrier where
-  the run converges: a mutation returned there reactivates the run
-  (convergence does not silently skip a scheduled mutation); if the
-  run ends without the callback ever producing a mutation, a warning
-  is emitted.
+
+The graph is fixed for the whole run: a caller that changes the edge
+set rebuilds it with `Graph.prepare` and starts a new run.
 
 The one Spark-specific hazard of iterative dataflow is unbounded plan
 growth: superstep S's DataFrame references S-1's, so after ~30
@@ -167,7 +136,7 @@ class Fixpoint:
 
     def start_step(self) -> None:
         """Restart the step clock: work done since the last recorded
-        step (durable checkpoints, mutations) is not part of the next."""
+        step (durable checkpoints) is not part of the next."""
         self._t0 = time.monotonic()
 
     def barrier(
@@ -225,13 +194,14 @@ class Fixpoint:
 
 
 @contextmanager
-def fixpoint(graph, algo: str, partitions: int | None = None):
+def fixpoint(graph, algo: str):
     """`with fixpoint(graph, algo) as fx:` runs a fixpoint loop under the
     fixed-plan settings (tuning.superstep_conf: AQE off, shuffle
-    partitions = `fx.p`, derived from the graph's size unless given),
-    restored on exit. The loop's barriers and step log live on `fx`."""
+    partitions = `fx.p`, derived from the graph's size by
+    tuning.loop_partitions), restored on exit. The loop's barriers and
+    step log live on `fx`."""
     spark = graph.edges.sparkSession
-    p = partitions or loop_partitions(graph)
+    p = loop_partitions(graph)
     with superstep_conf(spark, p):
         yield Fixpoint(algo, p)
 
@@ -290,30 +260,6 @@ class PregelSpec:
     # (the CSR layout): it takes no merge hint, which Spark would log as
     # unused on every superstep
     links_joined: bool = True
-    # False = the program is not safe under barrier-time topology
-    # mutation: applying one resets the frontier to the FULL state,
-    # which re-delivers messages a non-idempotent program (k-core's
-    # decrement counting) already applied, or re-bases state a
-    # non-confluent program cannot re-settle. pregel_run raises on the
-    # unsafe combination instead of corrupting silently.
-    mutation_safe: bool = True
-    # Vertex-initiated topology mutation (paper §3.4 FULL semantics):
-    # the program itself — not a driver callback — derives mutation
-    # REQUEST rows from the post-superstep state:
-    #   request_mutations(new_state, aggs, superstep)
-    #     -> DataFrame(op string in ('add','remove'), src long, dst long,
-    #                  *extra edge columns for adds) | None
-    # Requests stay distributed end-to-end (never collected) and are
-    # applied together with the driver callback's at the same barrier
-    # (resolve_mutations / apply_mutations).
-    # Cost note: deciding "any requests this barrier?" needs one extra
-    # bounded action (a 2-row groupBy(op) count). A spec can eliminate
-    # it on quiet barriers by exposing a `mutation_requests` metric
-    # (count of would-be requests over the new state): when that key
-    # is present and 0, the engine skips evaluating requests entirely.
-    request_mutations: (
-        Callable[[DataFrame, dict, int], DataFrame | None] | None
-    ) = None
 
 
 def merge_relation(df: DataFrame, key: str, p: int, hint: bool = True) -> DataFrame:
@@ -382,100 +328,12 @@ def _split_frame(spec: PregelSpec, frame: DataFrame) -> tuple[DataFrame, DataFra
     )
 
 
-def resolve_mutations(
-    spec: PregelSpec,
-    mutations: Callable | None,
-    state: DataFrame,
-    aggs: dict,
-    superstep: int,
-    edge_cols: list[str],
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """The barrier's (add, remove) edge sets from both request sources:
-    the driver callback `mutations(superstep)` and the spec's
-    vertex-initiated `request_mutations(state, aggs, superstep)`. Adds
-    are projected to `edge_cols`, removes to (src, dst); a side nobody
-    asked for is None."""
-    adds: list = []
-    removes: list = []
-    if mutations is not None:
-        add, remove = mutations(superstep) or (None, None)
-        adds.append(add)
-        removes.append(remove)
-    # gate: when the spec exposes a `mutation_requests` metric, a zero
-    # value means no vertex asked — skip the request evaluation (and its
-    # action) entirely on quiet barriers
-    gated_off = "mutation_requests" in spec.metrics and not (
-        aggs.get("mutation_requests") or 0
-    )
-    if spec.request_mutations is not None and not gated_off:
-        req = spec.request_mutations(state, aggs, superstep)
-        if req is not None:
-            op_counts = {
-                r["op"]: r["n"]
-                for r in req.groupBy("op").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            unknown = set(op_counts) - {"add", "remove"}
-            if unknown:
-                raise ValueError(
-                    f"pregel_run({spec.algo}): request_mutations "
-                    f"emitted unknown op(s) {sorted(unknown)} — "
-                    "only 'add'/'remove' are defined (§3.4)"
-                )
-            if op_counts.get("add"):
-                adds.append(req.filter(F.col("op") == "add"))
-            if op_counts.get("remove"):
-                removes.append(req.filter(F.col("op") == "remove"))
-
-    def union(parts: list, cols: list[str]) -> DataFrame | None:
-        parts = [df.select(*cols) for df in parts if df is not None]
-        return reduce(DataFrame.unionByName, parts) if parts else None
-
-    return union(adds, edge_cols), union(removes, ["src", "dst"])
-
-
-def apply_mutations(
-    edges: DataFrame, add: DataFrame | None, remove: DataFrame | None, p: int
-) -> DataFrame:
-    """`edges` after one barrier's mutations, under the paper's §3.4
-    partial ordering: removals FIRST, then additions (an edge both
-    removed and added ends up present). Every edge column (weights
-    etc.) is kept: re-adding an existing (src,dst) replaces its row,
-    and duplicates within `add` resolve to the lexicographic-min extra
-    columns — deterministic, unlike dropDuplicates' arbitrary survivor.
-    Self-loops are dropped; the result is hash-partitioned on src into
-    `p` partitions and checkpointed."""
-    if remove is not None:
-        edges = edges.join(remove, ["src", "dst"], "left_anti")
-    if add is not None:
-        extras = [c for c in edges.columns if c not in ("src", "dst")]
-        if extras:
-            add = (
-                add.groupBy("src", "dst")
-                .agg(F.min(F.struct(*extras)).alias("_e"))
-                .select("src", "dst", "_e.*")
-            )
-        else:
-            add = add.distinct()
-        edges = edges.join(
-            add.select("src", "dst"), ["src", "dst"], "left_anti"
-        ).unionByName(add)
-    # (src,dst) is already unique — conflicts were resolved above
-    return (
-        edges.filter(F.col("src") != F.col("dst"))
-        .repartition(p, "src")
-        .localCheckpoint()
-    )
-
-
 def pregel_run(
     graph,
     spec: PregelSpec,
     *,
     max_supersteps: int,
     checkpointer=None,
-    partitions: int | None = None,
-    mutations: Callable[[int], tuple[DataFrame | None, DataFrame | None] | None]
-    | None = None,
 ) -> tuple[DataFrame, RunInfo]:
     """Run `spec` to convergence (or max_supersteps) over `graph`.
 
@@ -483,32 +341,17 @@ def pregel_run(
     Returns (state(id, *state_cols), RunInfo).
 
     Execution tuning (r6, tuning.py): the loop runs inside `fixpoint`,
-    so the partition count defaults to a scale-derived value (~1M edge
-    messages per partition, floored at half the cores) instead of the
-    session constant, and AQE is off — the recurring superstep plan is
-    fixed, so adaptive re-planning is pure per-step driver overhead
-    (measured 2.1x median-step on a 32-core host). Both settings
-    restore on return.
+    so the partition count is a scale-derived value (~1M edge messages
+    per partition, floored at half the cores) instead of the session
+    constant, and AQE is off — the recurring superstep plan is fixed,
+    so adaptive re-planning is pure per-step driver overhead (measured
+    2.1x median-step on a 32-core host). Both settings restore on
+    return.
     """
-    from linkgraph.graph import vertices_of
-
-    if not spec.mutation_safe and (
-        mutations is not None or spec.request_mutations is not None
-    ):
-        raise ValueError(
-            f"pregel_run({spec.algo}): this spec is marked "
-            "mutation_safe=False — a barrier-time topology mutation (a "
-            "mutations= callback or the spec's request_mutations) resets "
-            "the frontier to the full state, which would re-deliver "
-            "non-idempotent messages or re-base non-confluent state"
-        )
-    with fixpoint(graph, spec.algo, partitions) as fx:
+    with fixpoint(graph, spec.algo) as fx:
         info, p = fx.info, fx.p
-        edges = graph.edges
         frame = None
         aggs: dict = {}
-        mutated = False  # a mutation has been applied (possibly pre-resume)
-        edges_dirty = False  # edges changed since the last edge snapshot
 
         # resume BEFORE the |E| scatter-relation build: a run already
         # recorded converged returns without paying the prep job
@@ -523,14 +366,8 @@ def pregel_run(
             frame = snapshot.repartition(p, "id").localCheckpoint()
             # superstep S's aggregates are the input of S+1 (paper §3.3)
             aggs = meta.get("aggregates") or {}
-            if meta.get("has_edges"):
-                # a mutation happened before the snapshot: its edge table
-                # IS the graph to resume on (callbacks for supersteps >
-                # the snapshot's re-fire; earlier ones are baked in)
-                edges = checkpointer.read_edges(spec.algo, info.supersteps)
-                mutated = True
 
-        links = build_links(spec, edges, p)
+        links = build_links(spec, graph.edges, p)
         if frame is None:
             # superstep 0: every vertex scatters (confluent specs tolerate
             # a too-large frontier at the cost of one superstep)
@@ -553,43 +390,6 @@ def pregel_run(
             fx.record(aggs)
             converged = bool(spec.halt(aggs))
 
-            # Mutations resolve at EVERY barrier, including the one where
-            # the run converges (a mutation scheduled for superstep K must
-            # not be skipped because the algorithm settled at K), and
-            # BEFORE the checkpoint, so a snapshot at this barrier holds
-            # the post-mutation graph and state.
-            state = _split_frame(spec, frame)[0]
-            add, remove = resolve_mutations(
-                spec, mutations, state, aggs, info.supersteps, edges.columns
-            )
-            mutation = add is not None or remove is not None
-            if mutation and info.supersteps >= max_supersteps:
-                # terminal barrier: no superstep remains to observe the
-                # mutated graph — applying it would return state labeled
-                # converged=False for a graph it never ran on
-                warnings.warn(
-                    f"pregel_run({spec.algo}): mutation returned at the "
-                    f"max_supersteps barrier ({info.supersteps}) cannot be "
-                    "applied — no superstep remains; raise "
-                    "max_supersteps",
-                    stacklevel=2,
-                )
-            elif mutation:
-                edges = apply_mutations(edges, add, remove, p)
-                release(links)
-                links = build_links(spec, edges, p)
-                # NEW vertices get init rows; existing state is kept even
-                # if a vertex became edge-isolated (edge removal never
-                # removes a vertex — paper §3.4 separates the two); the
-                # whole state is reactivated to re-settle the new graph
-                new_ids = vertices_of(edges).repartition(p, "id").join(
-                    state, "id", "left_anti"
-                )
-                state = state.unionByName(spec.init_state(new_ids)).localCheckpoint()
-                frame = _make_frame(spec, state, "true")
-                converged = False
-                mutated = edges_dirty = True
-
             if checkpointer is not None:
                 snapshot = checkpointer.maybe_checkpoint(
                     spec.algo,
@@ -598,27 +398,12 @@ def pregel_run(
                     delta=aggs.get("delta"),
                     active=aggs.get("active"),
                     aggregates=dict(aggs),
-                    # the mutated edge table rides the snapshot (paper
-                    # §4.2: the checkpoint must capture the graph once it
-                    # diverged from the input); skipped while unchanged —
-                    # resume reads the latest edge snapshot <= its superstep
-                    edges=edges if edges_dirty else None,
-                    mutated=mutated,
                 )
                 if snapshot is not None:
                     # the durable read-back replaces the in-memory frame
                     frame = snapshot
-                    edges_dirty = False
 
         info.converged = converged
-        if mutations is not None and not mutated:
-            warnings.warn(
-                f"pregel_run({spec.algo}): the mutations callback never "
-                f"returned a mutation before the run ended at superstep "
-                f"{info.supersteps} (converged={converged}) — a mutation "
-                "scheduled for a later superstep was not applied",
-                stacklevel=2,
-            )
         release(links)
         if checkpointer is not None:
             # the final snapshot carries the frontier too: resuming an
@@ -626,6 +411,5 @@ def pregel_run(
             checkpointer.finish(
                 spec.algo, info.supersteps, frame, converged=converged,
                 aggregates=dict(aggs),
-                edges=edges if edges_dirty else None, mutated=mutated,
             )
         return _split_frame(spec, frame)[0], info

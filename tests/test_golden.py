@@ -113,17 +113,6 @@ def test_sssp_chain(graph_builder):
     assert info.converged
 
 
-def test_topology_mutation(spark, graph_builder):
-    g = graph_builder([(0, 1), (1, 2)])
-    g2 = g.add_edges(spark.createDataFrame([(2, 3)], "src long, dst long"))
-    assert g2.num_edges == 3 and g2.num_vertices == 4
-    g3 = g2.remove_edges(spark.createDataFrame([(0, 1)], "src long, dst long"))
-    assert g3.num_edges == 2
-    state, _ = connected_components(g3)
-    got = {r["id"]: r["comp"] for r in state.collect()}
-    assert got == {1: 1, 2: 1, 3: 1}
-
-
 def test_empty_graph_rejected(spark):
     import pytest
 

@@ -111,3 +111,70 @@ def test_every_module_reached_from_contract():
                     todo.append(MODULES[m])
     unreached = sorted(set(MODULES) - reached)
     assert not unreached, f"modules no contract path imports: {unreached}"
+
+
+
+def _engine_options() -> dict[str, list[str]]:
+    """The caller-settable options of the Pregel engine, read from
+    `linkgraph/pregel.py`: the defaulted `PregelSpec` fields, and every
+    parameter of `pregel_run` and `fixpoint` past the leading required
+    positional ones (graph, spec / algo)."""
+    tree = ast.parse((PKG / "pregel.py").read_text())
+    opts: dict[str, list[str]] = {}
+    for node in tree.body:
+        if isinstance(node, ast.ClassDef) and node.name == "PregelSpec":
+            opts["PregelSpec"] = [
+                s.target.id
+                for s in node.body
+                if isinstance(s, ast.AnnAssign) and s.value is not None
+            ]
+        elif isinstance(node, ast.FunctionDef) and node.name in ("pregel_run", "fixpoint"):
+            a = node.args
+            positional = a.posonlyargs + a.args
+            required = len(positional) - len(a.defaults)
+            opts[node.name] = [x.arg for x in positional[required:] + a.kwonlyargs]
+    return opts
+
+
+def _set_options(paths) -> dict[str, set[str]]:
+    """The options each engine entry point is given by some call in
+    `paths`: keywords (and positionals past the required ones) of
+    `pregel_run(...)` / `fixpoint(...)`, and keywords of `PregelSpec(...)`
+    or `replace(...)` (dataclasses.replace of a spec)."""
+    params = {
+        node.name: [x.arg for x in node.args.posonlyargs + node.args.args]
+        for node in ast.parse((PKG / "pregel.py").read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name in ("pregel_run", "fixpoint")
+    }
+    got: dict[str, set[str]] = {"PregelSpec": set(), "pregel_run": set(), "fixpoint": set()}
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            kws = {k.arg for k in node.keywords if k.arg is not None}
+            if name in ("PregelSpec", "replace"):
+                got["PregelSpec"] |= kws
+            elif name in params:
+                got[name] |= kws | set(params[name][: len(node.args)])
+    return got
+
+
+def test_every_engine_option_has_a_caller():
+    """An engine option that no code outside the tests sets is a second
+    path kept green for nothing: every defaulted `PregelSpec` field and
+    every optional parameter of `pregel_run` / `fixpoint` is set by some
+    call in `linkgraph/` or a contract file, or it is deleted. A test
+    that needs another partition count monkeypatches
+    `linkgraph.pregel.loop_partitions` instead of adding a knob."""
+    options = _engine_options()
+    assert "frontier_filter" in options["PregelSpec"]
+    assert "checkpointer" in options["pregel_run"]
+    got = _set_options(SOURCES + CONTRACT)
+    unused = {
+        entry: sorted(set(names) - got[entry])
+        for entry, names in options.items()
+        if set(names) - got[entry]
+    }
+    assert not unused, f"engine options no caller sets: {unused}"

@@ -1,4 +1,4 @@
-"""Generic vertex-program API tests (paper §2/§3.1/§3.3/§3.4):
+"""Generic vertex-program API tests (paper §2/§3.1/§3.3):
 
 1. a NEW algorithm written as a ~15-line PregelSpec (max-value
    propagation) runs on the shared driver and matches a pure-python
@@ -6,9 +6,8 @@
    a spec, not a copy of the superstep loop;
 2. user-defined global aggregators (spec.metrics) are recorded every
    superstep and visible to the next step() call;
-3. mid-compute topology mutation resolved at the superstep barrier:
-   added edges merge components exactly as a static run on the final
-   graph; removed edges stop future message flow.
+3. the engine's cost and logging contracts: a superstep is one Spark
+   job, and every loop on the shared barrier logs per-step walls.
 """
 
 from __future__ import annotations
@@ -108,397 +107,22 @@ def test_aggregates_visible_to_next_step(graph_builder):
                for i, a in enumerate(seen[1:]))
 
 
-def test_mutation_add_edge_merges_components(spark, graph_builder):
-    """B14: an edge added at the superstep-2 barrier merges two
-    components; the final labels equal a static run on the final
-    graph (min-label is confluent under addition)."""
-    g = graph_builder([(0, 1), (1, 2), (10, 11), (11, 12)])
-    bridge = spark.createDataFrame([(2, 10)], "src long, dst long")
-
-    def mutations(superstep):
-        return (bridge, None) if superstep == 2 else None
-
-    state, info = connected_components(g, mutations=mutations)
-    got = {r["id"]: r["comp"] for r in state.collect()}
-    g_final = graph_builder([(0, 1), (1, 2), (2, 10), (10, 11), (11, 12)])
-    want_state, _ = connected_components(g_final)
-    want = {r["id"]: r["comp"] for r in want_state.collect()}
-    assert got == want == {i: 0 for i in got}
-
-
-def test_mutation_add_edge_with_new_vertices(spark, graph_builder):
-    """Added edges may introduce vertices unseen at start: they must
-    get init_state rows and participate from the next superstep."""
-    g = graph_builder([(0, 1)])
-    growth = spark.createDataFrame([(1, 5), (5, 6)], "src long, dst long")
-
-    def mutations(superstep):
-        return (growth, None) if superstep == 1 else None
-
-    state, _ = connected_components(g, mutations=mutations)
-    got = {r["id"]: r["comp"] for r in state.collect()}
-    assert got == {0: 0, 1: 0, 5: 0, 6: 0}
-
-
-def test_mutation_remove_edge_stops_propagation(spark, graph_builder):
-    """A chain 0→1→2→3→4 whose (2,3) edge is removed at the barrier
-    after superstep 1 — before the frontier reaches it — leaves 3,4
-    unreachable, exactly like a static run without that edge."""
-    g = graph_builder([(0, 1), (1, 2), (2, 3), (3, 4)])
-    cut = spark.createDataFrame([(2, 3)], "src long, dst long")
-
-    def mutations(superstep):
-        return (None, cut) if superstep == 1 else None
-
-    state, _ = sssp(g, source=0, mutations=mutations)
-    got = {r["id"]: r["dist"] for r in state.collect()}
-    assert got[0] == 0.0 and got[1] == 1.0 and got[2] == 2.0
-    assert got[3] == float("inf") and got[4] == float("inf")
-
-
-def test_vertex_initiated_add_matches_driver_callback(spark, graph_builder):
-    """Paper §3.4 FULL semantics: the program itself derives mutation
-    requests from its post-superstep state (vertices whose comp == 10
-    request an edge to id-10, collapsing the two components) and the
-    result matches the driver-callback equivalent exactly."""
-    import dataclasses
-
-    from linkgraph.algorithms.components import components_spec
-    from linkgraph.pregel import pregel_run
-
-    edges = [(0, 1), (1, 2), (10, 11), (11, 12)]
-
-    def requests(new_state, aggs, superstep):
-        if superstep != 2:
-            return None
-        return new_state.filter(F.col("comp") == 10).select(
-            F.lit("add").alias("op"),
-            F.col("id").alias("src"),
-            (F.col("id") - 10).alias("dst"),
-        )
-
-    spec = dataclasses.replace(components_spec(), request_mutations=requests)
-    state, info = pregel_run(graph_builder(edges), spec, max_supersteps=50)
-    got = {r["id"]: r["comp"] for r in state.collect()}
-
-    add_df = spark.createDataFrame(
-        [(10, 0), (11, 1), (12, 2)], "src long, dst long"
-    )
-    state2, info2 = pregel_run(
-        graph_builder(edges),
-        components_spec(),
-        max_supersteps=50,
-        mutations=lambda s: (add_df, None) if s == 2 else None,
-    )
-    got2 = {r["id"]: r["comp"] for r in state2.collect()}
-    assert got == got2
-    assert set(got.values()) == {0}  # one merged component
-    assert info.converged and info2.converged
-
-
-def test_vertex_initiated_remove_stops_propagation(spark, graph_builder):
-    """Vertex-initiated edge collapse: the vertex that just reached
-    dist 1 cuts its outgoing edge (a state-derived remove request),
-    leaving the tail unreachable — the compute()-side mirror of the
-    driver-callback removal test above."""
-    import dataclasses
-
-    from linkgraph.algorithms.sssp import sssp_spec
-    from linkgraph.pregel import pregel_run
-
-    def requests(new_state, aggs, superstep):
-        if superstep != 1:
-            return None
-        return new_state.filter(F.col("dist") == 1.0).select(
-            F.lit("remove").alias("op"),
-            F.col("id").alias("src"),
-            (F.col("id") + 1).alias("dst"),
-        )
-
-    spec = dataclasses.replace(sssp_spec(0), request_mutations=requests)
-    g = graph_builder([(0, 1), (1, 2), (2, 3), (3, 4)])
-    state, _ = pregel_run(g, spec, max_supersteps=50)
-    got = {r["id"]: r["dist"] for r in state.collect()}
-    inf = float("inf")
-    assert got == {0: 0.0, 1: 1.0, 2: inf, 3: inf, 4: inf}
-
-
-def test_mutation_ordering_removal_then_addition(spark, graph_builder):
-    """§3.4 pinned partial ordering: an edge both removed and added at
-    the same barrier ends up PRESENT (removals first, then additions).
-    Observable: a removal-only run on the same schedule splits the
-    graph, the remove+add run does not."""
-    from linkgraph.algorithms.components import connected_components
-
-    edges = [(0, 1), (1, 2), (2, 10), (10, 11)]
-    both = spark.createDataFrame([(2, 10)], "src long, dst long")
-
-    state, info = connected_components(
-        graph_builder(edges),
-        mutations=lambda s: (both, both) if s == 1 else None,
-    )
-    got = {r["id"]: r["comp"] for r in state.collect()}
-    assert set(got.values()) == {0}, "addition must win: edge present"
-    assert info.converged
-
-    state2, info2 = connected_components(
-        graph_builder(edges),
-        mutations=lambda s: (None, both) if s == 1 else None,
-    )
-    got2 = {r["id"]: r["comp"] for r in state2.collect()}
-    assert got2 == {0: 0, 1: 0, 2: 0, 10: 2, 11: 2}
-    assert info2.converged
-
-
-def test_callback_remove_and_requested_add_at_one_barrier(spark, graph_builder):
-    """Both request sources at ONE barrier: the driver callback removes
-    (2,10) while a vertex-initiated request re-adds it at superstep 1.
-    The resolver merges them and §3.4's removals-first ordering keeps
-    the edge, so one component remains; the callback's removal alone
-    (control) splits the graph."""
-    import dataclasses
-
-    from linkgraph.algorithms.components import components_spec
-
-    edges = [(0, 1), (1, 2), (2, 10), (10, 11)]
-    cut = spark.createDataFrame([(2, 10)], "src long, dst long")
-
-    def callback(superstep):
-        return (None, cut) if superstep == 1 else None
-
-    def requests(new_state, aggs, superstep):
-        if superstep != 1:
-            return None
-        return new_state.filter(F.col("id") == 2).select(
-            F.lit("add").alias("op"),
-            F.col("id").alias("src"),
-            F.lit(10).cast("long").alias("dst"),
-        )
-
-    spec = dataclasses.replace(components_spec(), request_mutations=requests)
-    state, info = pregel_run(
-        graph_builder(edges), spec, max_supersteps=50, mutations=callback
-    )
-    got = {r["id"]: r["comp"] for r in state.collect()}
-    assert set(got.values()) == {0}, "the requested add must win"
-    assert info.converged
-
-    state2, info2 = pregel_run(
-        graph_builder(edges), components_spec(), max_supersteps=50,
-        mutations=callback,
-    )
-    got2 = {r["id"]: r["comp"] for r in state2.collect()}
-    assert got2 == {0: 0, 1: 0, 2: 0, 10: 2, 11: 2}
-    assert info2.converged
-
-
-def test_request_mutations_gate_metric_skips_quiet_barriers(
-    spark, graph_builder
-):
-    """A spec exposing a `mutation_requests` metric is never asked for
-    requests on barriers where the metric is 0 — the zero-request
-    common case costs no extra Spark action."""
-    import dataclasses
-
-    from linkgraph.algorithms.components import components_spec
-    from linkgraph.pregel import pregel_run
-
-    calls = []
-
-    def requests(new_state, aggs, superstep):
-        calls.append(superstep)
-        return None
-
-    base = components_spec()
-    spec = dataclasses.replace(
-        base,
-        metrics={
-            **base.metrics,
-            "mutation_requests": F.sum(F.lit(0).cast("long")),
-        },
-        request_mutations=requests,
-    )
-    _, info = pregel_run(graph_builder([(0, 1), (1, 2)]), spec, max_supersteps=10)
-    assert info.converged
-    assert calls == []
-
-
-def test_request_mutations_unknown_op_rejected(spark, graph_builder):
-    """Request rows with an op outside {'add','remove'} are a program
-    bug — rejected with a ValueError, not silently dropped."""
-    import dataclasses
-
-    import pytest
-
-    from linkgraph.algorithms.components import components_spec
-    from linkgraph.pregel import pregel_run
-
-    def requests(new_state, aggs, superstep):
-        return new_state.select(
-            F.lit("frobnicate").alias("op"),
-            F.col("id").alias("src"),
-            (F.col("id") + 1).alias("dst"),
-        )
-
-    spec = dataclasses.replace(components_spec(), request_mutations=requests)
-    with pytest.raises(ValueError, match="unknown op"):
-        pregel_run(graph_builder([(0, 1)]), spec, max_supersteps=5)
-
-
-def test_mutation_unsafe_spec_rejected(spark, graph_builder):
-    """Specs marked mutation_safe=False (k-core's decrement counting,
-    the h-index core decomposition) must refuse a mutations= callback
-    up front — the barrier-time frontier reset would re-deliver
-    non-idempotent messages. The old docstring contract is now code."""
-    import pytest
-
-    from linkgraph.algorithms.kcore import core_number_spec, kcore_spec
-    from linkgraph.graph import symmetrize
-    from linkgraph.pregel import pregel_run
-
-    g = graph_builder([(0, 1), (1, 2)])
-    sym = symmetrize(g.edges)
-    degrees = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    noop = spark.createDataFrame([(0, 2)], "src long, dst long")
-    for spec in (kcore_spec(2, degrees), core_number_spec(degrees)):
-        with pytest.raises(ValueError, match="mutation_safe=False"):
-            pregel_run(
-                g, spec, max_supersteps=5, mutations=lambda s: (noop, None)
-            )
-    # same guard for vertex-initiated requests authored into the spec
-    import dataclasses
-
-    unsafe = dataclasses.replace(
-        kcore_spec(2, degrees),
-        request_mutations=lambda st, aggs, s: None,
-    )
-    with pytest.raises(ValueError, match="mutation_safe=False"):
-        pregel_run(g, unsafe, max_supersteps=5)
-
-
-def test_mutations_with_checkpointer_resume_equals_uninterrupted(
-    spark, graph_builder, tmp_path
-):
-    """B9+B14 composition (r4): checkpoints of a topology-mutating run
-    snapshot the CURRENT edge table alongside state; a run killed after
-    the mutation resumes on the mutated graph (not the input graph) and
-    converges to exactly the uninterrupted result. The mutation fires at
-    superstep 1, the checkpoint cadence hits at superstep 2, the run is
-    killed at 3 — resume must NOT re-fire the superstep-1 callback (its
-    effect is baked into the restored edge snapshot)."""
-    from linkgraph.catalog import ParquetManifestCatalog
-    from linkgraph.checkpoint import CheckpointManager
-
-    # two chains; the mutation bridges them and adds a brand-new vertex
-    edges = [(0, 1), (1, 2), (10, 11), (11, 12)]
-    g = graph_builder(edges)
-    bridge = spark.createDataFrame([(2, 10), (12, 20)], "src long, dst long")
-    fired: list[int] = []
-
-    def mutations(superstep):
-        fired.append(superstep)
-        return (bridge, None) if superstep == 1 else None
-
-    full_state, full_info = connected_components(g, mutations=mutations)
-    want = {r["id"]: r["comp"] for r in full_state.collect()}
-    assert want == {i: 0 for i in want} and 20 in want
-
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "wh"))
-    ck = CheckpointManager(cat, run_id="mut1", every=2)
-    fired.clear()
-    connected_components(
-        g, max_supersteps=3, checkpointer=ck, mutations=mutations
-    )
-    assert 1 in fired  # mutation applied before the "crash"
-
-    ck2 = CheckpointManager(cat, run_id="mut1", every=2)
-    resumed = ck2.try_resume("components")
-    assert resumed is not None and resumed[2].get("has_edges")
-    # the restored edge table is the post-mutation graph
-    restored = ck2.read_edges("components", resumed[0])
-    got_edges = {(r["src"], r["dst"]) for r in restored.collect()}
-    assert (2, 10) in got_edges and (12, 20) in got_edges
-
-    fired.clear()
-    state_b, info_b = connected_components(
-        g, checkpointer=ck2, mutations=mutations
-    )
-    got = {r["id"]: r["comp"] for r in state_b.collect()}
-    assert got == want
-    assert 1 not in fired  # superstep-1 callback not re-fired on resume
-
-
-def test_resume_from_mutation_barrier_snapshot(spark, graph_builder, tmp_path):
-    """The snapshot written AT a mutation barrier (every=1: superstep
-    1's, right after the mutation) holds the post-mutation graph and a
-    frontier reset to every vertex. A run that crashes in superstep 2's
-    callback resumes from it to the uninterrupted labels, without
-    re-firing the superstep-1 callback."""
-    from linkgraph.catalog import ParquetManifestCatalog
-    from linkgraph.checkpoint import CheckpointManager
-
-    edges = [(0, 1), (1, 2), (10, 11), (11, 12)]
-    g = graph_builder(edges)
-    bridge = spark.createDataFrame([(2, 10), (12, 20)], "src long, dst long")
-    fired: list[int] = []
-    crash = [False]
-
-    def mutations(superstep):
-        fired.append(superstep)
-        if crash[0] and superstep == 2:
-            raise RuntimeError("simulated crash at superstep 2")
-        return (bridge, None) if superstep == 1 else None
-
-    full_state, _ = connected_components(g, mutations=mutations)
-    want = {r["id"]: r["comp"] for r in full_state.collect()}
-    assert want == {i: 0 for i in want} and 20 in want
-
-    cat = ParquetManifestCatalog(spark, str(tmp_path / "wh"))
-    crash[0] = True
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        connected_components(
-            g, checkpointer=CheckpointManager(cat, run_id="mut2", every=1),
-            mutations=mutations,
-        )
-    crash[0] = False
-
-    ck = CheckpointManager(cat, run_id="mut2", every=1)
-    step, snap, meta = ck.try_resume("components")
-    assert step == 1 and meta.get("has_edges")
-    assert {r["_frontier"] for r in snap.collect()} == {True}
-    assert 20 in {r["id"] for r in snap.collect()}  # new vertex initialized
-
-    fired.clear()
-    state_b, info_b = connected_components(g, checkpointer=ck, mutations=mutations)
-    got = {r["id"]: r["comp"] for r in state_b.collect()}
-    assert got == want
-    assert info_b.converged
-    assert 1 not in fired  # superstep-1 callback not re-fired on resume
-
-
-def test_mutation_preserves_weights_and_isolated_vertices(spark):
-    """Regressions from review: (a) mutations on a weighted edge table
-    must keep the weight column through the barrier rebuild; (b) a
-    vertex with no edges (or whose edges were removed) keeps its state
-    row — edge mutation never deletes vertices."""
+def test_weighted_sssp_keeps_isolated_vertices(spark):
+    """A hand-built Graph with a weighted edge table and an isolated
+    vertex: weighted SSSP sums weights along the cheapest path, and the
+    isolated vertex keeps its state row at distance inf."""
     from linkgraph.graph import Graph
 
     edf = spark.createDataFrame(
-        [(0, 1, 2.0), (1, 2, 5.0)], "src long, dst long, w double"
+        [(0, 1, 2.0), (1, 2, 5.0), (0, 2, 10.0)], "src long, dst long, w double"
     )
     verts = spark.createDataFrame([(0,), (1,), (2,), (9,)], "id long")  # 9 isolated
-    g = Graph(edges=edf, vertices=verts, num_vertices=4, num_edges=2)
-    add = spark.createDataFrame([(0, 2, 10.0)], "src long, dst long, w double")
+    g = Graph(edges=edf, vertices=verts, num_vertices=4, num_edges=3)
 
-    state, _ = sssp(
-        g, source=0, weight_col="w",
-        mutations=lambda s: (add, None) if s == 1 else None,
-    )
+    state, _ = sssp(g, source=0, weight_col="w")
     got = {r["id"]: r["dist"] for r in state.collect()}
     assert got[0] == 0.0 and got[1] == 2.0
-    assert got[2] == 7.0  # via 0→1→2 (2+5), beats the added 10.0 edge
+    assert got[2] == 7.0  # via 0→1→2 (2+5), beats the direct 10.0 edge
     assert got[9] == float("inf")  # isolated vertex still present
 
 
@@ -666,8 +290,7 @@ def test_components_estimate_aggregator(spark, graph_builder):
 def test_graph_prepare_weight_cols(spark):
     """VERDICT r3 #2: Graph.prepare(weight_cols=[...]) carries the
     weight through canonicalization — self-loops dropped, duplicate
-    (src,dst) resolved to the min weight tuple deterministically (the
-    same rule the mutation path applies to conflicting added edges)."""
+    (src,dst) resolved to the min weight tuple deterministically."""
     import pytest
 
     from linkgraph.graph import Graph
@@ -721,80 +344,3 @@ def test_scc_empty_graph(spark):
     assert state.columns == ["id", "scc"]
     assert state.count() == 0
     assert info.converged
-
-
-def test_mutation_at_convergence_barrier_reactivates(spark, graph_builder):
-    """ADVICE r2: a mutation returned at the exact barrier where the
-    run converges must be applied and the run reactivated — convergence
-    must not silently beat a scheduled mutation."""
-    g = graph_builder([(0, 1)])
-    _, base_info = connected_components(g)
-    assert base_info.converged
-    k = base_info.supersteps  # the convergence barrier
-    bridge = spark.createDataFrame([(1, 5)], "src long, dst long")
-    fired = []
-
-    def mutations(s):
-        if s == k and not fired:
-            fired.append(s)
-            return (bridge, None)
-        return None
-
-    state, info = connected_components(g, mutations=mutations)
-    got = {r["id"]: r["comp"] for r in state.collect()}
-    assert fired == [k]  # the callback DID run at the converged barrier
-    assert got == {0: 0, 1: 0, 5: 0}  # the bridge was applied
-    assert info.converged and info.supersteps > k
-
-
-def test_mutation_never_applied_warns(spark, graph_builder):
-    """A run that ends without the mutations callback ever producing a
-    mutation (e.g. one scheduled past convergence) must warn."""
-    import warnings as W
-
-    g = graph_builder([(0, 1)])
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        _, info = connected_components(g, mutations=lambda s: None)
-    assert info.converged
-    assert any("never returned a mutation" in str(w.message) for w in caught)
-
-
-def test_mutation_readd_edge_replaces_weight_deterministically(spark):
-    """ADVICE r2: re-adding an existing (src,dst) with a new weight must
-    deterministically replace the old row (last-write-wins), not leave
-    whichever survivor dropDuplicates happened to keep."""
-    from linkgraph.graph import Graph
-    from linkgraph.algorithms import sssp as _sssp
-
-    edf = spark.createDataFrame(
-        [(0, 1, 5.0), (1, 2, 1.0)], "src long, dst long, w double"
-    )
-    verts = spark.createDataFrame([(0,), (1,), (2,)], "id long")
-    g = Graph(edges=edf, vertices=verts, num_vertices=3, num_edges=2)
-    upd = spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, w double")
-    state, _ = _sssp(
-        g, source=0, weight_col="w",
-        mutations=lambda s: (upd, None) if s == 1 else None,
-    )
-    got = {r["id"]: r["dist"] for r in state.collect()}
-    assert got[1] == 1.0 and got[2] == 2.0
-
-
-def test_mutation_at_max_supersteps_barrier_warns_not_applied(spark, graph_builder):
-    """Review fix: a mutation returned at the terminal max_supersteps
-    barrier cannot run (no superstep remains) — it must warn instead of
-    being silently dropped or half-applied."""
-    import warnings as W
-
-    g = graph_builder([(0, 1)])
-    bridge = spark.createDataFrame([(1, 7)], "src long, dst long")
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        state, info = connected_components(
-            g, max_supersteps=2, mutations=lambda s: (bridge, None) if s == 2 else None
-        )
-    assert info.supersteps == 2
-    got = {r["id"] for r in state.collect()}
-    assert 7 not in got  # not half-applied
-    assert any("cannot be applied" in str(w.message) for w in caught)
