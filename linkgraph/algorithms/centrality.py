@@ -66,13 +66,15 @@ def bfs_levels(
 ) -> DataFrame:
     """Multi-source BFS over the symmetrized edges `und` from every
     source in `sources(s)`, at most `max_hops` hops. Returns the
-    (s, v, d, sigma) rows of every reached pair: d is the hop distance
-    (0 for the source itself). With `count_paths`, sigma is the exact
-    number of shortest s-v paths (BIGINT; σ(s,v) = Σ σ(s,u) over the
-    predecessors u, so the recurrence is the message combiner).
-    Without it sigma is 0 everywhere: a caller that needs only the
-    levels cannot overflow BIGINT on graphs with more than 2^63
-    shortest paths between a pair (deep grids, road networks).
+    (s, v, d) rows of every reached pair: d is the hop distance (0 for
+    the source itself). With `count_paths` the rows also carry sigma,
+    the exact number of shortest s-v paths (BIGINT; σ(s,v) = Σ σ(s,u)
+    over the predecessors u, so the recurrence is the message
+    combiner). Without it each hop only dedups the reached pairs: no
+    sigma column rides the shuffles and checkpoints, and a caller that
+    needs only the levels cannot overflow BIGINT on graphs with more
+    than 2^63 shortest paths between a pair (deep grids, road
+    networks).
 
     The known set is APPEND-ONLY with LSM-style compaction
     (`pregel.log_append`): each hop checkpoints its increment (the new
@@ -81,26 +83,30 @@ def bfs_levels(
     scans O(log depth) parts. Each hop is one `fx` barrier, recorded
     when it reached a new pair; a hop that reaches none ends the BFS
     and marks `fx.info` converged."""
+    sigma = ["sigma"] if count_paths else []
     seed, vals = fx.barrier(
         sources.select(
             "s",
             F.col("s").alias("v"),
             F.lit(0).alias("d"),
-            F.lit(int(count_paths)).cast("long").alias("sigma"),
+            *[F.lit(1).cast("long").alias(c) for c in sigma],
         ),
         {"active": F.count(F.lit(1))},
     )
     parts: list = []
     log_append(parts, seed, vals["active"])
-    frontier = seed.select("s", "v", "sigma")
+    frontier = seed.select("s", "v", *sigma)
     for h in range(1, max_hops + 1):
         known_keys = log_union(parts).select("s", "v")
+        reached = frontier.join(und, frontier["v"] == und["src"])
+        reached = (
+            reached.groupBy("s", F.col("dst").alias("v")).agg(F.sum("sigma").alias("sigma"))
+            if count_paths
+            else reached.select("s", F.col("dst").alias("v")).distinct()
+        )
         nxt, vals = fx.barrier(
-            frontier.join(und, frontier["v"] == und["src"])
-            .groupBy("s", F.col("dst").alias("v"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(known_keys, ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(h).alias("d"), "sigma"),
+            reached.join(known_keys, ["s", "v"], "left_anti")
+            .select("s", "v", F.lit(h).alias("d"), *sigma),
             {"active": F.count(F.lit(1))},
         )
         if vals["active"] == 0:
@@ -108,7 +114,7 @@ def bfs_levels(
             break
         fx.record(vals)
         log_append(parts, nxt, vals["active"])
-        frontier = nxt.select("s", "v", "sigma")
+        frontier = nxt.select("s", "v", *sigma)
     return log_union(parts)
 
 

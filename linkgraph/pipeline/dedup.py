@@ -94,14 +94,20 @@ def shingles(
     # full pass over every character window — measured 2.3x cold / par
     # warm vs the filter form, and the short-doc guard needs no
     # per-element test anyway (a doc shorter than k has no k-gram).
+    from linkgraph.tuning import ensure_min_partitions
+
     low = F.lower(F.col(text_col)).alias("_t")
     grams = F.expr(
         f"CASE WHEN length(_t) < {k} THEN CAST(array() AS array<string>) "
         f"ELSE array_distinct(transform(sequence(1, length(_t) - {k - 1}), "
         f"i -> substring(_t, i, {k}))) END"
     )
-    return df.select(F.col(id_col).alias("id"), low).select(
-        "id", F.explode(grams).alias("shingle")
+    # under-split sources only (one-row-group files): spread the
+    # compute-heavy window projection across the cores; a no-op (and no
+    # exchange) whenever the scan already has >= cores splits
+    return (
+        ensure_min_partitions(df.select(F.col(id_col).alias("id"), low))
+        .select("id", F.explode(grams).alias("shingle"))
     )
 
 

@@ -107,6 +107,10 @@ def tokenize(
     runs, empty tokens dropped. JVM split+explode — the tokenizer is
     pinned to a regex both Spark (Java regex) and DuckDB (RE2)
     evaluate identically, so ranking oracles can re-tokenize."""
+    # no `tuning.ensure_min_partitions` here, unlike `dedup.shingles`:
+    # on a one-row-group source the round-robin exchange costs more
+    # than the split+explode it spreads (tfidf_top_terms over sf0.1,
+    # 4 cores: 0.92 s without it, 0.99 s with it)
     return (
         df.select(
             id_col,

@@ -136,29 +136,111 @@ def _engine_options() -> dict[str, list[str]]:
     return opts
 
 
+def _is_spec_annotation(ann) -> bool:
+    return (isinstance(ann, ast.Name) and ann.id == "PregelSpec") or (
+        isinstance(ann, ast.Constant) and ann.value == "PregelSpec"
+    )
+
+
 def _set_options(paths) -> dict[str, set[str]]:
     """The options each engine entry point is given by some call in
     `paths`: keywords (and positionals past the required ones) of
     `pregel_run(...)` / `fixpoint(...)`, and keywords of `PregelSpec(...)`
-    or `replace(...)` (dataclasses.replace of a spec)."""
+    or of a `dataclasses.replace(spec, ...)` whose first argument is a
+    spec: a call of `PregelSpec` or of a function annotated to return
+    one, or a name bound to such a call or annotated `PregelSpec`. A
+    `replace` that is not `dataclasses.replace` (`DataFrame.replace`,
+    `str.replace`) or that copies some other dataclass sets no option."""
     params = {
         node.name: [x.arg for x in node.args.posonlyargs + node.args.args]
         for node in ast.parse((PKG / "pregel.py").read_text()).body
         if isinstance(node, ast.FunctionDef) and node.name in ("pregel_run", "fixpoint")
     }
+    trees = [ast.parse(path.read_text(), filename=str(path)) for path in paths]
+    producers = {"PregelSpec"} | {
+        node.name
+        for tree in trees
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and _is_spec_annotation(node.returns)
+    }
+
+    def call_name(node):
+        f = node.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
     got: dict[str, set[str]] = {"PregelSpec": set(), "pregel_run": set(), "fixpoint": set()}
-    for path in paths:
-        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+    for tree in trees:
+        modules = {
+            a.asname or a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Import)
+            for a in n.names
+            if a.name == "dataclasses"
+        }
+        replaces = {
+            a.asname or a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom) and n.module == "dataclasses"
+            for a in n.names
+            if a.name == "replace"
+        }
+        specs = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign)
+            and isinstance(n.value, ast.Call)
+            and call_name(n.value) in producers
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        } | {
+            n.arg
+            for n in ast.walk(tree)
+            if isinstance(n, ast.arg) and _is_spec_annotation(n.annotation)
+        }
+
+        def is_spec(node) -> bool:
+            if isinstance(node, ast.Call):
+                return call_name(node) in producers
+            return isinstance(node, ast.Name) and node.id in specs
+
+        for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
             f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            name = call_name(node)
             kws = {k.arg for k in node.keywords if k.arg is not None}
-            if name in ("PregelSpec", "replace"):
+            is_replace = (isinstance(f, ast.Name) and f.id in replaces) or (
+                isinstance(f, ast.Attribute)
+                and f.attr == "replace"
+                and isinstance(f.value, ast.Name)
+                and f.value.id in modules
+            )
+            if name == "PregelSpec" or (is_replace and node.args and is_spec(node.args[0])):
                 got["PregelSpec"] |= kws
             elif name in params:
                 got[name] |= kws | set(params[name][: len(node.args)])
     return got
+
+
+def test_set_options_counts_only_spec_replace(tmp_path):
+    """Only `dataclasses.replace` of a spec sets a spec field: a
+    `.replace(...)` of a DataFrame or a copy of another dataclass with
+    a keyword of the same name does not."""
+    src = tmp_path / "m.py"
+    src.write_text(
+        "import dataclasses\n"
+        "from dataclasses import replace\n"
+        "def make() -> PregelSpec: ...\n"
+        "def f(g: Graph, base: PregelSpec, df):\n"
+        "    spec = make()\n"
+        "    replace(spec, halt=None)\n"
+        "    dataclasses.replace(base, metrics={})\n"
+        "    replace(make(), state_cols=())\n"
+        "    replace(g, edges=None)\n"
+        "    df.replace(frontier_filter=1)\n"
+        "    df.na.replace(links_key=1)\n"
+    )
+    assert _set_options([src])["PregelSpec"] == {"halt", "metrics", "state_cols"}
 
 
 def test_every_engine_option_has_a_caller():
