@@ -6,7 +6,7 @@ sampled-source approximation (Brandes & Pich 2007): for each source s
 in a pivot set S,
 
   forward:   BFS levels d(s,·) with shortest-path counts
-             σ(s,v) = Σ_{u pred of v} σ(s,u)            (exact BIGINTs)
+             σ(s,v) = Σ_{u pred of v} σ(s,u)     (DOUBLE, exact < 2^53)
   backward:  dependency accumulation, deepest level first:
              δ(s,v) = Σ_{w succ of v} σ(s,v)/σ(s,w) · (1 + δ(s,w))
   score:     bc(v) = Σ_{s ≠ v} δ(s,v)
@@ -28,8 +28,10 @@ are per-level joins, never per-path work.
   groupBy (s, v) SUM — again a single combined exchange per level.
 
 State is |S|·|V| rows at completion (pivot counts are small); path
-COUNTS are BIGINT-exact (no float σ drift); δ is float with the sum
-round-off the driver compare absorbs at 6 dp. Per-hop/level actions:
+counts are DOUBLE — exact below 2^53, and a graph with more than 2^63
+shortest paths between a pair (where a BIGINT sum overflows) still
+finishes; δ is float with the sum round-off the driver compare absorbs
+at 6 dp. Per-hop/level actions:
 one count (forward emptiness) and none in the backward unroll.
 """
 
@@ -54,7 +56,7 @@ def betweenness(
     """Returns ((id, betweenness) for every vertex — raw Brandes sums
     over the pivot set, no normalization —, RunInfo).
 
-    The forward pass is `centrality.bfs_levels` (levels and exact σ;
+    The forward pass is `centrality.bfs_levels` (levels and σ;
     each hop one `fixpoint` barrier, logged when it reached a new
     vertex). The backward pass checkpoints only each level's δ
     increment and joins the δ of the level below directly (δ rows are
@@ -65,7 +67,7 @@ def betweenness(
         src = sources if sources is not None else pick_landmarks(graph, num_sources)
         src = src.select(F.col("lm").alias("s")) if "lm" in src.columns else src
 
-        # ---- forward: levels + exact path counts ----------------------
+        # ---- forward: levels + path counts ----------------------------
         known = bfs_levels(fx, und, src, max_hops, count_paths=True)
         depth = fx.info.supersteps
 
@@ -104,8 +106,7 @@ def betweenness(
                 .groupBy("s", "v")
                 .agg(
                     F.sum(
-                        F.col("sigma").cast("double")
-                        / F.col("sigma_w")
+                        F.col("sigma") / F.col("sigma_w")
                         * (F.lit(1.0) + F.col("delta_w"))
                     ).alias("delta")
                 )

@@ -68,13 +68,13 @@ def bfs_levels(
     source in `sources(s)`, at most `max_hops` hops. Returns the
     (s, v, d) rows of every reached pair: d is the hop distance (0 for
     the source itself). With `count_paths` the rows also carry sigma,
-    the exact number of shortest s-v paths (BIGINT; σ(s,v) = Σ σ(s,u)
-    over the predecessors u, so the recurrence is the message
-    combiner). Without it each hop only dedups the reached pairs: no
-    sigma column rides the shuffles and checkpoints, and a caller that
-    needs only the levels cannot overflow BIGINT on graphs with more
-    than 2^63 shortest paths between a pair (deep grids, road
-    networks).
+    the number of shortest s-v paths (σ(s,v) = Σ σ(s,u) over the
+    predecessors u, so the recurrence is the message combiner). σ is a
+    DOUBLE: exact below 2^53, and deep grids or layered graphs with
+    more than 2^63 shortest paths between a pair, where a BIGINT sum
+    overflows, still finish. Without `count_paths` each hop only dedups
+    the reached pairs: no sigma column rides the shuffles and
+    checkpoints.
 
     The known set is APPEND-ONLY with LSM-style compaction
     (`pregel.log_append`): each hop checkpoints its increment (the new
@@ -89,7 +89,7 @@ def bfs_levels(
             "s",
             F.col("s").alias("v"),
             F.lit(0).alias("d"),
-            *[F.lit(1).cast("long").alias(c) for c in sigma],
+            *[F.lit(1.0).alias(c) for c in sigma],
         ),
         {"active": F.count(F.lit(1))},
     )

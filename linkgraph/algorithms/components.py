@@ -55,29 +55,17 @@ def min_relax(
     )
 
 
-def components_spec(estimate_components: bool = False) -> PregelSpec:
-    """estimate_components adds a user-defined global aggregator (B7,
-    paper §3.3) on a non-toy metric: `n_components_est`, a HyperLogLog
-    estimate (approx_count_distinct) of the DISTINCT labels remaining
-    after each superstep. It rides the same barrier job as the halt
-    metric — zero extra actions — and gives live convergence telemetry
-    a driver can stream out of RunInfo.log: the estimate starts at ~|V|
-    and decays to the true component count. rsd 2% ≈ 1.5 KB of sketch
-    per partition, constant in |V|."""
-
+def components_spec() -> PregelSpec:
     def step(links, state, frontier, aggs):
         return min_relax(links, state, frontier, "comp", F.col("comp"))
 
-    metrics = {"active": F.sum(F.col("changed").cast("long"))}
-    if estimate_components:
-        metrics["n_components_est"] = F.approx_count_distinct("comp", rsd=0.02)
     return PregelSpec(
         algo="components",
         state_cols=("comp",),
         init_state=lambda verts: verts.select("id", F.col("id").alias("comp")),
         prepare_links=symmetrize,
         step=step,
-        metrics=metrics,
+        metrics={"active": F.sum(F.col("changed").cast("long"))},
         halt=lambda a: int(a.get("active") or 0) == 0,
         frontier_filter="changed",
     )
@@ -87,18 +75,11 @@ def connected_components(
     graph: Graph,
     max_supersteps: int = 200,
     checkpointer=None,
-    estimate_components: bool = False,
 ) -> tuple[DataFrame, RunInfo]:
-    """Returns (state(id, comp), RunInfo). comp = min vertex id reachable.
-
-    estimate_components: record a per-superstep HyperLogLog estimate of
-    the remaining distinct labels in RunInfo.log[i].aggregates
-    ["n_components_est"] — the final entry approximates the component
-    count without a separate distinct() job (see components_spec).
-    """
+    """Returns (state(id, comp), RunInfo). comp = min vertex id reachable."""
     return pregel_run(
         graph,
-        components_spec(estimate_components=estimate_components),
+        components_spec(),
         max_supersteps=max_supersteps,
         checkpointer=checkpointer,
     )

@@ -24,7 +24,7 @@ the symmetrized edge table keyed on src — reusing the graph's hash
 partitioning — followed by a map-side-combinable min(struct) per walk.
 Cost per step is O(Σ deg(v_t)) message rows, the same gather volume as
 one Pregel superstep restricted to the frontier. Lineage is cut with
-a localCheckpoint every `checkpoint_every` steps so walk_length=80
+a localCheckpoint every `CHECKPOINT_EVERY` steps so walk_length=80
 (the node2vec default) doesn't accumulate an 80-join plan.
 """
 
@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from linkgraph.graph import Graph, symmetrize
 from linkgraph.pipeline.dedup import hash64
 
+CHECKPOINT_EVERY = 10
+
 
 def random_walks(
     graph: Graph,
@@ -44,7 +46,6 @@ def random_walks(
     seed: int = 0,
     starts: DataFrame | None = None,
     hash_mode: str = "xxhash64",
-    checkpoint_every: int = 10,
 ) -> DataFrame:
     """Returns (walk, step, vertex): `num_walks` deterministic walks of
     up to `walk_length` steps from every vertex in `starts` (default:
@@ -85,7 +86,7 @@ def random_walks(
             .agg(F.min(F.struct("h", "dst")).alias("m"))
             .select("walk", F.col("m.dst").alias("v"))
         )
-        if t % checkpoint_every == 0 and t < walk_length:
+        if t % CHECKPOINT_EVERY == 0 and t < walk_length:
             cur = cur.localCheckpoint(eager=False)
         out.append(
             cur.select("walk", F.lit(t).alias("step"), F.col("v").alias("vertex"))

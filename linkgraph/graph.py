@@ -91,16 +91,15 @@ def out_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def assign_dense_ids(
-    names: DataFrame, col: str = "repo", partitions: int | None = None
-) -> DataFrame:
+def assign_dense_ids(names: DataFrame, col: str = "repo") -> DataFrame:
     """A9: stable dense long ids == row_number over globally sorted
     names, computed WITHOUT a single-partition global sort.
 
     Two-pass range-partitioned scheme: (1) distinct names are
-    range-partitioned P ways on <col> (a distributed sort split into P
-    contiguous chunks) and pinned with an eager localCheckpoint so the
-    two downstream jobs see identical partition boundaries; (2)
+    range-partitioned P = spark.sql.shuffle.partitions ways on <col>
+    (a distributed sort split into P contiguous chunks) and pinned
+    with an eager localCheckpoint so the two downstream jobs see
+    identical partition boundaries; (2)
     per-partition counts (P scalars) reach the driver and become a
     cumulative-offset literal map; (3) id = offset[pid] + local rank,
     where the rank window partitions by the stored pid — its exchange
@@ -112,8 +111,7 @@ def assign_dense_ids(
     (SURVEY §A.5) — unlike monotonically_increasing_id. The plan
     contains no single-partition Exchange (asserted in test_plans).
     """
-    spark = names.sparkSession
-    p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = int(names.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = (
         names.select(col)
         .distinct()
@@ -174,11 +172,10 @@ class Graph:
 
     @staticmethod
     def prepare(
-        raw_edges: DataFrame,
-        partitions: int | None = None,
-        weight_cols: list[str] | None = None,
+        raw_edges: DataFrame, weight_cols: list[str] | None = None
     ) -> "Graph":
-        """Canonicalize + partition + persist the edge table.
+        """Canonicalize + partition + persist the edge table, P =
+        spark.sql.shuffle.partitions ways on src.
 
         weight_cols: named extra edge columns (weights etc.) to carry
         THROUGH canonicalization — without it, canonicalize projects
@@ -188,8 +185,7 @@ class Graph:
         (F.min over a struct), so the surviving row does not depend on
         the input order.
         """
-        spark = raw_edges.sparkSession
-        p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        p = int(raw_edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         # r6 (guide §2.4): canonicalize with ONE exchange instead of
         # two. Repartitioning on src FIRST lets the (src,dst) dedup
         # aggregate run in place (hash(src) already clusters equal

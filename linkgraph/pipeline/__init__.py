@@ -10,7 +10,6 @@ batched kernels where Spark lacks a primitive.
 """
 
 from linkgraph.pipeline.dedup import (
-    exact_duplicates,
     dedup_exact,
     shingles,
     minhash_signatures,
@@ -22,7 +21,7 @@ from linkgraph.pipeline.dedup import (
     simhash_bits,
 )
 from linkgraph.pipeline.decontam import contamination_report, decontaminate
-from linkgraph.pipeline.similarity import cosine_topk, ivf_build, ivf_topk
+from linkgraph.pipeline.similarity import cosine_topk, ivf_build
 from linkgraph.pipeline.textstats import (
     token_count_col,
     subword_token_count_col,
@@ -41,7 +40,6 @@ __all__ = [
     "chunk_documents",
     "sample_hash",
     "sample_stratified",
-    "exact_duplicates",
     "dedup_exact",
     "shingles",
     "minhash_signatures",
@@ -55,7 +53,6 @@ __all__ = [
     "decontaminate",
     "cosine_topk",
     "ivf_build",
-    "ivf_topk",
     "token_count_col",
     "subword_token_count_col",
     "text_stats",

@@ -1,9 +1,9 @@
 """Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash.
 
 Scale design:
-- exact: one hash-aggregate on sha256(text) — map-side partial count
-  absorbs duplicate-heavy partitions; `dedup_keep_first` uses min_by
-  (no window, no sort).
+- exact: `dedup_exact` keeps the min id per sha256(text) — one
+  hash-aggregate (map-side partial min absorbs duplicate-heavy
+  partitions) and a semi-join, no window, no sort.
 - MinHash: signatures are computed WITHOUT a per-hash-function shuffle:
   each shingle row carries an array of H hashes
   (`transform(sequence(0,H-1), i -> xxhash64(shingle, i))`), and one
@@ -11,11 +11,12 @@ Scale design:
   total, H-independent.
 - LSH: band signature = xxhash64 over a signature slice; candidate
   generation is a self-join on (band, band_hash) — only docs sharing a
-  band bucket ever meet, which is the whole point at 10^12 docs.
+  band bucket ever meet, which is the whole point at 10^12 docs;
+  oversized buckets are dropped with a warning.
 - n-gram Jaccard: exact verification for candidate pairs (explode
   distinct shingles, count intersection vs union).
-- SimHash: 64 weighted-bit sums per doc in a single aggregate pass
-  (array of 64 sum() columns), no Python.
+- SimHash: `simhash_bits`, 64 weighted-bit sums per doc in a single
+  aggregate pass (array of 64 sum() columns), no Python.
 - closure (r4): `dedup_assignments`/`dedup_near` — verified pairs →
   Pregel connected components → min-id canonical per cluster → the
   deduplicated corpus. The component fixpoint runs on the cap-bounded
@@ -50,15 +51,6 @@ def hash64(col, seed: int | None = None, mode: str = "xxhash64"):
         )
         return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
     raise ValueError(f"unknown hash mode {mode!r}")
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical texts: (content_sha256, n_docs) with n>1."""
-    return (
-        df.groupBy(F.sha2(F.col(text_col), 256).alias("content_sha256"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -137,10 +129,7 @@ def minhash_signatures(
 
 
 def lsh_band_rows(
-    signatures: DataFrame,
-    bands: int = 4,
-    hash_mode: str = "xxhash64",
-    num_hashes: int | None = None,
+    signatures: DataFrame, bands: int, hash_mode: str, num_hashes: int
 ) -> DataFrame:
     """(id, band, bh) — one LSH bucket row per (doc, band).
 
@@ -148,9 +137,9 @@ def lsh_band_rows(
     the signature (hence only on the text), so a doc's bucket
     membership never changes. lsh_candidate_pairs self-joins these
     rows on (band, bh)."""
-    if num_hashes is None or int(num_hashes) <= 0:
-        raise ValueError(f"num_hashes must be positive, got {num_hashes}")
     sig_len = int(num_hashes)
+    if sig_len <= 0:
+        raise ValueError(f"num_hashes must be positive, got {num_hashes}")
     if bands <= 0 or bands > sig_len or sig_len % bands != 0:
         raise ValueError(
             f"bands={bands} must divide the signature length {sig_len} "
@@ -194,17 +183,15 @@ def lsh_band_rows(
     )
 
 
-def drop_oversized_buckets(
-    banded: DataFrame, key: str, max_bucket_size: int, caller: str
-) -> DataFrame:
-    """Drop the rows of (band, key) buckets over max_bucket_size from a
+def drop_oversized_buckets(banded: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Drop the rows of (band, bh) buckets over max_bucket_size from a
     materialized banded table, warning the dropped buckets and rows (no
-    silent caps)."""
+    silent caps) at the caller of lsh_candidate_pairs."""
     # no persist: banded is already materialized, so the anti-join's
     # recompute of `big` is one cheap aggregate (a persist here would
     # leak a cached block per call)
     big = (
-        banded.groupBy("band", key)
+        banded.groupBy("band", "bh")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > max_bucket_size)
     )
@@ -213,40 +200,14 @@ def drop_oversized_buckets(
     ).first()
     if dropped["buckets"]:
         warnings.warn(
-            f"{caller}: dropped {dropped['buckets']} bucket(s) "
+            f"lsh_candidate_pairs: dropped {dropped['buckets']} bucket(s) "
             f"over max_bucket_size={max_bucket_size} "
             f"({dropped['rows']} banded rows) from candidate generation",
-            stacklevel=4,
+            stacklevel=3,
         )
     # oversized buckets are few by construction — broadcast anti-join
     return banded.join(
-        F.broadcast(big.select("band", key)), ["band", key], "left_anti"
-    )
-
-
-def lsh_bucket_pairs(
-    banded: DataFrame, key: str, max_bucket_size: int | None, caller: str
-) -> DataFrame:
-    """Distinct candidate pairs (id_a, id_b), id_a < id_b, of the
-    banded rows (id, band, key) that share a (band, key) bucket — the
-    tail of both MinHash-LSH and RP-LSH candidate generation.
-
-    Materializes the banded table ONCE: the pair self-join reads it
-    twice (three times with the cap's bucket-size count), and each
-    read would otherwise replay the whole signature pipeline upstream —
-    the expensive part. |docs|×bands rows of three fixed-width columns
-    is tiny next to that recompute. A max_bucket_size drops the
-    oversized buckets first (drop_oversized_buckets)."""
-    banded = banded.localCheckpoint()
-    if max_bucket_size is not None:
-        banded = drop_oversized_buckets(banded, key, max_bucket_size, caller)
-    a = banded.select(F.col("id").alias("id_a"), "band", key)
-    b = banded.select(F.col("id").alias("id_b"), "band", key)
-    return (
-        a.join(b, ["band", key])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        F.broadcast(big.select("band", "bh")), ["band", "bh"], "left_anti"
     )
 
 
@@ -255,36 +216,43 @@ def lsh_candidate_pairs(
     bands: int = 4,
     hash_mode: str = "xxhash64",
     max_bucket_size: int | None = None,
-    num_hashes: int | None = None,
+    *,
+    num_hashes: int,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band.
 
     Band hash = hash64 of the band's signature slice. The self-join is
     keyed on (band, band_hash) — docs never compare across buckets.
+    num_hashes is the signature length (every caller knows it from
+    minhash_signatures; a mismatch fails the job, see lsh_band_rows).
 
-    num_hashes is the signature length. Pass it (every caller knows it
-    from minhash_signatures) — probing it from the data costs one full
-    execution of the shingle→hash→min pipeline BEFORE the banded
-    table's localCheckpoint (lsh_bucket_pairs) materializes it. The
-    probe fallback exists only for signatures of unknown provenance.
+    The banded table is materialized ONCE: the pair self-join reads it
+    twice (three times with the cap's bucket-size count), and each read
+    would otherwise replay the whole shingle→hash→min pipeline upstream
+    — the expensive part. |docs|×bands rows of three fixed-width
+    columns is tiny next to that recompute.
 
     max_bucket_size bounds the m² blowup of a bucket of m
     near-identical docs (guaranteed on dup-heavy crawl data): buckets
     larger than the cap are dropped from candidate generation, with
-    the dropped mass logged (no silent caps). Run `dedup_exact` FIRST
+    the dropped mass warned (no silent caps). Run `dedup_exact` FIRST
     so byte-identical duplicates never reach LSH — then an oversized
     bucket means heavy boilerplate, which the cap turns from a
     scale-killer into a logged skip.
     """
-    if num_hashes is None:
-        sig_len_row = signatures.select(F.size("sig").alias("n")).first()
-        if sig_len_row is None:
-            return signatures.sparkSession.createDataFrame([], "id_a long, id_b long")
-        num_hashes = int(sig_len_row["n"])
     banded = lsh_band_rows(
         signatures, bands=bands, hash_mode=hash_mode, num_hashes=num_hashes
+    ).localCheckpoint()
+    if max_bucket_size is not None:
+        banded = drop_oversized_buckets(banded, max_bucket_size)
+    a = banded.select(F.col("id").alias("id_a"), "band", "bh")
+    b = banded.select(F.col("id").alias("id_b"), "band", "bh")
+    return (
+        a.join(b, ["band", "bh"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
     )
-    return lsh_bucket_pairs(banded, "bh", max_bucket_size, "lsh_candidate_pairs")
 
 
 def ngram_jaccard_pairs(
@@ -476,8 +444,8 @@ def simhash_bits(
     tokens, computed as nbits sum-aggregates in one pass (no Python).
 
     bit b of token-hash votes +1/-1; the sign of the summed vote is the
-    output bit. Near-dup distance = hamming(simhash_a, simhash_b) via
-    `zip_with` + filter.
+    output bit. Near-dup distance is the Hamming distance of two bit
+    arrays.
     """
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -503,11 +471,3 @@ def simhash_bits(
         ).alias("simhash_bits"),
     )
 
-
-def hamming(a, b):
-    """Column expr: hamming distance between two bit arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.abs(x - y)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )

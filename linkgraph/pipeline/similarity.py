@@ -5,8 +5,8 @@
   expression — no Python, whole-stage codegen applies. Top-k is
   `orderBy(desc).limit(k)` which Spark plans as TakeOrderedAndProject
   (per-partition heap + driver merge, no global sort).
-- `ivf_build` / `ivf_topk` — the scale path: IVF-style inverted file.
-  Centroids are a deterministic hash-spread sample refined by a few
+- `ivf_build` / `ivf_write` / `ivf_topk_stored` — the scale path:
+  IVF-style inverted file. Centroids are a deterministic hash-spread sample refined by a few
   Lloyd iterations computed AS DATAFRAMES (groupBy avg per dimension —
   distributed, no driver math beyond collecting C centroid rows).
   Every vector is assigned to its nearest centroid (bucket) by a
@@ -14,10 +14,12 @@
   broadcast and each batch does ONE numpy matmul + argmax — no
   per-centroid expression tree (a C-wide literal array is
   Catalyst-hostile at the C=4k–65k a 10^11-vector index needs) and no
-  shuffle. A query probes only `nprobe` nearest buckets; with
-  `ivf_write`/`ivf_topk_stored` (the default serving path) the probe
-  is a partition-pruned scan reading nprobe/C of the data. Recall is
+  shuffle. `ivf_write` stores the index partitioned by bucket, and
+  `ivf_topk_stored` probes only the `nprobe` nearest buckets as a
+  partition-pruned scan reading nprobe/C of the data. Recall is
   tested against the brute-force baseline.
+- `rp_lsh_signatures` — random-hyperplane LSH signatures of the
+  vectors, integer-exact across engines and partitionings.
 
 Embeddings are cast to double before any arithmetic: float32 dot
 products accumulate error and the DuckDB oracle computes in float64.
@@ -27,8 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from linkgraph.pipeline.dedup import lsh_bucket_pairs
 
 
 def _as_double(col):
@@ -128,8 +128,9 @@ def ivf_build(
     return assigned, cents
 
 
-def assign_vectors(cdf: DataFrame, centroids) -> DataFrame:
-    """Nearest-centroid assignment: (id, v) → (id, v, bucket).
+def _assign_vectors(cdf: DataFrame, centroids):
+    """Nearest-centroid assignment: (id, v) → ((id, v, bucket), the
+    centroid broadcast).
 
     The whole centroid table rides ONE executor broadcast as a C×D
     float64 matrix (65k centroids × 1k dims ≈ 0.5 GB — executor-memory
@@ -142,16 +143,9 @@ def assign_vectors(cdf: DataFrame, centroids) -> DataFrame:
     array would build.
 
     The broadcast lives as long as the returned DataFrame may be
-    re-evaluated; long-lived sessions doing many builds rely on
-    ivf_build destroying its intermediate Lloyd broadcasts (it does).
+    re-evaluated; the handle lets ivf_build destroy each Lloyd round's
+    broadcast once that round's assignment is fully consumed.
     """
-    df, _ = _assign_vectors(cdf, centroids)
-    return df
-
-
-def _assign_vectors(cdf: DataFrame, centroids):
-    """assign_vectors + a handle on the centroid broadcast so callers
-    that fully consume the result can destroy it."""
     import numpy as np
 
     cmat = np.asarray([c for _, c in centroids], dtype=np.float64)
@@ -191,34 +185,6 @@ def probe_buckets(centroids, query_vec: list[float], nprobe: int) -> list[int]:
         return sum(a * b for a, b in zip(q, c)) / (n * qn) if n > 0 else -1.0
 
     return [i for i, _ in sorted(centroids, key=lambda ic: -cos(ic[1]))[:nprobe]]
-
-
-def ivf_topk(
-    assigned: DataFrame,
-    centroids,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """ANN top-k probing the nprobe centroids nearest to the query.
-
-    With an in-memory `assigned`, the bucket filter still scans every
-    row — use ivf_write + ivf_topk_stored for the storage-pruned path
-    that makes nprobe/C a REAL IO reduction at scale.
-    """
-    import math
-
-    q = [float(x) for x in query_vec]
-    qn = math.sqrt(sum(x * x for x in q))
-    buckets = probe_buckets(centroids, q, nprobe)
-    qcol = F.lit(q).cast("array<double>")
-    cand = assigned.filter(F.col("bucket").isin(buckets))
-    return (
-        cand.withColumn("cosine", _dot(F.col("v"), qcol) / (_norm(F.col("v")) * F.lit(qn)))
-        .select(F.col("id").alias("vec_id"), "cosine")
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
 
 
 def ivf_write(assigned: DataFrame, path: str) -> None:
@@ -329,38 +295,3 @@ def rp_lsh_signatures(
         kernel, f"{id_col} long, sig long"
     )
 
-
-def rp_lsh_candidates(
-    df: DataFrame,
-    nbits: int = 16,
-    bands: int = 4,
-    quant: int = 1000,
-    max_bucket_size: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Candidate near-duplicate pairs: vectors sharing any BAND of
-    their RP-LSH signature (banding trades precision for recall
-    exactly like MinHash-LSH). Returns distinct (id_a, id_b), id_a <
-    id_b. `max_bucket_size` caps the per-bucket pair blowup the same
-    way the text-LSH path does: oversized buckets are dropped (they
-    are near-constant embedding regions a verify stage should handle
-    by other means), with the dropped mass warned (no silent caps)."""
-    if nbits % bands != 0:
-        raise ValueError(f"rp_lsh_candidates: bands={bands} must divide nbits={nbits}")
-    width = nbits // bands
-    mask = (1 << width) - 1
-    sig = rp_lsh_signatures(df, nbits=nbits, quant=quant, id_col=id_col, vec_col=vec_col)
-    banded = sig.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright("sig", i * width).bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    return lsh_bucket_pairs(banded, "key", max_bucket_size, "rp_lsh_candidates")

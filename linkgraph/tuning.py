@@ -52,12 +52,7 @@ ROWS_PER_PARTITION = 2_500_000
 MAX_PARTITIONS = 200_000
 
 
-def scale_partitions(
-    spark,
-    rows: int,
-    rows_per_partition: int = ROWS_PER_PARTITION,
-    floor: int | None = None,
-) -> int:
+def scale_partitions(spark, rows: int) -> int:
     """Partition count derived from data size, not machine size.
 
     Two regimes (all three anchor points measured,
@@ -76,8 +71,8 @@ def scale_partitions(
       box (min step 8.50 s, 18.8M peak edge-msgs/s).
     """
     cores = spark.sparkContext.defaultParallelism
-    lo = floor if floor is not None else max(2, cores // 2)
-    derived = math.ceil(max(int(rows), 1) / rows_per_partition)
+    lo = max(2, cores // 2)
+    derived = math.ceil(max(int(rows), 1) / ROWS_PER_PARTITION)
     if derived <= 2:
         p = lo
     else:
@@ -120,7 +115,7 @@ def ensure_min_partitions(df):
 
 
 @contextmanager
-def superstep_conf(spark, partitions: int | None = None):
+def superstep_conf(spark, partitions: int):
     """Run a superstep loop under fixed-plan execution settings.
 
     - adaptive execution OFF (fixed recurring plan; AQE re-planning is
@@ -140,9 +135,10 @@ def superstep_conf(spark, partitions: int | None = None):
     from concurrent driver threads on one session was never supported.
     """
     conf = spark.conf
-    changes = {"spark.sql.adaptive.enabled": "false"}
-    if partitions is not None:
-        changes["spark.sql.shuffle.partitions"] = str(int(partitions))
+    changes = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(int(partitions)),
+    }
     # both keys have defaults, so get() always resolves (even after unset)
     saved = {k: conf.get(k) for k in changes}
     for k, v in changes.items():

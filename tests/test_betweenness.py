@@ -104,3 +104,30 @@ def test_betweenness_disconnected_and_star(spark):
     expected = nx.betweenness_centrality(_nx(edges), normalized=False)
     for v, b in expected.items():
         assert math.isclose(rows[v], 2.0 * b, rel_tol=1e-12, abs_tol=1e-12)
+
+
+def test_betweenness_past_bigint_path_counts(spark):
+    """A source, then 17 layers of 16 vertices with consecutive layers
+    complete bipartite: a layer-k vertex has 16^(k-1) shortest paths
+    from the source, 16^16 = 2^64 in the last layer — past what a
+    BIGINT sum holds. Every σ is a power of two, so the double σ stays
+    exact, and from that one source each layer-k vertex has betweenness
+    exactly 17 - k (it carries 1/16 of each of the 16 dependencies of
+    the layer above)."""
+    width, depth = 16, 17
+
+    def layer(k):
+        return [0] if k == 0 else [k * width + i for i in range(width)]
+
+    edges = [
+        (u, v) for k in range(depth) for u in layer(k) for v in layer(k + 1)
+    ]
+    g = make_graph(spark, edges)
+    out, info = betweenness(
+        g, sources=spark.createDataFrame([(0,)], "s long"), max_hops=depth + 1
+    )
+    assert info.converged
+    rows = {r["id"]: r["betweenness"] for r in out.collect()}
+    assert rows[0] == 0.0
+    for k in range(1, depth + 1):
+        assert {rows[v] for v in layer(k)} == {float(depth - k)}, f"layer {k}"

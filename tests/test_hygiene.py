@@ -260,3 +260,73 @@ def test_every_engine_option_has_a_caller():
         if set(names) - got[entry]
     }
     assert not unused, f"engine options no caller sets: {unused}"
+
+
+# Public names that only tests reach, each kept for the reason given.
+TEST_ONLY = {
+    "linkgraph.fixtures.pagerank_numpy": "the dense NumPy PageRank the golden and property tests compare against",
+    "linkgraph.fixtures.triangles_python": "the pure-Python triangle count the golden tests compare against",
+    "linkgraph.fixtures.g3_star_edges": "the star-graph fixture of the components and resume tests",
+    "linkgraph.algorithms.triangles.triangles_sql_plan": "the SQL-form reference plan of a golden triangle test",
+    "linkgraph.csr.csr_stats": "the layout statistics the CSR scatter tests check",
+    "linkgraph.corpus.verify_corpus_invariant": "the sha256 corpus check the corpus tests run",
+    "linkgraph.corpus.unresolved_imports": "the unresolved-import report the corpus tests check",
+    "linkgraph.pipeline.similarity.cosine_topk": "the brute-force baseline the IVF recall tests compare against",
+    "linkgraph.corpus.extract_imports_arrow": "the Arrow extractor the corpus tests pin to the regex one; ROADMAP item 5 decides its fate",
+}
+
+
+def _referenced(tree, skip=None) -> set[str]:
+    """Every name `tree` uses as a name, an attribute or an import,
+    outside the subtree `skip`; strings and docstrings do not count."""
+    out: set[str] = set()
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.split(".")[-1])
+        todo.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def _uncalled_public() -> list[str]:
+    """The public module-level functions and classes of `linkgraph/`
+    that no contract file, no other non-`__init__` linkgraph module and
+    no code of their own module outside their body refers to."""
+    trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in SOURCES}
+    outside = set().union(
+        *(_referenced(ast.parse(p.read_text(), filename=str(p))) for p in CONTRACT)
+    )
+    by_module = {
+        p: _referenced(t) for p, t in trees.items() if p.name != "__init__.py"
+    }
+    bad = []
+    for path, tree in trees.items():
+        others = outside.union(*(r for p, r in by_module.items() if p != path))
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if node.name.startswith("_") or node.name in others:
+                continue
+            if node.name not in _referenced(tree, skip=node):
+                bad.append(f"{_module_name(path)}.{node.name}")
+    return sorted(bad)
+
+
+def test_every_public_function_has_a_caller():
+    """A public function or class that only tests call is a second
+    surface kept green for nothing: it is reached from a contract file,
+    from another linkgraph module or from its own module, or it is
+    deleted. The few that only tests reach are listed in TEST_ONLY with
+    the reason each is kept."""
+    uncalled = _uncalled_public()
+    stale = sorted(set(TEST_ONLY) - set(uncalled))
+    assert not stale, f"TEST_ONLY entries that code now reaches or that are gone: {stale}"
+    extra = sorted(set(uncalled) - set(TEST_ONLY))
+    assert not extra, f"public names only tests reach: {extra}"

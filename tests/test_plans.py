@@ -114,7 +114,12 @@ def test_dense_ids_have_no_single_partition_exchange(spark):
     names = spark.range(0, 5000).select(
         F.concat(F.lit("repo-"), F.col("id").cast("string")).alias("repo")
     )
-    ids = assign_dense_ids(names, "repo", partitions=8)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        ids = assign_dense_ids(names, "repo")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     plan = plan_of(ids)
     assert "Exchange SinglePartition" not in plan, plan
     assert ids.count() == 5000
@@ -137,12 +142,17 @@ def test_dense_ids_equal_global_window_form(spark):
         .select((F.row_number().over(w) - 1).cast("long").alias("id"), "repo")
         .collect()
     }
-    for p in (1, 4, 16):
-        got = {
-            (r["id"], r["repo"])
-            for r in assign_dense_ids(names, "repo", partitions=p).collect()
-        }
-        assert got == want, f"partitions={p}"
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for p in (1, 4, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            got = {
+                (r["id"], r["repo"])
+                for r in assign_dense_ids(names, "repo").collect()
+            }
+            assert got == want, f"partitions={p}"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def node_names(node):
@@ -216,27 +226,6 @@ def test_tfidf_scan_prunes_and_window_is_per_doc(spark, tmp_path_factory):
     for frag in plan.split("Sort [")[1:]:
         head = frag[:300].split("], ", 1)
         assert len(head) == 2 and not head[1].startswith("true")
-
-
-def test_rp_lsh_candidates_no_cartesian_and_one_kernel_pass(spark):
-    """The banded candidate join must be an equi-join on (band, key) —
-    no cartesian/BNL — and the signature kernel (mapInPandas) must NOT
-    appear in the pair-join plan at all: the banded table is
-    localCheckpoint'ed once, so neither join side re-runs the matmul
-    kernel over the source."""
-    import random
-
-    from linkgraph.pipeline.similarity import rp_lsh_candidates
-
-    rng = random.Random(1)
-    df = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    q = rp_lsh_candidates(df, nbits=16, bands=4)
-    plan = plan_of(q)
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-    assert plan.count("MapInPandas") == 0  # both sides scan the checkpointed table
 
 
 def test_linkpred_wedge_join_no_cartesian_mapside_agg(spark, graph_builder):

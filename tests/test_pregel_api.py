@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from linkgraph.algorithms import (
     betweenness,
-    connected_components,
     ktruss,
     landmark_distances,
     scc,
@@ -268,23 +267,6 @@ def test_step_walls_are_per_step(spark, graph_builder, algo):
     assert len(info.log) >= 4
     assert sum(s.wall_s for s in info.log) <= wall
     assert info.wall_s == pytest.approx(sum(s.wall_s for s in info.log))
-
-
-def test_components_estimate_aggregator(spark, graph_builder):
-    """B7 demo on a non-toy metric: approx_count_distinct(comp) rides
-    the barrier as a user aggregator — the per-superstep estimate decays
-    from ~|V| to the true component count, with zero extra actions."""
-    # 8 disjoint chains of 6 vertices -> exactly 8 components
-    edges = [
-        (c * 10 + i, c * 10 + i + 1) for c in range(8) for i in range(5)
-    ]
-    g = graph_builder(edges)
-    state, info = connected_components(g, estimate_components=True)
-    series = [s.aggregates["n_components_est"] for s in info.log]
-    # HLL at this cardinality is effectively exact; allow slack anyway
-    assert abs(series[-1] - 8) <= 1
-    assert series[0] >= series[-1]  # estimate decays as labels merge
-    assert state.select("comp").distinct().count() == 8
 
 
 def test_graph_prepare_weight_cols(spark):

@@ -107,6 +107,38 @@ def test_pagerank_resume_equals_uninterrupted(spark, catalog, graph_builder):
     assert steps[:3] == [5, 10, 12]
 
 
+def test_checkpoint_time_gate_skips_due_snapshots(spark, catalog, graph_builder):
+    """min_interval_s holds back a due checkpoint while the last one is
+    fresh: with every=1 and an hour-long gate, a 6-superstep run writes
+    superstep 1 and the final snapshot of superstep 6 only, and a resume
+    from that final snapshot returns the uninterrupted ranks without
+    running a superstep."""
+    import networkx as nx
+
+    G = nx.karate_club_graph()
+    edges = [(u, v) for u, v in G.edges()] + [(v, u) for u, v in G.edges()]
+    g = graph_builder(edges)
+    full_state, _ = pagerank(g, tol=1e-12, max_supersteps=6)
+    full = ranks_of(full_state, 34)
+
+    ck = CheckpointManager(catalog, run_id="gate1", every=1, min_interval_s=3600)
+    _, info_a = pagerank(g, tol=1e-12, max_supersteps=6, checkpointer=ck)
+    assert info_a.supersteps == 6 and not info_a.converged
+    snaps = {
+        int(s.meta["superstep"])
+        for s in catalog.snapshots("state_pagerank")
+        if s.meta.get("run_id") == "gate1"
+    }
+    assert snaps == {1, 6}
+    lineage = {r["superstep"] for r in ck.lineage().collect()}
+    assert lineage == {1, 6}
+
+    ck2 = CheckpointManager(catalog, run_id="gate1", every=1, min_interval_s=3600)
+    state_b, info_b = pagerank(g, tol=1e-12, max_supersteps=6, checkpointer=ck2)
+    assert info_b.supersteps == 6 and info_b.log == []
+    assert np.allclose(ranks_of(state_b, 34), full, atol=1e-12)
+
+
 def test_components_resume(spark, catalog, graph_builder):
     g = graph_builder(FX.g3_star_edges(50))
     ck = CheckpointManager(catalog, run_id="r2", every=1)

@@ -53,9 +53,6 @@ class TestScalePartitions:
     def test_capped(self, spark):
         assert scale_partitions(spark, 10**15) == MAX_PARTITIONS
 
-    def test_explicit_floor_wins(self, spark):
-        assert scale_partitions(spark, 1, floor=7) == 7
-
 
 class TestSuperstepConf:
     def test_sets_and_restores(self, spark):
@@ -234,60 +231,33 @@ class TestMetricBarrier:
         assert via_obs["max_rank"] == 999.0
         assert ck.count() == 10_000
 
-    def test_unsupported_metric_falls_back(self, spark, monkeypatch):
+    def test_distinct_metric_rejected_before_any_job(self, spark):
+        # observed metrics reject DISTINCT aggregates at analysis: the
+        # barrier raises before it runs a single job
+        from pyspark.errors import AnalysisException
+
         from linkgraph import pregel
 
-        monkeypatch.setattr(pregel, "_observe_fallback_warned", False)
         df = spark.range(0, 100).select(
             F.col("id"), (F.col("id") % 5).alias("k")
         )
-        # DISTINCT aggregates are rejected by CollectMetrics at analysis
-        # time — the barrier must fall back to agg().first(), say so,
-        # and still return the right value
-        with pytest.warns(UserWarning, match="DISTINCT"):
-            _, out = pregel.Fixpoint("t", 2).barrier(
-                df, {"nk": F.countDistinct("k")}
-            )
-        assert out["nk"] == 5
+        sc = spark.sparkContext
+        sc.setJobGroup("barrier_distinct", "barrier_distinct")
+        try:
+            with pytest.raises(AnalysisException) as err:
+                pregel.Fixpoint("t", 2).barrier(
+                    df, {"nk": F.countDistinct("k")}
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert err.value.getCondition().startswith("INVALID_OBSERVED_METRICS")
+        assert sc.statusTracker().getJobIdsForGroup("barrier_distinct") == []
 
-    def test_pregel_run_distinct_metric_falls_back(
-        self, spark, graph_builder, monkeypatch
-    ):
-        # end-to-end: components over G2 with an extra DISTINCT metric
-        # (fallback barrier) gives the same labels, superstep count and
-        # active series as the observed-metric barrier, and warns once
-        import dataclasses
-        import warnings
-
-        from linkgraph import pregel
-        from linkgraph.algorithms.components import components_spec
-
-        g = graph_builder(FX.G2_EDGES)
-        spec = components_spec()
-        s1, i1 = pregel.pregel_run(g, spec, max_supersteps=50)
-        with_distinct = dataclasses.replace(
-            spec, metrics={**spec.metrics, "n_comp": F.countDistinct("comp")}
-        )
-        monkeypatch.setattr(pregel, "_observe_fallback_warned", False)
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            s2, i2 = pregel.pregel_run(g, with_distinct, max_supersteps=50)
-        assert i2.supersteps >= 2  # the fallback ran on several barriers
-        assert len([w for w in caught if "observed metrics" in str(w.message)]) == 1
-        assert {tuple(r) for r in s1.collect()} == {tuple(r) for r in s2.collect()}
-        assert i1.supersteps == i2.supersteps
-        assert [s.active for s in i1.log] == [s.active for s in i2.log]
-        assert i2.log[-1].aggregates["n_comp"] == len(
-            {r["comp"] for r in s2.collect()}
-        )
-
-    def test_job_failure_propagates_without_rerun(self, spark, monkeypatch):
-        # a real job failure is not an observed-metric rejection: the
-        # barrier raises after ONE failed job instead of re-running the
-        # plan through the agg() fallback
+    def test_job_failure_propagates_without_rerun(self, spark):
+        # a real job failure raises after ONE failed job: the barrier
+        # never re-runs the plan
         from linkgraph import pregel
 
-        monkeypatch.setattr(pregel, "_observe_fallback_warned", False)
         df = spark.range(0, 100).select(
             F.col("id"),
             F.when(F.col("id") == 42, F.raise_error(F.lit("boom")))
@@ -303,7 +273,6 @@ class TestMetricBarrier:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup("barrier_fail")
         assert len(jobs) == 1
-        assert not pregel._observe_fallback_warned
 
     def test_empty_metrics_runs_to_max_supersteps(self, spark, graph_builder):
         # no metrics: the barrier is a bare noop write returning {}

@@ -74,13 +74,17 @@ def test_walks_match_replay_random_graph_multiwalk(spark):
     assert got == _replay(edges, 5, num_walks=3, seed=42)
 
 
-def test_walks_xxhash_mode_valid_and_deterministic(spark):
+def test_walks_xxhash_mode_valid_and_deterministic(spark, monkeypatch):
+    from linkgraph.algorithms import walks
+
+    # a lineage cut every 2 steps, so a 4-step walk cuts mid-walk
+    monkeypatch.setattr(walks, "CHECKPOINT_EVERY", 2)
     edges = sorted(
         {tuple(sorted(random.Random(3).sample(range(25), 2))) for _ in range(60)}
     )
     g = make_graph(spark, edges)
     adj = _adj(edges)
-    rows = random_walks(g, walk_length=4, checkpoint_every=2).collect()
+    rows = random_walks(g, walk_length=4).collect()
     by_walk: dict[int, dict[int, int]] = {}
     for r in rows:
         by_walk.setdefault(r["walk"], {})[r["step"]] = r["vertex"]
